@@ -48,6 +48,7 @@ pruning play the snapshot/index role, and Sync is the write itself.
 
 from __future__ import annotations
 
+import functools
 import json
 import uuid
 
@@ -463,8 +464,11 @@ class Database:
         """Segment refs reachable from ANY retained manifest — the set
         snapshot reads (``cube(at_gen=...)``) may still touch."""
         live: set[str] = set()
-        for name in self._manifest_names():
-            m = self.fs.read_json(HadoopFS.join(self.cube_path, name))
+        for g in self._genlog.retained():
+            try:
+                m = self._genlog.read(at_gen=g)
+            except ValueError:
+                continue  # rotated out since the listing
             for refs in m["segments"].values():
                 live.update(refs)
         return live
@@ -537,6 +541,22 @@ class Database:
         see a torn mix of old and new data. GC only deletes segments
         dereferenced by the CURRENT manifest, so pinned reads must stay
         within the retained window (``generations()``)."""
+        return self._read_fold(
+            self._scan_paths(
+                from_epoch, to_epoch, at_gen, prune_pattern, epochs, prune_patterns
+            )
+        )
+
+    def _scan_paths(
+        self,
+        from_epoch: int | None = None,
+        to_epoch: int | None = None,
+        at_gen: int | None = None,
+        prune_pattern: list[str] | None = None,
+        epochs: set[int] | None = None,
+        prune_patterns: "list[list] | None" = None,
+    ) -> list[str]:
+        """The segment paths ``cube`` scans for these arguments."""
         m = self._manifest(at_gen=at_gen)
         # `epochs` (an EXACT set) prunes sparse touch-sets that a [min, max]
         # range cannot: compact/merge_replace rewriting epochs {1, 10000}
@@ -549,28 +569,46 @@ class Database:
             and (from_epoch is None or e >= from_epoch)
             and (to_epoch is None or e <= to_epoch)
         }
-        paths = self._segment_paths(
+        return self._segment_paths(
             m, want, prune_pattern=prune_pattern, prune_any=prune_patterns
         )
-        return self._read_fold(paths)
 
-    def _read_fold(self, paths: "list[str]") -> DataFrame:
+    def _read_fold(self, paths: "list[str]", cluster: "list[str] | None" = None) -> DataFrame:
         """Read segment paths and fold to one row per cube key — the single
-        source of the cast/fold contract shared by ``cube`` and ``changes``
-        (the 'cube(g0) plus changes(g0) equals cube()' invariant depends on
-        both using the identical fold; code-review r12)."""
-        cols = [f.name for f in S.cube_schema(self.max_depth).fields]
+        source of the fold contract shared by ``cube``, ``changes`` and
+        ``fetch`` (the 'cube(g0) plus changes(g0) equals cube()' invariant
+        depends on all of them using the identical fold).
+
+        ``cluster`` hash-partitions the scanned rows on those cube-key
+        columns BEFORE the fold. The fold's grouping keys contain them, so
+        the fold runs on that partitioning with no Exchange of its own,
+        and a downstream groupBy whose keys also contain them reuses it:
+        ``fetch``'s densify groupBy on (epoch, f1..fd) then shares the
+        fold's one Exchange. Filters above still push through the
+        repartition to the scan."""
+        schema = S.cube_schema(self.max_depth)
         if not paths:
-            return self.spark.createDataFrame([], S.cube_schema(self.max_depth))
+            return self.spark.createDataFrame([], schema)
         # PINNED schema: every segment is written by _write_segment from a
         # cube-shaped frame, so the file schema is cube_schema by
         # construction — schema inference would otherwise cost one driver
         # job (a footer read; ~0.1 s locally, a listing+footer pass over
         # the pruned path set at scale) on EVERY cube read (r14, guide §6).
-        df = self.spark.read.schema(S.cube_schema(self.max_depth)).parquet(*paths)
-        df = df.select(*[F.col(c).cast(t.dataType).alias(c) for c, t in zip(cols, S.cube_schema(self.max_depth))])
+        # The scan therefore already yields exactly cube_schema's column
+        # types, and no cast is needed before the fold.
+        df = self.spark.read.schema(schema).parquet(*paths)
+        if cluster:
+            df = df.repartition(*cluster)
+        # groupBy emits its keys then its aggregates: cube_schema's order
         keys = [S.EPOCH, S.BUCKET, *S.field_cols(self.max_depth), S.DEPTH]
-        return df.groupBy(*keys).agg(*fold_aggs(self.params.value_dp)).select(*cols)
+        return df.groupBy(*keys).agg(*self._fold_aggs)
+
+    @functools.cached_property
+    def _fold_aggs(self) -> list:
+        """``fold_aggs`` for this cube, built once per handle: every Column
+        call is a JVM round trip, and the guarded exact fold takes a few
+        dozen of them — tens of ms per read, paid before any job runs."""
+        return fold_aggs(self.params.value_dp)
 
     def create_view(
         self,
@@ -815,11 +853,15 @@ class Database:
         # validate BEFORE manifest pruning touches the pattern: an illegal
         # level must raise compile_pattern's descriptive error, not an
         # opaque TypeError from _preds (code-review r12)
-        compile_pattern(pattern)
+        depth, _ = compile_pattern(pattern)
         res, dur = self.params.resolution, self.params.duration
         e_from, e_to = self._epoch_bounds(from_ts, to_ts)
+        paths = self._scan_paths(e_from, e_to, at_gen=at_gen, prune_pattern=pattern)
+        # densify groups by (epoch, f1..fd): clustering the scan on those
+        # keys lets the fold and the densify share one Exchange (_read_fold)
+        cluster = [S.EPOCH, *S.field_cols(depth)] if densify else None
         return fetch_df(
-            self.cube(e_from, e_to, at_gen=at_gen, prune_pattern=pattern),
+            self._read_fold(paths, cluster=cluster),
             from_ts,
             to_ts,
             pattern,
@@ -1206,7 +1248,7 @@ class Database:
         rebuilt = (
             reduce(DataFrame.unionByName, parts)
             .groupBy(S.EPOCH, S.BUCKET, *fcols, S.DEPTH)
-            .agg(*fold_aggs(self.params.value_dp))
+            .agg(*self._fold_aggs)
         )
         refs, stats = self._write_segment(rebuilt, sort_series=True)
         old = [ref for e in affected for ref in m["segments"].get(e, [])]
@@ -1403,7 +1445,7 @@ def rollup_refresh(src: Database, dst: Database, stream_id: str = "rollup") -> b
     cols = [f.name for f in S.cube_schema(dst.max_depth).fields]
     folded = (
         delta.groupBy(*keys)
-        .agg(*fold_aggs(dp.value_dp))
+        .agg(*dst._fold_aggs)
         .select(*cols)
     )
     # collect_stats=True: a rollup refresh is scheduled MAINTENANCE, not a

@@ -65,17 +65,24 @@ class HadoopFS:
 
     def list_files(self, path: str, suffix: str | None = None) -> list[str]:
         """Non-directory child names, optionally filtered by suffix."""
+        return sorted(self.list_status(path, suffix))
+
+    def list_status(self, path: str, suffix: str | None = None) -> dict[str, tuple[int, int]]:
+        """Non-directory children as ``{name: (length, modification ms)}``,
+        optionally filtered by suffix; {} if the directory does not exist.
+        The suffix filter runs before the length/mtime lookups, so names
+        it drops cost no further JVM round trips."""
         p = self._p(path)
         if not self._fs.exists(p):
-            return []
-        out = [
-            str(st.getPath().getName())
-            for st in self._fs.listStatus(p)
-            if not st.isDirectory()
-        ]
-        if suffix is not None:
-            out = [f for f in out if f.endswith(suffix)]
-        return sorted(out)
+            return {}
+        out = {}
+        for st in self._fs.listStatus(p):
+            if st.isDirectory():
+                continue
+            name = str(st.getPath().getName())
+            if suffix is None or name.endswith(suffix):
+                out[name] = (int(st.getLen()), int(st.getModificationTime()))
+        return out
 
     # -- mutation ------------------------------------------------------------
     def mkdirs(self, path: str) -> None:

@@ -27,7 +27,11 @@ durability contract on object-store semantics.
 
 from __future__ import annotations
 
+import json
+import threading
 from typing import Any
+
+from py4j.protocol import Py4JJavaError
 
 from kadiyadb_spark.fs import HadoopFS
 
@@ -46,20 +50,54 @@ class GenLog:
     ``prefix`` names the manifest files (the cube's historical spelling is
     ``MANIFEST-``; auxiliary stores use the default) — since late r08 this
     class IS the one commit primitive: ``Database`` delegates its manifest
-    protocol here instead of carrying a second copy."""
+    protocol here instead of carrying a second copy.
+
+    Reads are served from a cache of manifest bodies keyed on
+    ``(name, length, mtime)`` taken from the directory listing every read
+    already does. Generation files are write-once (``commit`` renames onto
+    a fresh name and nothing rewrites one in place), so an unchanged key
+    means unchanged bytes, and a commit by ANY writer shows up as a new
+    name in the next listing. A key the filesystem reports differently
+    between calls only costs a re-read, never a stale body. The cache holds
+    only names the last listing returned, so it is bounded by ``keep``."""
 
     def __init__(self, spark, path: str, keep: int = 3, prefix: str = _PREFIX):
         self.fs = HadoopFS(spark, path)
         self.path = path
         self.keep = keep
         self.prefix = prefix
+        self._cache: dict[tuple[str, int, int], str] = {}
+        self._lock = threading.Lock()
+
+    def _listing(self) -> dict[str, tuple[int, int]]:
+        """Manifest names in ascending generation order ->
+        ``(length, mtime)``."""
+        st = self.fs.list_status(self.path, suffix=".json")
+        return {n: st[n] for n in sorted(st) if n.startswith(self.prefix)}
 
     def _names(self) -> list[str]:
-        return sorted(
-            f
-            for f in self.fs.list_files(self.path, suffix=".json")
-            if f.startswith(self.prefix)
-        )
+        return list(self._listing())
+
+    def _load(self, name: str, listing: dict[str, tuple[int, int]]) -> dict[str, Any]:
+        """A FRESH dict per call (callers such as ``Database.track`` mutate
+        the manifest they read), parsed from the cached body when the
+        listing's key for ``name`` matches."""
+        with self._lock:
+            text = self._cache.get((name, *listing[name]))
+        if text is None:
+            text = self.fs.read_text(HadoopFS.join(self.path, name))
+            self._remember(listing, name, text)
+        return json.loads(text)
+
+    def _remember(self, listing: dict[str, tuple[int, int]], name: str, text: str) -> None:
+        """Cache ``text`` as ``name``'s body under its listed key, dropping
+        every entry the listing no longer reports."""
+        with self._lock:
+            self._cache = {
+                k: v for k, v in self._cache.items() if listing.get(k[0]) == k[1:]
+            }
+            if name in listing:
+                self._cache[(name, *listing[name])] = text
 
     def read(self, at_gen: int | None = None) -> dict[str, Any]:
         """Latest committed manifest, or the RETAINED manifest of a pinned
@@ -70,33 +108,44 @@ class GenLog:
         contract that lets a long scan survive a concurrent compaction's
         generation swap (the store's data-dir GC retains every directory a
         retained manifest references; see ``live_dirs``)."""
-        names = self._names()
+        listing = self._listing()
         if at_gen is None:
-            if not names:
+            if not listing:
                 return {"gen": -1}
             # list-then-read race (code-review r12): a concurrent commit
             # with keep=1 (expire: data deletion collapses retention) can
-            # delete names[-1] between the listing and the read even though
+            # delete the head between the listing and the read even though
             # a valid NEWER head exists — re-list and retry instead of
             # surfacing a spurious FileNotFound. Bounded: each retry only
             # happens when the head ADVANCED, and a vanished head with no
             # replacement re-raises.
             for _ in range(5):
+                head = next(reversed(listing))
                 try:
-                    return self.fs.read_json(HadoopFS.join(self.path, names[-1]))
+                    return self._load(head, listing)
                 except Exception:
-                    newer = self._names()
-                    if not newer or newer[-1] == names[-1]:
+                    newer = self._listing()
+                    if not newer or next(reversed(newer)) == head:
                         raise
-                    names = newer
-            return self.fs.read_json(HadoopFS.join(self.path, names[-1]))
+                    listing = newer
+            return self._load(next(reversed(listing)), listing)
         name = f"{self.prefix}{at_gen:012d}.json"
-        if name not in names:
+        if name not in listing:
             raise ValueError(
                 f"generation {at_gen} not retained in {self.path} "
                 f"(have {self.retained()})"
             )
-        return self.fs.read_json(HadoopFS.join(self.path, name))
+        try:
+            return self._load(name, listing)
+        except Py4JJavaError:
+            # the same race for a pinned read: a manifest that rotated out
+            # after the listing is "not retained", not an IO failure
+            if name in self._listing():
+                raise
+            raise ValueError(
+                f"generation {at_gen} not retained in {self.path} "
+                f"(have {self.retained()})"
+            ) from None
 
     def retained(self) -> list[int]:
         """Generation numbers whose manifests are still on disk (ascending);
@@ -109,8 +158,11 @@ class GenLog:
         Manifests without ``key`` (e.g. segment-list logs) contribute
         nothing."""
         out: set[str] = set()
-        for n in self._names():
-            v = self.fs.read_json(HadoopFS.join(self.path, n)).get(key)
+        for g in self.retained():
+            try:
+                v = self.read(at_gen=g).get(key)
+            except ValueError:
+                continue  # rotated out since the listing
             if v is not None:
                 out.add(v)
         return out
@@ -124,17 +176,27 @@ class GenLog:
 
         ``keep`` overrides the log's retention for THIS commit: data-DELETING
         commits pass 1 so deleted data is not resurrectable through an older
-        snapshot (the cube's expire/merge_replace contract)."""
+        snapshot (the cube's expire/merge_replace contract).
+
+        The written body seeds the read cache under the key the
+        post-commit listing reports, so the writer's next read of its own
+        head costs a listing, not a file read."""
         gen = prev_gen + 1
         m = dict(m)
         m["gen"] = gen
         self.fs.mkdirs(self.path)
         name = f"{self.prefix}{gen:012d}.json"
-        if not self.fs.write_json_atomic(HadoopFS.join(self.path, name), m):
+        text = json.dumps(m)
+        if not self.fs.write_text_atomic(HadoopFS.join(self.path, name), text):
             raise ConcurrentWriteError(
                 f"manifest generation {gen} already exists in {self.path} "
                 "(concurrent writer?)"
             )
-        for old in self._names()[: -(self.keep if keep is None else keep)]:
+        listing = self._listing()
+        names = list(listing)
+        n_keep = self.keep if keep is None else keep
+        for old in names[:-n_keep]:
             self.fs.delete(HadoopFS.join(self.path, old))
+            del listing[old]
+        self._remember(listing, name, text)
         return gen

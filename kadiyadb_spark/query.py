@@ -9,14 +9,17 @@ Reference semantics (SURVEY §2):
 - to < from -> error; from == to -> empty result (fine-print #4)
 - result ordering unspecified (fine-print #8)
 
-Spark shape: predicate-pushed filter on the cube (epoch pruning + bucket
-range + dimension equality reach the parquet scan), then densify by fanning
-each (epoch, series) membership row out to its epoch's slots MAP-SIDE with
-``explode(sequence(...))`` — no bucket-axis table, no broadcast, memory
-bounded by slots-per-epoch regardless of how wide the requested range is
-(a year at 1 s resolution fans out 3600 slots per epoch row, never 31M at
-once). The only wide operations are the ``distinct`` over matched series
-(cardinality #series, not #rows) and the left join back to stored values.
+Spark shape: ONE predicate-pushed filter on the cube (epoch range, the
+bucket image of that range, exact depth and dimension equality/IN reach
+the parquet scan), then ONE aggregation keyed (epoch, series) that gathers
+each series' in-range points into a map and densifies by fanning it out to
+its epoch's slots MAP-SIDE with ``explode(sequence(...))`` — no bucket-axis
+table, no broadcast, no join, memory bounded by slots-per-epoch regardless
+of how wide the requested range is (a year at 1 s resolution fans out 3600
+slots per epoch row, never 31M at once). Over a persisted store,
+``Database.fetch`` clusters the scan on (epoch, f1..fd) before the segment
+fold, so the fold and the densify aggregation share ONE Exchange
+(tests/test_plans.py pins it).
 """
 
 from __future__ import annotations
@@ -140,26 +143,36 @@ def match_expr(col: str, val) -> "F.Column":
     return F.col(col) == F.lit(val)
 
 
-def pattern_filter(df: DataFrame, pattern: list) -> DataFrame:
-    """O6/O7 as a Catalyst filter: exact depth + equality/IN on non-* levels."""
-    depth, preds = compile_pattern(pattern)
+def _match_cond(depth: int, preds: list) -> "F.Column":
+    """O6/O7 as one predicate over a compiled pattern: exact depth +
+    equality/IN/RLIKE on non-* levels."""
     cond = F.col(S.DEPTH) == F.lit(depth)
     for col, val in preds:
         cond = cond & match_expr(col, val)
-    return df.filter(cond)
+    return cond
 
 
-def _epoch_slots_expr(from_b: int, to_b: int, resolution: int, duration: int):
+def pattern_filter(df: DataFrame, pattern: list) -> DataFrame:
+    """O6/O7 as a Catalyst filter: exact depth + equality/IN on non-* levels."""
+    return df.filter(_match_cond(*compile_pattern(pattern)))
+
+
+def _epoch_slots_sql(from_b: int, to_b: int, resolution: int, duration: int) -> str:
     """Slot starts of ONE epoch clipped to [from_b, to_b), as an array
     expression over the row's epoch column. sequence() is inclusive of its
     stop, so the last slot is the exclusive clip minus one resolution; both
     ends are slot-aligned by construction (duration % resolution == 0).
     Evaluated per (epoch, series) row at explode time — the densify axis is
     never materialized as a table, so its memory cost is O(slots-per-epoch)
-    however wide the requested range is."""
-    start = F.greatest(F.col(S.EPOCH), F.lit(from_b))
-    stop = F.least(F.col(S.EPOCH) + F.lit(duration), F.lit(to_b)) - F.lit(resolution)
-    return F.sequence(start, stop, F.lit(resolution))
+    however wide the requested range is.
+
+    SQL text, not Column calls: every bound is an int, and one parsed
+    expression costs one JVM round trip where the Column form costs one
+    per call."""
+    return (
+        f"sequence(greatest({S.EPOCH}, {from_b}), "
+        f"least({S.EPOCH} + {duration}, {to_b}) - {resolution}, {resolution})"
+    )
 
 
 def fetch(
@@ -183,7 +196,7 @@ def fetch(
     if to_ts < from_ts:
         raise InvalidTimeRange(f"invalid range: to={to_ts} < from={from_ts}")
 
-    depth, _ = compile_pattern(pattern)
+    depth, preds = compile_pattern(pattern)
     fcols = S.field_cols(depth)
 
     # Slot-align the range: reference FLOORS both ends (database.go:176-199,
@@ -193,26 +206,29 @@ def fetch(
     from_b = from_ts - (from_ts % resolution)
     to_b = to_ts - (to_ts % resolution)
 
-    spark = cube.sparkSession
-    empty = spark.createDataFrame(
-        [], schema="epoch long, " + ", ".join(f"{c} string" for c in fcols) + ", bucket long, total double, cnt double"
-    )
     if from_b == to_b:
-        return empty  # from == to -> empty result, not an error (fine-print #4)
+        # from == to -> empty result, not an error (fine-print #4)
+        return cube.sparkSession.createDataFrame(
+            [],
+            schema="epoch long, "
+            + ", ".join(f"{c} string" for c in fcols)
+            + ", bucket long, total double, cnt double",
+        )
 
     # The epoch bounds are derivable from the bucket range but Catalyst can't
     # infer that through the floor arithmetic — state them explicitly so the
-    # values scan partition-prunes on epoch too.
+    # values scan partition-prunes on epoch too. Every DataFrame call is a
+    # driver-side analysis pass and every Column call a JVM round trip, so
+    # all predicates go into ONE filter and the integer-only expressions
+    # below are SQL text (one round trip each).
     e_from = from_b - (from_b % duration)
     e_to = (to_b - resolution) - ((to_b - resolution) % duration)
+    matched = _match_cond(depth, preds)
+    epochs = f"{S.EPOCH} BETWEEN {e_from} AND {e_to}"
     if not densify:
-        matched = pattern_filter(cube, pattern).filter(
-            (F.col(S.EPOCH) >= F.lit(e_from))
-            & (F.col(S.EPOCH) <= F.lit(e_to))
-            & (F.col(S.BUCKET) >= F.lit(from_b))
-            & (F.col(S.BUCKET) < F.lit(to_b))
-        )
-        return matched.select(S.EPOCH, *fcols, S.BUCKET, S.TOTAL, S.CNT)
+        return cube.filter(
+            matched & F.expr(f"{epochs} AND {S.BUCKET} >= {from_b} AND {S.BUCKET} < {to_b}")
+        ).select(S.EPOCH, *fcols, S.BUCKET, S.TOTAL, S.CNT)
 
     # Series membership is per-EPOCH, not per-slot: a series present in a
     # touched epoch's index yields a dense (possibly all-zero) vector for
@@ -228,45 +244,46 @@ def fetch(
     # once and shuffles once. Per-group state is bounded by
     # slots-per-epoch (duration/resolution — e.g. 1440 for 1m slots in a
     # 1d epoch), never by range width or series count. Rows OUTSIDE the
-    # bucket range still vote for membership (the when() leaves them out
+    # bucket range still vote for membership (the CASE leaves them out
     # of the map but not out of the group) — the per-epoch membership rule
     # above. The map build assumes the cube is FOLDED (one row per
     # (epoch, series, bucket) — both track_batch and Database.cube
     # guarantee it); duplicate bucket keys would error here where the old
     # join silently emitted duplicate slots.
-    in_range = (F.col(S.BUCKET) >= F.lit(from_b)) & (F.col(S.BUCKET) < F.lit(to_b))
+    #
+    # The bucket bounds of the filter are the epoch range restated on the
+    # bucket axis (every row of epoch e has e <= bucket < e + duration):
+    # they drop no member row, and they give the parquet reader a bucket
+    # predicate for row-group skipping.
     per_series = (
-        pattern_filter(cube, pattern)
-        .filter((F.col(S.EPOCH) >= F.lit(e_from)) & (F.col(S.EPOCH) <= F.lit(e_to)))
+        cube.filter(
+            matched
+            & F.expr(
+                f"{epochs} AND {S.BUCKET} >= {e_from} "
+                f"AND {S.BUCKET} < {e_to + duration}"
+            )
+        )
         .groupBy(S.EPOCH, *fcols)
         .agg(
-            F.map_from_entries(
-                # collect_list drops the when()'s nulls; all-out-of-range
-                # groups yield an empty map (all-zero dense vector)
-                F.collect_list(
-                    F.when(
-                        in_range,
-                        F.struct(
-                            F.col(S.BUCKET),
-                            F.struct(F.col(S.TOTAL).alias("t"), F.col(S.CNT).alias("c")),
-                        ),
-                    )
-                )
-            ).alias("_pts")
+            # collect_list drops the CASE's nulls; all-out-of-range groups
+            # yield an empty map (all-zero dense vector)
+            F.expr(
+                f"map_from_entries(collect_list(CASE WHEN {S.BUCKET} >= {from_b} "
+                f"AND {S.BUCKET} < {to_b} THEN struct({S.BUCKET}, "
+                f"struct({S.TOTAL} AS t, {S.CNT} AS c)) END)) AS _pts"
+            )
         )
     )
-    pt = F.try_element_at(F.col("_pts"), F.col(S.BUCKET))  # NULL on gap slots
-    return per_series.select(
-        S.EPOCH,
-        *fcols,
-        F.explode(_epoch_slots_expr(from_b, to_b, resolution, duration)).alias(S.BUCKET),
-        "_pts",
-    ).select(
+    slots = _epoch_slots_sql(from_b, to_b, resolution, duration)
+    return per_series.selectExpr(
+        S.EPOCH, *fcols, f"explode({slots}) AS {S.BUCKET}", "_pts"
+    ).selectExpr(
         S.EPOCH,
         *fcols,
         S.BUCKET,
-        F.coalesce(pt["t"], F.lit(0.0)).alias(S.TOTAL),
-        F.coalesce(pt["c"], F.lit(0.0)).alias(S.CNT),
+        # try_element_at is NULL on gap slots
+        f"coalesce(try_element_at(_pts, {S.BUCKET}).t, 0.0D) AS {S.TOTAL}",
+        f"coalesce(try_element_at(_pts, {S.BUCKET}).c, 0.0D) AS {S.CNT}",
     )
 
 
@@ -624,13 +641,11 @@ def _series_scan_cond(
     from_b = from_ts - (from_ts % resolution)
     to_b = to_ts - (to_ts % resolution)
     cond = (
-        (F.col(S.DEPTH) == F.lit(depth))
+        _match_cond(depth, preds)
         & _epoch_bounds_pred(from_b, to_b, resolution, duration)
         & (F.col(S.BUCKET) >= F.lit(from_b))
         & (F.col(S.BUCKET) < F.lit(to_b))
     )
-    for col, val in preds:
-        cond = cond & match_expr(col, val)
     return cond, depth
 
 
@@ -2441,31 +2456,23 @@ def fetch_multi(
     e_from = from_b - (from_b % duration)
     e_to = (to_b - resolution) - ((to_b - resolution) % duration)
 
-    def _pred(item) -> "F.Column":
-        depth, preds = item
-        cond = F.col(S.DEPTH) == F.lit(depth)
-        for col, val in preds:
-            cond = cond & match_expr(col, val)
-        return cond
-
+    # each pattern's predicate is built once and used twice (the scan's
+    # OR and the labels): every Column call is a JVM round trip
+    conds = {name: _match_cond(*item) for name, item in sorted(compiled.items())}
     any_match = F.lit(False)
-    for item in compiled.values():
-        any_match = any_match | _pred(item)
+    for cond in conds.values():
+        any_match = any_match | cond
+    # integer bounds as SQL text: one JVM round trip (see fetch)
     scanned = cube.filter(
-        (F.col(S.EPOCH) >= F.lit(e_from))
-        & (F.col(S.EPOCH) <= F.lit(e_to))
-        & (F.col(S.BUCKET) >= F.lit(from_b))
-        & (F.col(S.BUCKET) < F.lit(to_b))
+        F.expr(
+            f"{S.EPOCH} BETWEEN {e_from} AND {e_to} "
+            f"AND {S.BUCKET} >= {from_b} AND {S.BUCKET} < {to_b}"
+        )
         & any_match
     )
     # deterministic label order; array_compact drops the non-matches
     labels = F.array_compact(
-        F.array(
-            *[
-                F.when(_pred(item), F.lit(name))
-                for name, item in sorted(compiled.items())
-            ]
-        )
+        F.array(*[F.when(cond, F.lit(name)) for name, cond in conds.items()])
     )
     return scanned.select(
         F.explode(labels).alias("query"), S.EPOCH, *fcols, S.BUCKET, S.TOTAL, S.CNT
@@ -2804,7 +2811,7 @@ def fetch_rule_group(
             "query",
             *fcols,
             F.explode(
-                _epoch_slots_expr(from_b, to_b, resolution, duration)
+                F.expr(_epoch_slots_sql(from_b, to_b, resolution, duration))
             ).alias(S.BUCKET),
             "_pts",
         ).select(

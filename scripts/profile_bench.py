@@ -8,7 +8,7 @@ same session confs) and records:
   - jobs/stages/tasks: Spark job/stage/task counts via the status tracker
     (job-group scoped, so internal actions are included)
   - plan: .explain("formatted") of the returned DataFrame, written to
-    plans/r13/<name>_<tag>.txt when --plans TAG is given
+    plans/r14/<name>_<tag>.txt when --plans TAG is given
 
 Usage:
   python scripts/profile_bench.py [--sf DIR] [--plans TAG] [--repeat N] [query ...]

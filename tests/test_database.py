@@ -994,3 +994,111 @@ def test_re_prune_matches_java_line_terminator_dollar(spark, tmp_path):
     db.track(_events(spark, [(0, "abc\n", "u", 7.0)]), total_col="v")
     got = db.fetch(0, 5, [Re("abc"), "*"], densify=False).collect()
     assert len(got) >= 1 and got[0]["total"] == 7.0
+
+
+def test_manifest_cache_sees_commits_from_another_handle(spark, tmp_path):
+    """Manifest bodies are cached per (name, length, mtime) of the listing;
+    a commit through ANOTHER handle on the same path is a new name there,
+    so the first handle's next fetch sees it."""
+    path = str(tmp_path / "db")
+    a = Database.open(spark, path, P)
+    a.track(_events(spark, [(0, "a", "b", 1.0)]), total_col="v")
+    assert _pts(a.fetch(0, 1, ["a", "b"])) == [(0, ("a", "b"), 0, 1.0, 1.0)]
+    b = Database.open(spark, path)
+    b.track(_events(spark, [(0, "a", "b", 2.0)]), total_col="v")
+    assert a.current_gen() == b.current_gen()
+    assert _pts(a.fetch(0, 1, ["a", "b"])) == [(0, ("a", "b"), 0, 3.0, 2.0)]
+
+
+def test_manifest_cache_serves_unchanged_heads_without_reading(spark, tmp_path, monkeypatch):
+    """A commit seeds its handle's cache, and an unchanged head is read
+    from the filesystem at most once per handle."""
+    path = str(tmp_path / "db")
+    db = Database.open(spark, path, P)
+    db.track(_events(spark, [(0, "a", "b", 1.0)]), total_col="v")
+    other = Database.open(spark, path)
+    reads = []
+    read_text = HadoopFS.read_text
+    monkeypatch.setattr(
+        HadoopFS, "read_text", lambda self, p: reads.append(p) or read_text(self, p)
+    )
+    db._manifest()
+    db._manifest()
+    assert reads == []
+    other._manifest()
+    other._manifest()
+    assert len(reads) == 1
+
+
+def test_manifest_reads_are_fresh_copies(spark, tmp_path):
+    """track and commit_cube_batch mutate the manifest they read; a cached
+    body must never carry those edits into the next read."""
+    db = Database.open(spark, str(tmp_path / "db"), P)
+    db.track(_events(spark, [(0, "a", "b", 1.0)]), total_col="v")
+    m = db._manifest()
+    m["segments"][0].append("segs/bogus/epoch_p=0")
+    m["hwm"]["s"] = 7
+    raw = db._genlog.read()
+    raw["stats"].clear()
+    again = db._manifest()
+    assert "segs/bogus/epoch_p=0" not in again["segments"][0]
+    assert again["hwm"] == {}
+    assert again["stats"] != {}
+    assert _pts(db.fetch(0, 1, ["a", "b"])) == [(0, ("a", "b"), 0, 1.0, 1.0)]
+
+
+def test_expire_then_track_reads_through_the_cache(spark, tmp_path):
+    """expire commits with keep=1 (the retained window collapses to the
+    new head); the next track must read that head and append to it."""
+    path = str(tmp_path / "db")
+    db = Database.open(spark, path, P)
+    db.track(_events(spark, [(0, "a", "b", 1.0), (7, "a", "b", 2.0)]), total_col="v")
+    db.track(_events(spark, [(7, "a", "b", 3.0)]), total_col="v")
+    assert db.expire(before_ts=5) == [0]
+    assert db.generations() == [db.current_gen()]
+    db.track(_events(spark, [(8, "a", "b", 4.0)]), total_col="v")
+    want = [(5, ("a", "b"), 7, 5.0, 2.0), (5, ("a", "b"), 8, 4.0, 1.0)]
+    assert _pts(db.fetch(0, 10, ["a", "b"], densify=False)) == want
+    assert _pts(Database.open(spark, path).fetch(0, 10, ["a", "b"], densify=False)) == want
+
+
+def test_manifest_cache_concurrent_readers_see_whole_commits(spark, tmp_path):
+    """One writer commits while more reader threads than cores read through
+    ONE GenLog: every read is a whole committed body (its payload matches
+    its generation), no reader sees the head go backwards, and a reader's
+    edit to its copy never reaches the cache."""
+    import sys
+    import threading
+
+    from kadiyadb_spark.manifest import GenLog
+
+    log = GenLog(spark, str(tmp_path / "log"))
+    gen = log.commit({"payload": 0}, -1)
+    stop = threading.Event()
+    bad = []
+
+    def reader():
+        last = -1
+        while not stop.is_set():
+            m = log.read()
+            if m["payload"] != m["gen"] or m["gen"] < last:
+                bad.append(m)
+            last = m["gen"]
+            m["payload"] = -7
+
+    threads = [threading.Thread(target=reader) for _ in range(8)]
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for _ in range(15):
+            gen = log.commit({"payload": gen + 1}, gen)
+    finally:
+        stop.set()
+        for t in threads:
+            t.join(timeout=60)
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert bad == []
+    assert log.read() == {"payload": gen, "gen": gen}

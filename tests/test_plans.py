@@ -61,6 +61,27 @@ def test_fetch_prunes_partitions_and_pushes_filters(spark, tmp_path):
     assert "epoch" in pushed and "bucket" in pushed and "f1" in pushed
 
 
+def test_densified_fetch_folds_and_densifies_over_one_exchange(spark, tmp_path):
+    """Database.fetch clusters the scan on the densify keys (epoch, f1..fd)
+    before the segment fold, so the fold groupBy and the densify groupBy
+    share ONE Exchange; the pushed filters still reach the scan, and the
+    fold still sums every segment of the epoch."""
+    db = Database.open(spark, str(tmp_path / "db"), Params(duration=5, resolution=1, retention=10, fields=("x", "y")))
+    for v in (1.0, 2.0):
+        db.track(
+            spark.createDataFrame([Row(ts=t, x="a", y="b", v=v) for t in (0, 3)]),
+            total_col="v",
+        )
+    assert len(db._manifest()["segments"][0]) == 2
+    fetched = db.fetch(0, 5, ["a", "b"])
+    plan = plan_str(fetched)
+    assert n_shuffles(plan) == 1
+    pushed = plan.split("PushedFilters", 1)[1].split("\n", 1)[0]
+    assert "epoch" in pushed and "bucket" in pushed and "f1" in pushed
+    got = {r["bucket"]: (r["total"], r["cnt"]) for r in fetched.collect()}
+    assert got == {0: (3.0, 2.0), 1: (0.0, 0.0), 2: (0.0, 0.0), 3: (3.0, 2.0), 4: (0.0, 0.0)}
+
+
 def test_jaccard_verify_broadcasts_candidates(spark):
     """r13 shape: BOTH shingle lookups are map-side broadcast joins of the
     BARE (id_a, id_b) pair list (the broadcast never carries shingle

@@ -3,6 +3,7 @@ preload) — the two session-level knobs changes 12-13 introduced.
 
 These tests pin the PURE logic (no Spark session): the heap derivation's
 floor/cap/override contract and the daemon module's import safety. The
+one exception, the get_spark session guard, needs a running session. The
 live-session behavior (workers actually forked from the preloaded daemon)
 is exercised end to end by every Arrow-kernel test in the suite once a
 get_spark session is in play, and was verified against the full oracle
@@ -93,3 +94,18 @@ def test_pydaemon_preload_survives_missing_optional_package():
         importlib.reload(pd_mod)
     importlib.reload(pd_mod)  # restore a fully-loaded module for siblings
     assert pd_mod.manager is not None
+
+
+def test_session_guard_sees_a_session_started_on_another_thread(spark):
+    """get_spark only edits PYTHONPATH when it launches the JVM. Its guard
+    must see a session another thread started: getActiveSession() is
+    thread-local and reads None on a thread that never set one."""
+    import threading
+
+    from kadiyadb_spark.session import _session_running
+
+    seen = {}
+    t = threading.Thread(target=lambda: seen.update(running=_session_running()))
+    t.start()
+    t.join()
+    assert seen == {"running": True}
