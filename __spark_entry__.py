@@ -961,6 +961,10 @@ def _stage_sessionize_batches(spark: SparkSession, sf_dir: str, tmp: str) -> Non
     now = time.time()
     for name, age in (("a", 60.0), ("b", 0.0)):
         bdir = f"{stage}/_b={name}"
+        if not os.path.isdir(bdir):
+            # an empty batch writes no _b=<name> dir: stage a schema-only
+            # file so the stream still sees two ordered batch files
+            raw.limit(0).coalesce(1).write.parquet(bdir)
         (pf,) = [p for p in os.listdir(bdir) if p.endswith(".parquet")]
         dst = f"{tmp}/events/{name}.parquet"
         shutil.copy(f"{bdir}/{pf}", dst)
@@ -4674,10 +4678,9 @@ def q_rag_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     retrievals are the gated corpus-linear operators (local_topk bounds
     the cosine ranking shuffle); the fuse itself touches <= 40 rows.
     r14 (guide §1.2/§2.3): the two retrievers share ONE persisted
-    outer-exploded token pass over the corpus — BM25 consumes its
-    null-free filter (inner-explode-identical rows), hashed_bow consumes
-    it directly — instead of each retriever re-scanning + re-tokenizing
-    the corpus."""
+    outer-exploded token pass over the corpus (bm25_score drops its
+    null-token marker rows itself) instead of each retriever re-scanning
+    + re-tokenizing the corpus."""
     from pyspark.sql import Window
 
     docs = _t(spark, sf_dir, "documents")
@@ -4685,8 +4688,7 @@ def q_rag_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.explode_outer(TX.tokens_expr(F.col("text"))).alias("_tok")
     ).persist()
     lex = TX.bm25_score(
-        docs, ["merge", "filter", "window"], k=20,
-        toks=toks.filter(F.col("_tok").isNotNull()),
+        docs, ["merge", "filter", "window"], k=20, toks=toks
     ).select("doc_id", "rank")
     base = TX.hashed_bow(docs, dim=64, toks=toks)
     qv = TX.hashed_bow(
@@ -5426,61 +5428,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # so a freshly-dropped untracked artifact cannot redden the suite) and
     # tests/test_entry_rotation.py asserts list(queries()) equals it with
     # ZERO per-round constants. Rotation history r02-r10: see git log of
-    # this docstring; r14 cap = the r09 remainder + the r10 block head
-    # (CORRECTNESS_r13.json greened its 50, rotating them to the tail).
+    # this docstring; r15 cap = the r10 remainder + the r11 block head
+    # (CORRECTNESS_r14.json greened its 50, rotating them to the tail).
     return {
-        # -- last driver-green r09 --
-        "dedup_keep_best": q_dedup_keep_best,
-        "drift_psi": q_drift_psi,
-        "embedding_quantize": q_embedding_quantize,
-        "fetch_agg_by": q_fetch_agg_by,
-        "fetch_alerts": q_fetch_alerts,
-        "fetch_anomaly": q_fetch_anomaly,
-        "fetch_burn_rate": q_fetch_burn_rate,
-        "fetch_count_values": q_fetch_count_values,
-        "fetch_downsample": q_fetch_downsample,
-        "fetch_last_write": q_fetch_last_write,
-        "fetch_mad_anomaly": q_fetch_mad_anomaly,
-        "fetch_outlier_fences": q_fetch_outlier_fences,
-        "fetch_quantile_by": q_fetch_quantile_by,
-        "fetch_remap": q_fetch_remap,
-        "fetch_seasonal_anomaly": q_fetch_seasonal_anomaly,
-        "fetch_share": q_fetch_share,
-        "fetch_stddev_window": q_fetch_stddev_window,
-        "fetch_topk_instant": q_fetch_topk_instant,
-        "funnel_time": q_funnel_time,
-        "json_source_agg": q_json_source_agg,
-        "multimodal_gif_real": q_multimodal_gif_real,
-        "ngram_heavy_hitters": q_ngram_heavy_hitters,
-        "pack_ids": q_pack_ids,
-        "path_transitions": q_path_transitions,
-        "profile_correlations": q_profile_correlations,
-        "q12_shipmode": q12_shipmode,
-        "q20_potential_promotion": q20_potential_promotion,
-        "rfm_segments": q_rfm_segments,
-        "rollup_revenue": q_rollup_revenue,
-        "sample_weighted": q_sample_weighted,
-        "sim_ivfpq_refined": q_sim_ivfpq_refined,
-        "sim_ivfpq_residual_det": q_sim_ivfpq_residual_det,
-        "sim_knn_graph": q_sim_knn_graph,
-        "streaming_alerts": q_streaming_alerts,
-        "streaming_rejects": q_streaming_rejects,
-        "text_char_entropy": q_text_char_entropy,
-        "text_collocations": q_text_collocations,
-        "text_decontaminate_spans": q_text_decontaminate_spans,
-        "text_keywords": q_text_keywords,
-        "track_rejects": q_track_rejects,
-        "zorder_layout": q_zorder_layout,
         # -- last driver-green r10 --
-        "asof_tolerance": q_asof_tolerance,
-        "bloom_join_prune": q_bloom_join_prune,
-        "bpe_decode_roundtrip": q_bpe_decode_roundtrip,
-        "bpe_gpt2_pretok": q_bpe_gpt2_pretok,
-        "cdc_merge_apply": q_cdc_merge_apply,
-        "db_forget": q_db_forget,
-        "dedup_url_canonical": q_dedup_url_canonical,
-        "embedding_matryoshka": q_embedding_matryoshka,
-        "embedding_pca": q_embedding_pca,
         "fetch_absent": q_fetch_absent,
         "fetch_cusum": q_fetch_cusum,
         "fetch_gaps": q_fetch_gaps,
@@ -5675,6 +5626,57 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "topk_per_group": q_topk_per_group,
         "window_daily_running": q_window_daily_running,
         "window_frames": q_window_frames,
+        # -- last driver-green r14 --
+        "asof_tolerance": q_asof_tolerance,
+        "bloom_join_prune": q_bloom_join_prune,
+        "bpe_decode_roundtrip": q_bpe_decode_roundtrip,
+        "bpe_gpt2_pretok": q_bpe_gpt2_pretok,
+        "cdc_merge_apply": q_cdc_merge_apply,
+        "db_forget": q_db_forget,
+        "dedup_keep_best": q_dedup_keep_best,
+        "dedup_url_canonical": q_dedup_url_canonical,
+        "drift_psi": q_drift_psi,
+        "embedding_matryoshka": q_embedding_matryoshka,
+        "embedding_pca": q_embedding_pca,
+        "embedding_quantize": q_embedding_quantize,
+        "fetch_agg_by": q_fetch_agg_by,
+        "fetch_alerts": q_fetch_alerts,
+        "fetch_anomaly": q_fetch_anomaly,
+        "fetch_burn_rate": q_fetch_burn_rate,
+        "fetch_count_values": q_fetch_count_values,
+        "fetch_downsample": q_fetch_downsample,
+        "fetch_last_write": q_fetch_last_write,
+        "fetch_mad_anomaly": q_fetch_mad_anomaly,
+        "fetch_outlier_fences": q_fetch_outlier_fences,
+        "fetch_quantile_by": q_fetch_quantile_by,
+        "fetch_remap": q_fetch_remap,
+        "fetch_seasonal_anomaly": q_fetch_seasonal_anomaly,
+        "fetch_share": q_fetch_share,
+        "fetch_stddev_window": q_fetch_stddev_window,
+        "fetch_topk_instant": q_fetch_topk_instant,
+        "funnel_time": q_funnel_time,
+        "json_source_agg": q_json_source_agg,
+        "multimodal_gif_real": q_multimodal_gif_real,
+        "ngram_heavy_hitters": q_ngram_heavy_hitters,
+        "pack_ids": q_pack_ids,
+        "path_transitions": q_path_transitions,
+        "profile_correlations": q_profile_correlations,
+        "q12_shipmode": q12_shipmode,
+        "q20_potential_promotion": q20_potential_promotion,
+        "rfm_segments": q_rfm_segments,
+        "rollup_revenue": q_rollup_revenue,
+        "sample_weighted": q_sample_weighted,
+        "sim_ivfpq_refined": q_sim_ivfpq_refined,
+        "sim_ivfpq_residual_det": q_sim_ivfpq_residual_det,
+        "sim_knn_graph": q_sim_knn_graph,
+        "streaming_alerts": q_streaming_alerts,
+        "streaming_rejects": q_streaming_rejects,
+        "text_char_entropy": q_text_char_entropy,
+        "text_collocations": q_text_collocations,
+        "text_decontaminate_spans": q_text_decontaminate_spans,
+        "text_keywords": q_text_keywords,
+        "track_rejects": q_track_rejects,
+        "zorder_layout": q_zorder_layout,
         # -- never driver-gated (borns) --
         "dq_expectations": q_dq_expectations,
         "embedding_kmeans": q_embedding_kmeans,

@@ -71,6 +71,11 @@ _STATS_MAX = 64  # distinct values recorded per (segment, epoch, dimension) for 
 _RE_SAFE_META = set("_|.*+?()^${},:/ -=!<>@#%'\";~")
 
 
+def _seg_refs(m: dict) -> list[str]:
+    """Segment refs a cube manifest names (``GenLog.retained_refs``)."""
+    return [r for refs in m.get("segments", {}).values() for r in refs]
+
+
 def _re_prune_safe(pattern: str) -> bool:
     """True only when Java regex (the rlike filter) and Python re (the
     manifest-stats prune replay) are known to interpret ``pattern``
@@ -231,26 +236,14 @@ class Database:
         # JSON — so a segment de-referenced at commit g used to stay on
         # disk FOREVER once manifests g-1/g-2 rotated out (only vacuum()
         # reclaimed it; an update-mode merge_replace-per-batch stream would
-        # leak unboundedly). Collect the refs whose LAST retaining
-        # manifests rotate out at THIS commit, then delete the subset no
-        # surviving manifest references. A crash between the commit and the
-        # deletes leaves orphans — vacuum's job — never dangling refs.
-        doomed: set[str] = set()
-        retained = self._genlog.retained() if self.rotation_gc else []
-        n_keep_old = max(keep - 1, 0)
-        drop = retained if n_keep_old == 0 else retained[:-n_keep_old]
-        for g in drop:
-            try:
-                old = self._genlog.read(at_gen=g)
-            except ValueError:
-                continue
-            doomed.update(
-                r for refs in old.get("segments", {}).values() for r in refs
-            )
+        # leak unboundedly). Delete the refs retained before THIS commit
+        # that no manifest retained after it references. A crash between
+        # the commit and the deletes leaves orphans — vacuum's job — never
+        # dangling refs.
+        doomed = self._genlog.retained_refs(_seg_refs) - live if self.rotation_gc else set()
         self._genlog.commit(body, prev_gen, keep=keep)
         if doomed:
-            still_live = self._live_refs() | live
-            for ref in doomed - still_live:
+            for ref in doomed - self._genlog.retained_refs(_seg_refs):
                 self.fs.delete(HadoopFS.join(self.cube_path, ref))
 
     def _write_segment(
@@ -460,19 +453,6 @@ class Database:
             if not pred_sets or _keep(ref)
         ]
 
-    def _live_refs(self) -> set[str]:
-        """Segment refs reachable from ANY retained manifest — the set
-        snapshot reads (``cube(at_gen=...)``) may still touch."""
-        live: set[str] = set()
-        for g in self._genlog.retained():
-            try:
-                m = self._genlog.read(at_gen=g)
-            except ValueError:
-                continue  # rotated out since the listing
-            for refs in m["segments"].values():
-                live.update(refs)
-        return live
-
     def _gc(self, refs: list[str]) -> None:
         """Drop de-referenced segment leaf directories. Runs AFTER the
         manifest commit, so a crash leaves only orphans (vacuum's job),
@@ -480,7 +460,7 @@ class Database:
         older manifest is kept so pinned snapshot reads stay consistent;
         it is collected when that generation rotates out (a few tiny JSON
         reads per GC — pure metadata)."""
-        live = self._live_refs()
+        live = self._genlog.retained_refs(_seg_refs)
         for ref in set(refs) - live:
             self.fs.delete(HadoopFS.join(self.cube_path, ref))
 
@@ -489,7 +469,7 @@ class Database:
         leftovers of writes that crashed before their commit. Safe under the
         single-writer assumption (an in-flight writer's staged segments are
         unreferenced by definition; don't vacuum concurrently with writes)."""
-        live = self._live_refs()
+        live = self._genlog.retained_refs(_seg_refs)
         live_roots = {ref.split("/")[1] for ref in live}
         removed = []
         segs_root = HadoopFS.join(self.cube_path, "segs")
@@ -1141,7 +1121,7 @@ class Database:
         100 TB cube (the listing is one LIST per segment dir on an object
         store; run it as maintenance, not per query). Never mutates."""
         names = self._manifest_names()
-        live = self._live_refs()
+        live = self._genlog.retained_refs(_seg_refs)
         missing = sorted(
             ref for ref in live if not self.fs.exists(HadoopFS.join(self.cube_path, ref))
         )

@@ -1054,6 +1054,9 @@ def signature_est_jaccard(sig_a: Column, sig_b: Column, num_hashes: int) -> Colu
     )
 
 
+_MINHASH_DIRS = ("banded",)
+
+
 class MinHashIndex:
     """A PERSISTED LSH band index for INCREMENTAL near-dup detection.
 
@@ -1100,12 +1103,15 @@ class MinHashIndex:
         bands: int = 4,
         shingle_k: int = 8,
     ):
+        from kadiyadb_spark.manifest import GenLog
+
         self.spark = spark
         self.path = path
         self.id_col = id_col
         self.num_hashes = num_hashes
         self.bands = bands
         self.shingle_k = shingle_k
+        self._genlog = GenLog(spark, path)
 
     @staticmethod
     def build(
@@ -1121,7 +1127,7 @@ class MinHashIndex:
         sigs = minhash_signature(docs, text_col, id_col, num_hashes, shingle_k)
         banded = banded_signatures(sigs, id_col, bands, rows_per_band, keep_signature=True)
         idx = MinHashIndex(docs.sparkSession, path, id_col, num_hashes, bands, shingle_k)
-        log = idx._log()
+        log = idx._genlog
         m = log.read()
         live = f"banded-g{m['gen'] + 1:06d}"
         # Repartition by the full bucket key WITHOUT pinning a partition
@@ -1144,7 +1150,7 @@ class MinHashIndex:
              "schemas": {"banded": banded.schema.json()}},
             m["gen"],
         )
-        idx._gc_data_dirs(keep=live)
+        log.gc(_MINHASH_DIRS)
         return idx
 
     def _params(self) -> dict:
@@ -1163,55 +1169,22 @@ class MinHashIndex:
         directly with different num_hashes/bands/shingle_k than the stored
         rows silently yields signatures that never match; open() makes the
         stored parameters the single source of truth."""
-        from kadiyadb_spark.manifest import GenLog
-
-        m = GenLog(spark, path).read()
-        if m["gen"] < 0:
-            raise FileNotFoundError(f"no committed index at {path} (build() first)")
-        p = m.get("params")
+        idx = cls(spark, path)
+        p = idx._genlog.head().get("params")
         if p is None:
             raise ValueError(
                 f"index at {path} predates parameter recording; construct "
                 "MinHashIndex(...) with its build parameters explicitly"
             )
-        return cls(
-            spark,
-            path,
-            id_col=p["id_col"],
-            num_hashes=int(p["num_hashes"]),
-            bands=int(p["bands"]),
-            shingle_k=int(p["shingle_k"]),
-        )
-
-    def _log(self):
-        from kadiyadb_spark.manifest import GenLog
-
-        return GenLog(self.spark, self.path)
-
-    def _live(self, at_gen: int | None = None) -> str:
-        m = self._log().read(at_gen)
-        if m["gen"] < 0:
-            raise FileNotFoundError(f"no committed index at {self.path} (build() first)")
-        return f"{self.path}/{m['live']}"
-
-    def _gc_data_dirs(self, keep: str) -> None:
-        """Delete ``banded-g*`` dirs no RETAINED manifest references
-        (orphans from crashed staged writes, and generations older than the
-        manifest log's retention). Dirs named by any retained manifest stay
-        on disk so generation-pinned reads (``query(at_gen=...)``) survive a
-        concurrent compaction — the GenLog keeps 3 manifests, so a reader
-        may pin up to 2 generations behind head."""
-        from kadiyadb_spark.fs import HadoopFS
-
-        fs = HadoopFS(self.spark, self.path)
-        keep_set = self._log().live_dirs() | {keep}
-        for name in fs.listdir(self.path):
-            if name.startswith("banded") and name not in keep_set:
-                fs.delete(HadoopFS.join(self.path, name))
+        idx.id_col = p["id_col"]
+        idx.num_hashes = int(p["num_hashes"])
+        idx.bands = int(p["bands"])
+        idx.shingle_k = int(p["shingle_k"])
+        return idx
 
     def generations(self) -> list[int]:
         """Retained (pinnable) generation numbers, ascending."""
-        return self._log().retained()
+        return self._genlog.retained()
 
     def banded(self, at_gen: int | None = None) -> DataFrame:
         """The live banded rows, or a RETAINED older generation's when
@@ -1220,33 +1193,15 @@ class MinHashIndex:
         race: pin the generation before a long probe job and the directory
         outlives the swap as long as the manifest is retained).
 
-        Consumption contract: ``_live`` resolves the directory EAGERLY but
-        the parquet scan is lazy — the pin protects a plan only while its
+        Consumption contract: the directory resolves EAGERLY but the
+        parquet scan is lazy — the pin protects a plan only while its
         generation stays within the manifest retention window (keep=3: the
         live gen plus two back). Execute (or checkpoint) the returned
-        DataFrame before more than two further compactions run; a plan held
-        across maintenance windows beyond that can hit FileNotFound at
-        action time, exactly like any snapshot reader outliving its
-        snapshot's GC horizon."""
-        m = self._log().read(at_gen)
-        if m["gen"] < 0:
-            raise FileNotFoundError(f"no committed index at {self.path} (build() first)")
-        return self._pinned_reader(m).parquet(f"{self.path}/{m['live']}")
-
-    def _pinned_reader(self, m: dict):
-        """Reader pinned to the build-time schema recorded in the manifest
-        (skips the per-open schema-inference job — r14, guide §6); falls
-        back to inference for pre-r14 manifests."""
-        import json
-
-        from pyspark.sql import types as T
-
-        sj = m.get("schemas", {}).get("banded")
-        return (
-            self.spark.read.schema(T.StructType.fromJson(json.loads(sj)))
-            if sj
-            else self.spark.read
-        )
+        DataFrame before more than two further commits (compactions or
+        adds) run; a plan held across maintenance windows beyond that can
+        hit FileNotFound at action time, exactly like any snapshot reader
+        outliving its snapshot's GC horizon."""
+        return self._genlog.scan(self._genlog.head(at_gen), "banded")
 
     def add(
         self,
@@ -1279,12 +1234,17 @@ class MinHashIndex:
         return banded_signatures(sigs, self.id_col, self.bands, rows_per_band, keep_signature=True)
 
     def add_banded(self, banded: DataFrame) -> None:
-        """``add`` from an already-banded frame (see ``banded_of``)."""
-        (
-            banded.repartition("band_idx", "band_key")
-            .write.mode("append")
-            .partitionBy("band_idx")
-            .parquet(self._live())
+        """``add`` from an already-banded frame (see ``banded_of``). The
+        append is fenced (``GenLog.fenced_append``): a ``compact`` that
+        swaps generations mid-append makes the add retry against the new
+        live dir instead of leaving the batch in a superseded one."""
+        self._genlog.fenced_append(
+            lambda m, live: (
+                banded.repartition("band_idx", "band_key")
+                .write.mode("append")
+                .partitionBy("band_idx")
+                .parquet(live)
+            )
         )
 
     def compact(self) -> None:
@@ -1295,28 +1255,27 @@ class MinHashIndex:
         full-row distinct, so only true duplicates collapse: a re-ingested
         doc whose text changed hashes to different rows and keeps both).
 
-        Commit is the generation swap: stage ``banded-g<N+1>``, atomically
-        publish a manifest pointing at it, then GC the old dir — a crash
-        anywhere leaves the previous generation fully readable (the old
-        delete-then-rename swap had a window with NO index). Single-writer
-        maintenance op. GC keeps every dir a retained manifest names, so a
-        reader that PINNED its generation (``query(at_gen=...)``) survives
-        the swap; only an unpinned reader racing >2 further compactions can
-        lose its directory."""
-        log = self._log()
-        m = log.read()
-        live = self._live()
-        new = f"banded-g{m['gen'] + 1:06d}"
-        (
-            self._pinned_reader(m).parquet(live)
-            .distinct()
-            .repartition("band_idx", "band_key")
-            .write.mode("overwrite")
-            .partitionBy("band_idx")
-            .parquet(f"{self.path}/{new}")
+        Commit is the generation swap (``GenLog.swap``): stage
+        ``banded-g<N+1>``, atomically publish a manifest pointing at it,
+        then GC — a crash anywhere leaves the previous generation fully
+        readable. Single-writer maintenance op; raises
+        ConcurrentWriteError if an add's fence commit lands mid-compact
+        (retry). GC keeps every dir a retained manifest names, so a reader
+        that PINNED its generation (``query(at_gen=...)``) survives the
+        swap; only an unpinned reader racing >2 further commits can lose
+        its directory."""
+        self._genlog.swap(
+            lambda m, new: (
+                self._genlog.scan(m, "banded")
+                .distinct()
+                .repartition("band_idx", "band_key")
+                .write.mode("overwrite")
+                .partitionBy("band_idx")
+                .parquet(new)
+            ),
+            "banded",
+            _MINHASH_DIRS,
         )
-        log.commit({**m, "live": new}, m["gen"])  # params etc. carry forward
-        self._gc_data_dirs(keep=new)
 
     def query(
         self,

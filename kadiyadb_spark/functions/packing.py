@@ -207,9 +207,8 @@ def write_shards(
         .collect()
     ]
     stats.sort(key=lambda s: s["shard"])
-    fs = HadoopFS(spark, path)
-    if not fs.rename(HadoopFS.join(path, staged), HadoopFS.join(path, live)):
-        fs.delete(HadoopFS.join(path, staged))
+    if not log.fs.rename(HadoopFS.join(path, staged), HadoopFS.join(path, live)):
+        log.fs.delete(HadoopFS.join(path, staged))
         raise ConcurrentWriteError(
             f"shard generation {live} already staged by a concurrent writer"
         )
@@ -221,10 +220,7 @@ def write_shards(
     # the delete-all-but-live sweep broke the pinned-generation contract
     # every other GenLog store honors — a reader mid-stream on the prior
     # generation lost its files two commits early)
-    keep = log.live_dirs() | {live}
-    for name in fs.listdir(path):
-        if name.startswith("shard-data") and name not in keep:
-            fs.delete(HadoopFS.join(path, name))
+    log.gc(("shard-data",))
     return stats
 
 
@@ -234,9 +230,7 @@ def read_shards(spark, path: str, shard: int | None = None):
     from kadiyadb_spark.fs import HadoopFS
     from kadiyadb_spark.manifest import GenLog
 
-    m = GenLog(spark, path).read()
-    if m["gen"] < 0:
-        raise FileNotFoundError(f"no committed shards at {path}")
+    m = GenLog(spark, path).head()
     df = spark.read.parquet(HadoopFS.join(path, m["live"]))
     return df if shard is None else df.filter(F.col("shard") == shard)
 
@@ -246,10 +240,7 @@ def shard_stats(spark, path: str):
     data scan)."""
     from kadiyadb_spark.manifest import GenLog
 
-    m = GenLog(spark, path).read()
-    if m["gen"] < 0:
-        raise FileNotFoundError(f"no committed shards at {path}")
-    return m["shards"]
+    return GenLog(spark, path).head()["shards"]
 
 
 def pack_nosplit(

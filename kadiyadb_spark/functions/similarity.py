@@ -223,6 +223,22 @@ def ivf_assign(
     )
 
 
+_IVF_DIRS = ("assigned", "centroids-")
+_IVFPQ_DIRS = ("codes", "centroids-", "codebooks-")
+
+
+def _fold_by_centroid(df: DataFrame, n_centroids: int, dst: str) -> None:
+    """Compaction's rewrite for the vector indexes: drop exact-duplicate
+    rows (replayed adds) and cluster each centroid bucket into few files."""
+    (
+        df.distinct()
+        .repartition(int(n_centroids), "centroid_id")
+        .write.mode("overwrite")
+        .partitionBy("centroid_id")
+        .parquet(dst)
+    )
+
+
 class IVFIndex:
     """A PERSISTED IVF index: built once, searched many times.
 
@@ -231,13 +247,14 @@ class IVFIndex:
     (the reference analog: kadiyadb builds its field index once on open, not
     per Fetch — index/index.go:26-65). This class materializes the index:
 
-      <path>/centroids/        C rows (centroid_id, centroid_vec)
+      <path>/centroids-g<N>/   C rows (centroid_id, centroid_vec)
       <path>/assigned-g<N>/    base table + centroid_id, parquet
                                PARTITIONED BY centroid_id
       <path>/manifest-*.json   generation manifest naming the live
-                               assignment dir (manifest.GenLog) — compaction
-                               swaps the pointer atomically instead of the
-                               old delete-then-rename, which had a crash
+                               assignment dir and the centroid dir
+                               (manifest.GenLog) — compaction swaps the
+                               pointer atomically instead of the old
+                               delete-then-rename, which had a crash
                                window exposing NO index
 
     A search probes ``nprobe`` buckets per query and reads ONLY those
@@ -247,10 +264,13 @@ class IVFIndex:
     touched. Scoring reuses the broadcast-query numpy kernel."""
 
     def __init__(self, spark, path: str, id_col: str = "vec_id", vec_col: str = "embedding"):
+        from kadiyadb_spark.manifest import GenLog
+
         self.spark = spark
         self.path = path
         self.id_col = id_col
         self.vec_col = vec_col
+        self._genlog = GenLog(spark, path)
 
     @staticmethod
     def build(
@@ -274,7 +294,7 @@ class IVFIndex:
         spark = emb.sparkSession
         cents = resolve_centroids(emb, num_centroids, centroids, id_col, vec_col)
         idx = IVFIndex(spark, path, id_col, vec_col)
-        log = idx._log()
+        log = idx._genlog
         m = log.read()
         gen = m["gen"] + 1
         # centroids are generation-named + manifest-referenced like the
@@ -304,82 +324,32 @@ class IVFIndex:
             },
             m["gen"],
         )
-        idx._gc_data_dirs(keep={live, cdir})
+        log.gc(_IVF_DIRS)
         return idx
 
     @classmethod
     def open(cls, spark, path: str) -> "IVFIndex":
         """Reopen with the column names recorded at build time (the
         reference's params-on-open contract; see MinHashIndex.open)."""
-        from kadiyadb_spark.manifest import GenLog
-
-        m = GenLog(spark, path).read()
-        if m["gen"] < 0:
-            raise FileNotFoundError(f"no committed index at {path} (build() first)")
-        p = m.get("params")
+        idx = cls(spark, path)
+        p = idx._genlog.head().get("params")
         if p is None:
             raise ValueError(
                 f"index at {path} predates parameter recording; construct "
                 "IVFIndex(...) with its build parameters explicitly"
             )
-        return cls(spark, path, id_col=p["id_col"], vec_col=p["vec_col"])
-
-    def _log(self):
-        from kadiyadb_spark.manifest import GenLog
-
-        return GenLog(self.spark, self.path)
-
-    def _live(self, at_gen: int | None = None) -> str:
-        m = self._log().read(at_gen)
-        if m["gen"] < 0:
-            raise FileNotFoundError(f"no committed index at {self.path} (build() first)")
-        return f"{self.path}/{m['live']}"
-
-    def _gc_data_dirs(self, keep) -> None:
-        """Keeps every dir a RETAINED manifest references — generation-pinned
-        searches (``search(at_gen=...)``) stay serviceable across a
-        concurrent compact's swap (same contract as MinHashIndex)."""
-        from kadiyadb_spark.fs import HadoopFS
-
-        fs = HadoopFS(self.spark, self.path)
-        log = self._log()
-        keep_set = (
-            log.live_dirs()
-            | log.live_dirs("centroids")
-            | ({keep} if isinstance(keep, str) else set(keep))
-        )
-        for name in fs.listdir(self.path):
-            if (
-                name.startswith("assigned") or name.startswith("centroids-")
-            ) and name not in keep_set:
-                fs.delete(HadoopFS.join(self.path, name))
+        idx.id_col, idx.vec_col = p["id_col"], p["vec_col"]
+        return idx
 
     def generations(self) -> list[int]:
         """Retained (pinnable) generation numbers, ascending."""
-        return self._log().retained()
-
-    def _pinned_reader(self, m: dict, key: str):
-        """Reader pinned to the build-time schema recorded in the manifest
-        (no schema-inference job); falls back to inference for pre-r14
-        manifests without a record."""
-        import json
-
-        from pyspark.sql import types as T
-
-        sj = m.get("schemas", {}).get(key)
-        reader = self.spark.read
-        return reader.schema(T.StructType.fromJson(json.loads(sj))) if sj else reader
+        return self._genlog.retained()
 
     def assigned(self, at_gen: int | None = None) -> DataFrame:
-        m = self._log().read(at_gen)
-        if m["gen"] < 0:
-            raise FileNotFoundError(f"no committed index at {self.path} (build() first)")
-        return self._pinned_reader(m, "assigned").parquet(f"{self.path}/{m['live']}")
+        return self._genlog.scan(self._genlog.head(at_gen), "assigned")
 
     def centroids(self, at_gen: int | None = None) -> DataFrame:
-        m = self._log().read(at_gen)
-        mdir = m.get("centroids", "centroids")
-        return self._pinned_reader(m, "centroids").parquet(f"{self.path}/{mdir}")
+        return self._genlog.scan(self._genlog.head(at_gen), "centroids", "centroids")
 
     def add(self, emb: DataFrame) -> None:
         """APPEND a batch of vectors to the index against the EXISTING
@@ -391,62 +361,44 @@ class IVFIndex:
         bucket membership of already-indexed vectors must stay stable or
         the partition layout lies; retrain+rebuild is a full build().
         Frequent adds fragment buckets into small files — ``compact`` folds
-        them back. Fenced by a same-manifest bump commit (see
-        IVFPQIndex.add): a compact that swapped mid-append makes the bump
-        collide and the add retries against the new live dir instead of
-        losing the batch with the superseded dir's GC."""
-        from kadiyadb_spark.manifest import ConcurrentWriteError
+        them back. Fenced (``GenLog.fenced_append``): a compact that
+        swapped mid-append makes the add retry against the new live dir
+        instead of losing the batch with the superseded dir's GC."""
 
-        for attempt in (0, 1):
-            log = self._log()
-            m = log.read()
-            live = self._live()
+        def write(m: dict, live: str) -> None:
             # ONE collect of the tiny centroid frame serves both the
             # partition count and the assignment kernel (r14: the separate
             # cents.count() job + ivf_assign's internal collect were two
             # extra jobs per add)
-            arrays = _centroid_arrays(self.centroids())
-            n = len(arrays[0])
+            arrays = _centroid_arrays(self._genlog.scan(m, "centroids", "centroids"))
             assigned = ivf_assign(emb, arrays, self.id_col, self.vec_col)
             (
-                assigned.repartition(int(n), "centroid_id")
+                assigned.repartition(len(arrays[0]), "centroid_id")
                 .write.mode("append")
                 .partitionBy("centroid_id")
                 .parquet(live)
             )
-            try:
-                log.commit(dict(m), m["gen"])  # fence vs concurrent compact
-                return
-            except ConcurrentWriteError:
-                if attempt:
-                    raise
+
+        self._genlog.fenced_append(write)
 
     def compact(self) -> None:
         """Fold appended batches: rewrite the assignment table clustered by
         centroid_id so each bucket is few large files again (per-file open
         cost dominates probed scans otherwise), dropping exact-duplicate
-        rows (crash-replayed ``add`` batches). Commit = stage the next
-        ``assigned-g<N+1>`` dir, atomically publish the manifest pointing
-        at it, GC the old dir — the previous generation stays fully
-        readable through any crash (the old delete-then-rename swap had a
-        no-index window). Single-writer maintenance op; raises
+        rows (crash-replayed ``add`` batches). Commit is the generation
+        swap (``GenLog.swap``): the previous generation stays fully
+        readable through any crash. Single-writer maintenance op; raises
         ConcurrentWriteError if an add's fence commit lands mid-compact
         (retry)."""
-        log = self._log()
-        m = log.read()
-        live = self._live()
-        new = f"assigned-g{m['gen'] + 1:06d}"
-        n = self.centroids().count()  # tiny frame: C rows
-        (
-            self._pinned_reader(m, "assigned").parquet(live)
-            .distinct()
-            .repartition(int(n), "centroid_id")
-            .write.mode("overwrite")
-            .partitionBy("centroid_id")
-            .parquet(f"{self.path}/{new}")
+        self._genlog.swap(
+            lambda m, new: _fold_by_centroid(
+                self._genlog.scan(m, "assigned"),
+                self._genlog.scan(m, "centroids", "centroids").count(),
+                new,
+            ),
+            "assigned",
+            _IVF_DIRS,
         )
-        log.commit({**m, "live": new}, m["gen"])  # params etc. carry forward
-        self._gc_data_dirs(keep=new)
 
     def search(
         self,
@@ -1427,12 +1379,13 @@ class IVFPQIndex:
     """The PERSISTED IVF-PQ serving index — ivfpq_topk's one-shot fused scan
     materialized the way FAISS deploys it at billion scale:
 
-      <path>/centroids/        C rows (centroid_id, centroid_vec)
-      <path>/codebooks/        m*ksub rows (subspace, code, center_vec)
+      <path>/centroids-g<N>/   C rows (centroid_id, centroid_vec)
+      <path>/codebooks-g<N>/   m*ksub rows (subspace, code, center_vec)
       <path>/codes-g<N>/       (id, codes array) parquet PARTITIONED BY
                                centroid_id — the ~50x-compressed scan body
-      <path>/manifest-*.json   generation manifest: live codes dir + build
-                               params (m, ksub, residual, column names)
+      <path>/manifest-*.json   generation manifest: live codes dir, the
+                               centroid and codebook dirs + build params
+                               (m, ksub, residual, column names)
 
     Search reads ONLY the probed buckets' CODE column (PartitionFilters on
     centroid_id — the base vectors are never touched after build): at
@@ -1451,75 +1404,24 @@ class IVFPQIndex:
 
         self.spark = spark
         self.path = path
-        m = GenLog(spark, path).read()
-        if m["gen"] < 0:
-            raise FileNotFoundError(f"no committed index at {path} (build() first)")
-        p = m["params"]
+        self._genlog = GenLog(spark, path)
+        p = self._genlog.head()["params"]
         self.id_col = p["id_col"]
         self.vec_col = p["vec_col"]
         self.m = int(p["m"])
         self.ksub = int(p["ksub"])
         self.residual = bool(p["residual"])
 
-    # -- storage helpers ----------------------------------------------------
-    def _log(self):
-        from kadiyadb_spark.manifest import GenLog
-
-        return GenLog(self.spark, self.path)
-
-    def _live(self, at_gen: int | None = None) -> str:
-        return f"{self.path}/{self._log().read(at_gen)['live']}"
-
-    def _gc_data_dirs(self, keep: str) -> None:
-        """Keeps every dir a RETAINED manifest references — generation-pinned
-        searches (``search(at_gen=...)``) stay serviceable across a
-        concurrent compact's swap (same contract as MinHashIndex)."""
-        from kadiyadb_spark.fs import HadoopFS
-
-        fs = HadoopFS(self.spark, self.path)
-        log = self._log()
-        keep_set = (
-            log.live_dirs()
-            | log.live_dirs("centroids")
-            | log.live_dirs("codebooks")
-            | ({keep} if isinstance(keep, str) else set(keep))
-        )
-        for name in fs.listdir(self.path):
-            if (
-                name.startswith("codes")
-                or name.startswith("centroids-")
-                or name.startswith("codebooks-")
-            ) and name not in keep_set:
-                fs.delete(HadoopFS.join(self.path, name))
-
     def generations(self) -> list[int]:
         """Retained (pinnable) generation numbers, ascending."""
-        return self._log().retained()
+        return self._genlog.retained()
 
-    def _pinned_reader(self, m: dict, key: str):
-        """Reader pinned to the build-time schema recorded in the manifest
-        (skips the per-open schema-inference job — r14, guide §6); falls
-        back to inference for pre-r14 manifests."""
-        import json
-
-        from pyspark.sql import types as T
-
-        sj = m.get("schemas", {}).get(key)
-        return (
-            self.spark.read.schema(T.StructType.fromJson(json.loads(sj)))
-            if sj
-            else self.spark.read
-        )
-
-    def _codebooks(self, at_gen: int | None = None):
-        """[m, ksub, dsub] ndarray from the persisted codebook rows (the
-        generation's own dir; legacy indexes fall back to the unversioned
-        path)."""
+    def _codebooks(self, m_: dict):
+        """[m, ksub, dsub] ndarray from the codebook rows manifest ``m_``
+        names (legacy indexes fall back to the unversioned dir)."""
         import numpy as np
 
-        m_ = self._log().read(at_gen)
-        mdir = m_.get("codebooks", "codebooks")
-        rows = self._pinned_reader(m_, "codebooks").parquet(f"{self.path}/{mdir}").collect()
+        rows = self._genlog.scan(m_, "codebooks", "codebooks").collect()
         dsub = len(rows[0]["center_vec"])
         C = np.zeros((self.m, self.ksub, dsub))
         for r in rows:
@@ -1658,73 +1560,57 @@ class IVFPQIndex:
             },
             mm["gen"],
         )
-        idx = IVFPQIndex(spark, path)
-        idx._gc_data_dirs(keep={live, cdir, cbdir})
-        return idx
+        log.gc(_IVFPQ_DIRS)
+        return IVFPQIndex(spark, path)
 
     def centroids(self, at_gen: int | None = None) -> DataFrame:
-        m = self._log().read(at_gen)
-        mdir = m.get("centroids", "centroids")
-        return self._pinned_reader(m, "centroids").parquet(f"{self.path}/{mdir}")
+        return self._genlog.scan(self._genlog.head(at_gen), "centroids", "centroids")
 
     def codes(self, at_gen: int | None = None) -> DataFrame:
-        m = self._log().read(at_gen)
-        return self._pinned_reader(m, "codes").parquet(f"{self.path}/{m['live']}")
+        return self._genlog.scan(self._genlog.head(at_gen), "codes")
 
     def add(self, emb: DataFrame) -> None:
         """LSM append against the FROZEN centroids + codebooks (bucket
         membership and code meaning must stay stable; retrain = rebuild).
         Cost ∝ batch; compact folds the small files and drops replayed
-        duplicates. The append is FENCED by a same-manifest bump commit:
-        a compact that swapped generations mid-append makes the bump
-        collide (review finding — the rows would land in a superseded dir
-        and die with its GC), in which case the add retries once against
-        the new live dir; the abandoned rows are harmless duplicates in a
-        dir already scheduled for GC."""
-        from kadiyadb_spark.manifest import ConcurrentWriteError
+        duplicates. The append is fenced (``GenLog.fenced_append``): a
+        compact that swapped generations mid-append makes the add retry
+        once against the new live dir instead of leaving the rows in a
+        superseded dir that dies with its GC."""
 
-        for attempt in (0, 1):
-            log = self._log()
-            m = log.read()
-            live = self._live()
+        def write(m: dict, live: str) -> None:
             # ONE collect of the tiny centroid frame serves the partition
             # count and the encode kernel (was: count job + 2 collects)
-            cid, craw = _collect_matrix(self.centroids(), "centroid_id", "centroid_vec")
-            n = len(cid)
+            cid, craw = _collect_matrix(
+                self._genlog.scan(m, "centroids", "centroids"), "centroid_id", "centroid_vec"
+            )
             coded = IVFPQIndex._encode(
-                emb, (cid, craw), self._codebooks(), self.id_col, self.vec_col, self.residual
+                emb, (cid, craw), self._codebooks(m), self.id_col, self.vec_col,
+                self.residual,
             )
             (
-                coded.repartition(int(n), "centroid_id")
+                coded.repartition(len(cid), "centroid_id")
                 .write.mode("append")
                 .partitionBy("centroid_id")
                 .parquet(live)
             )
-            try:
-                log.commit(dict(m), m["gen"])  # fence vs concurrent compact
-                return
-            except ConcurrentWriteError:
-                if attempt:
-                    raise
+
+        self._genlog.fenced_append(write)
 
     def compact(self) -> None:
-        """Single-writer maintenance op; raises ConcurrentWriteError if an
-        add's fence commit lands mid-compact (retry)."""
-        log = self._log()
-        m = log.read()
-        live = self._live()
-        new = f"codes-g{m['gen'] + 1:06d}"
-        n = self.centroids().count()
-        (
-            self._pinned_reader(m, "codes").parquet(live)
-            .distinct()
-            .repartition(int(n), "centroid_id")
-            .write.mode("overwrite")
-            .partitionBy("centroid_id")
-            .parquet(f"{self.path}/{new}")
+        """Fold appended batches and drop replayed duplicates through the
+        generation swap shared with IVFIndex. Single-writer maintenance op;
+        raises ConcurrentWriteError if an add's fence commit lands
+        mid-compact (retry)."""
+        self._genlog.swap(
+            lambda m, new: _fold_by_centroid(
+                self._genlog.scan(m, "codes"),
+                self._genlog.scan(m, "centroids", "centroids").count(),
+                new,
+            ),
+            "codes",
+            _IVFPQ_DIRS,
         )
-        log.commit({**m, "live": new}, m["gen"])
-        self._gc_data_dirs(keep=new)
 
     def search(
         self,
@@ -1743,8 +1629,9 @@ class IVFPQIndex:
         import numpy as np
         import pandas as pd
 
-        C = self._codebooks(at_gen)
-        cents_df = self.centroids(at_gen)
+        m_ = self._genlog.head(at_gen)
+        C = self._codebooks(m_)
+        cents_df = self._genlog.scan(m_, "centroids", "centroids")
         c_ids, cn = _centroid_arrays(cents_df)
         cid2, craw = _collect_matrix(cents_df, "centroid_id", "centroid_vec")
         craw = craw[np.argsort(cid2)]
@@ -1808,7 +1695,7 @@ class IVFPQIndex:
                 if parts:
                     yield pd.concat(parts, ignore_index=True)
 
-        scan = self.codes(at_gen).filter(F.col("centroid_id").isin(union_ids))
+        scan = self._genlog.scan(m_, "codes").filter(F.col("centroid_id").isin(union_ids))
         scored = scan.select(id_col, "codes", "centroid_id").mapInPandas(
             adc, schema=f"{query_id_col} long, {id_col} long, _cos double"
         )

@@ -1269,14 +1269,17 @@ def bm25_score(
     # the token explode feeds THREE aggregations (doc lengths, the corpus
     # total and the query tf) — persist it or the whole tokenization chain
     # re-executes per consumer (the minhash_near_duplicates precedent).
-    # ``toks``: optional pre-exploded INNER (id_col, _tok) frame — pass a
+    # ``toks``: optional pre-exploded (id_col, _tok) frame — pass a
     # persisted one to share the corpus scan + tokenization with other
     # retrievers over the same corpus (rag_rrf_fusion shares it with
-    # hashed_bow); the caller owns its persist. Token-ROW semantics must
-    # match the inner explode exactly (no null-token marker rows: they
-    # would inflate dl and the corpus total T, shifting every score).
+    # hashed_bow); the caller owns its persist. An OUTER explode's
+    # null-token marker rows (token-less docs) are dropped here, so the
+    # token rows equal the inner explode's (a marker row would inflate dl
+    # and the corpus total T, shifting every score).
     if toks is not None:
-        toks = toks.select(F.col(id_col), F.col("_tok").alias("_term"))
+        toks = toks.filter(F.col("_tok").isNotNull()).select(
+            F.col(id_col), F.col("_tok").alias("_term")
+        )
     else:
         toks = docs.select(
             F.col(id_col), F.explode(tokens_expr(F.col(text_col))).alias("_term")

@@ -1,9 +1,7 @@
-"""Generation-manifest protocol for index/side-table storage.
+"""Generation-manifest protocol: the one commit primitive and store
+lifecycle behind every persisted store.
 
-The same commit primitive ``Database`` uses for the cube (database.py:
-_commit_manifest) factored for the auxiliary stores that previously relied
-on directory renames: the LSH/IVF index live-directory pointer and the
-streaming decisions log. A store directory holds
+A store directory holds
 
     <dir>/manifest-<gen 12-digit>.json     -- the committed states
     <dir>/<data dirs / segment dirs>       -- invisible until referenced
@@ -16,9 +14,24 @@ at ANY point leaves either the previous generation fully readable or the
 new one — never a half-state: staged data directories are pure orphans
 until a manifest names them.
 
-This is deliberately a dumb string->json keyed log: each store decides its
-own manifest fields (``live`` data-dir for indexes; ``segments``/``hwm``
-for the decisions log).
+Seven stores sit on ``GenLog``: the cube (``Database``, ``MANIFEST-``
+files, a ``segments`` map of epoch -> segment refs), ``MinHashIndex``,
+``IVFIndex``, ``IVFPQIndex`` and the shard writer (a ``live`` data dir
+plus generation-named side dirs such as ``centroids``/``codebooks``),
+and the streaming decisions and alerts logs (a ``segments`` list of
+``{batch, ref}``). Each store owns the fields of its manifest body; the
+lifecycle around them is shared and lives here:
+
+- ``head``: the latest (or a retained pinned) manifest, or
+  FileNotFoundError on an empty store;
+- ``retained_refs``: the data every retained manifest names — what GC
+  must keep so generation-pinned reads survive;
+- ``gc``: delete the store dir's data children no retained manifest
+  names;
+- ``scan``: read a data dir with the schema recorded at write time;
+- ``fenced_append``: append into the live dir, then bump-commit the
+  manifest the append resolved, so a concurrent swap cannot strand it;
+- ``swap``: compaction's stage-commit-GC generation swap.
 
 Reference parity: the reference's index persists via snapshot files +
 logfile replay (index/index.go:66-125); the generation manifest is that
@@ -29,13 +42,19 @@ from __future__ import annotations
 
 import json
 import threading
-from typing import Any
+from typing import Any, Callable, Iterable
 
 from py4j.protocol import Py4JJavaError
 
 from kadiyadb_spark.fs import HadoopFS
 
 _PREFIX = "manifest-"
+
+
+def _dir_refs(m: dict[str, Any]) -> set[str]:
+    """Data dirs a live-pointer manifest names: the live dir plus the
+    generation-named side dirs of the vector indexes."""
+    return {m[k] for k in ("live", "centroids", "codebooks") if k in m}
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -62,6 +81,7 @@ class GenLog:
     only names the last listing returned, so it is bounded by ``keep``."""
 
     def __init__(self, spark, path: str, keep: int = 3, prefix: str = _PREFIX):
+        self.spark = spark
         self.fs = HadoopFS(spark, path)
         self.path = path
         self.keep = keep
@@ -107,7 +127,7 @@ class GenLog:
         pin up to ``keep - 1`` generations behind the head — the snapshot
         contract that lets a long scan survive a concurrent compaction's
         generation swap (the store's data-dir GC retains every directory a
-        retained manifest references; see ``live_dirs``)."""
+        retained manifest references; see ``retained_refs``)."""
         listing = self._listing()
         if at_gen is None:
             if not listing:
@@ -152,20 +172,102 @@ class GenLog:
         any of them is a valid ``read(at_gen=...)`` pin."""
         return [int(n[len(self.prefix) : -len(".json")]) for n in self._names()]
 
-    def live_dirs(self, key: str = "live") -> set[str]:
-        """Data-dir names referenced by ANY retained manifest — the set a
-        store's GC must keep so pinned generation reads stay serviceable.
-        Manifests without ``key`` (e.g. segment-list logs) contribute
-        nothing."""
+    def head(self, at_gen: int | None = None) -> dict[str, Any]:
+        """``read(at_gen)``, raising FileNotFoundError when nothing is
+        committed yet instead of returning the empty ``{"gen": -1}``."""
+        m = self.read(at_gen)
+        if m["gen"] < 0:
+            raise FileNotFoundError(f"nothing committed at {self.path}")
+        return m
+
+    def retained_refs(
+        self, refs_of: Callable[[dict[str, Any]], Iterable[str]] = _dir_refs
+    ) -> set[str]:
+        """Union of ``refs_of(manifest)`` over every RETAINED manifest —
+        the data a store's GC must keep so pinned generation reads stay
+        serviceable. One listing; bodies come from the read cache."""
+        listing = self._listing()
         out: set[str] = set()
-        for g in self.retained():
+        for name in listing:
             try:
-                v = self.read(at_gen=g).get(key)
-            except ValueError:
+                m = self._load(name, listing)
+            except Py4JJavaError:
+                if name in self._listing():
+                    raise
                 continue  # rotated out since the listing
-            if v is not None:
-                out.add(v)
+            out.update(refs_of(m))
         return out
+
+    def gc(
+        self,
+        prefixes: tuple[str, ...],
+        refs_of: Callable[[dict[str, Any]], Iterable[str]] = _dir_refs,
+        spare: Callable[[str], bool] | None = None,
+    ) -> None:
+        """Delete the store dir's children named with one of ``prefixes``
+        that no retained manifest references (crash orphans and
+        generations older than the retention window) and that ``spare``
+        does not protect. Runs after a commit, so a crash here leaves
+        only orphans for the next GC."""
+        keep = self.retained_refs(refs_of)
+        for name in self.fs.listdir(self.path):
+            if (
+                name.startswith(prefixes)
+                and name not in keep
+                and not (spare and spare(name))
+            ):
+                self.fs.delete(HadoopFS.join(self.path, name))
+
+    def scan(self, m: dict[str, Any], key: str, ref: str = "live"):
+        """DataFrame over the data dir ``m[ref]`` read with the schema
+        ``m`` recorded for ``key`` at write time, so opening a store runs
+        no schema-inference job; manifests without a record fall back to
+        inference. A manifest without ``ref`` names the legacy
+        unversioned dir ``ref``."""
+        from pyspark.sql import types as T
+
+        sj = m.get("schemas", {}).get(key)
+        reader = self.spark.read
+        if sj:
+            reader = reader.schema(T.StructType.fromJson(json.loads(sj)))
+        return reader.parquet(HadoopFS.join(self.path, m.get(ref, ref)))
+
+    def fenced_append(self, write: Callable[[dict[str, Any], str], None]) -> None:
+        """Append into the live dir under a fence: resolve the head once,
+        ``write(m, live_path)``, then bump-commit that same manifest. A
+        swap that committed meanwhile makes the bump collide (the rows
+        went to a superseded dir that its GC will drop), and the append
+        retries once against the new live dir; the abandoned rows are
+        duplicates in a dir already scheduled for GC."""
+        for attempt in (0, 1):
+            m = self.head()
+            write(m, HadoopFS.join(self.path, m["live"]))
+            try:
+                self.commit(m, m["gen"])
+                return
+            except ConcurrentWriteError:
+                if attempt:
+                    raise
+
+    def swap(
+        self,
+        stage: Callable[[dict[str, Any], str], None],
+        live_prefix: str,
+        prefixes: tuple[str, ...],
+    ) -> None:
+        """Compaction's generation swap: resolve the head once,
+        ``stage(m, new_path)`` into a fresh ``<live_prefix>-g<N+1>`` dir,
+        publish ``{**m, "live": new}`` in one commit (every other field
+        carries forward), then ``gc(prefixes)``. A crash before the commit
+        leaves the previous generation fully readable; GC keeps every dir a
+        retained manifest names, so pinned readers survive the swap.
+        Single-writer; raises ConcurrentWriteError when a fenced append
+        commits mid-swap (retry)."""
+        m = self.head()
+        new = f"{live_prefix}-g{m['gen'] + 1:06d}"
+        stage(m, HadoopFS.join(self.path, new))
+        self.commit({**m, "live": new}, m["gen"])
+        self.gc(prefixes)
 
     def commit(self, m: dict[str, Any], prev_gen: int, keep: int | None = None) -> int:
         """Atomically publish generation ``prev_gen + 1``; returns it.

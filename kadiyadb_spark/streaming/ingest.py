@@ -467,9 +467,10 @@ def stream_index_dedup(
             )
         )
 
+    log = GenLog(docs.sparkSession, decisions_dir)
+
     def _gate(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
-        log = GenLog(spark, decisions_dir)
         m = log.read()
         hwm = int(m.get("hwm", -1))
         add_hwm = int(m.get("add_hwm", -1))
@@ -532,6 +533,11 @@ def stream_index_dedup(
     return writer.start()
 
 
+def _segment_refs(m: dict) -> list[str]:
+    """Segment refs a decisions/alerts log manifest names."""
+    return [s["ref"] for s in m.get("segments", [])]
+
+
 def compact_decisions(spark, decisions_dir: str) -> None:
     """Fold a ``stream_index_dedup`` decisions log: one segment accrues per
     micro-batch, and a long-running stream leaves thousands of small
@@ -541,8 +547,6 @@ def compact_decisions(spark, decisions_dir: str) -> None:
     segment dirs. Same single-writer maintenance contract as
     ``MinHashIndex.compact`` — run it from the maintenance cadence, not
     inside the stream."""
-    from pyspark.sql import functions as F  # noqa: F401 (parity w/ gate imports)
-
     from kadiyadb_spark.fs import HadoopFS
     from kadiyadb_spark.manifest import GenLog
 
@@ -573,13 +577,8 @@ def compact_decisions(spark, decisions_dir: str) -> None:
     # keep=3), so a read_decisions(at_gen=...) pinned before the fold — or
     # an unpinned reader that resolved the pre-fold manifest — keeps its
     # segments through the swap (same contract as the index GCs).
-    keep = {folded}
-    for g in log.retained():
-        keep.update(s["ref"] for s in log.read(at_gen=g).get("segments", []))
-    fs = HadoopFS(spark, decisions_dir)
-    for name in fs.listdir(decisions_dir):
-        if not name.startswith("seg-") or name in keep:
-            continue
+
+    def _staged(name: str) -> bool:
         # Per-batch segments: GC ONLY those the fold actually covered
         # (batch <= hi). A LIVE stream may have STAGED seg-<batch> for
         # hwm+1 without committing yet — the quiescence check above cannot
@@ -588,11 +587,12 @@ def compact_decisions(spark, decisions_dir: str) -> None:
         # r12). Old folded segments (seg-folded-*) have no staging race —
         # folds only exist at commit time — so unreferenced ones delete as
         # before; other unparseable seg- names are left alone.
-        if not name.startswith("seg-folded-"):
-            tail = name[len("seg-"):]
-            if not tail.isdigit() or int(tail) > hi:
-                continue
-        fs.delete(HadoopFS.join(decisions_dir, name))
+        if name.startswith("seg-folded-"):
+            return False
+        tail = name[len("seg-"):]
+        return not tail.isdigit() or int(tail) > hi
+
+    log.gc(("seg-",), _segment_refs, spare=_staged)
 
 
 def read_decisions(spark, decisions_dir: str, at_gen: int | None = None) -> DataFrame:
@@ -671,9 +671,9 @@ def stream_alerts(
     from kadiyadb_spark.manifest import GenLog
     from kadiyadb_spark.query import series_alerts
 
+    log = GenLog(events.sparkSession, alerts_dir)
+
     def _eval(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        log = GenLog(spark, alerts_dir)
         m = log.read()
         if batch_id <= int(m.get("hwm", -1)):
             return  # replay: state already reflects this batch
@@ -701,13 +701,7 @@ def stream_alerts(
         log.commit(m, m["gen"])
         # GC superseded state segments not referenced by any RETAINED
         # manifest (same contract as compact_decisions)
-        keep = set()
-        for g in log.retained():
-            keep.update(s["ref"] for s in log.read(at_gen=g).get("segments", []))
-        fs = HadoopFS(spark, alerts_dir)
-        for name in fs.listdir(alerts_dir):
-            if name.startswith("seg-") and name not in keep:
-                fs.delete(HadoopFS.join(alerts_dir, name))
+        log.gc(("seg-",), _segment_refs)
 
     writer = events.writeStream.foreachBatch(_eval).option(
         "checkpointLocation", checkpoint

@@ -880,7 +880,7 @@ def test_minhash_index_add_matches_one_shot_build(spark, tmp_path):
 
     def live_files():
         return len(glob.glob(str(tmp_path / "inc" / "**" / "*.parquet"), recursive=True)), len(
-            glob.glob(f"{inc._live()}/**/*.parquet", recursive=True)
+            glob.glob(f"{inc.path}/{inc._genlog.head()['live']}/**/*.parquet", recursive=True)
         )
 
     _, files_before = live_files()
@@ -919,26 +919,67 @@ def test_ivf_index_add_matches_one_shot_build(spark, tmp_path):
     assert got2 == want
 
 
-def test_index_compact_crash_leaves_previous_generation_readable(spark, tmp_path):
+INDEX_STORES = ["MinHashIndex", "IVFIndex", "IVFPQIndex"]
+
+
+def _index_store(spark, tmp_path, kind):
+    """A <= 20-row persisted index of ``kind``: (index, a batch to add whose
+    id 100 the index lacks, probe(index) -> its answers to a fixed query,
+    reopen() -> a second handle on the same store)."""
+    path = str(tmp_path / kind)
+    if kind == "MinHashIndex":
+        docs = spark.createDataFrame(
+            [Row(doc_id=i, text=f"document number {i} with shared words quick brown fox {i % 3}")
+             for i in range(8)]
+        )
+        idx = D.MinHashIndex.build(docs, path, num_hashes=8, bands=4)
+        batch = spark.createDataFrame(
+            [Row(doc_id=100, text="a late document with wholly novel vocabulary")]
+        )
+        q = spark.createDataFrame(
+            [Row(doc_id=99, text="document number 0 with shared words quick brown fox 0")]
+        )
+        return (idx, batch,
+                lambda i: sorted((r.new_id, r.index_id) for r in i.query(q, min_est=0.3).collect()),
+                lambda: D.MinHashIndex.open(spark, path))
+    emb = spark.createDataFrame(
+        [Row(vec_id=i, embedding=[float(i % 5), float(i % 2), 1.0, float(i % 3)])
+         for i in range(16)]
+    )
+    batch = spark.createDataFrame([Row(vec_id=100, embedding=[9.0, 1.0, 1.0, 2.0])])
+    q = spark.createDataFrame([Row(query_id=1, query_vec=[1.0, 0.0, 0.5, 0.0])])
+    if kind == "IVFIndex":
+        idx = SIM.IVFIndex.build(emb, path, num_centroids=2)
+        reopen = lambda: SIM.IVFIndex.open(spark, path)  # noqa: E731
+    else:
+        idx = SIM.IVFPQIndex.build(emb, path, num_centroids=2, m=2, ksub=4)
+        reopen = lambda: SIM.IVFPQIndex(spark, path)  # noqa: E731
+    return (idx, batch,
+            lambda i: [tuple(r) for r in i.search(q, k=3).orderBy("rank").collect()],
+            reopen)
+
+
+def _stored_ids(idx) -> set:
+    """Ids in the index's head generation."""
+    frame = {"MinHashIndex": "banded", "IVFIndex": "assigned", "IVFPQIndex": "codes"}
+    rows = getattr(idx, frame[type(idx).__name__])().select(idx.id_col).distinct()
+    return {r[0] for r in rows.collect()}
+
+
+@pytest.mark.parametrize("kind", INDEX_STORES)
+def test_index_compact_crash_leaves_previous_generation_readable(spark, tmp_path, kind):
     """A crash during compact — specifically between staging the new data
     dir and the manifest commit — must leave the previous generation fully
     queryable (the old delete-then-rename swap had a window with NO index)."""
-    from kadiyadb_spark.functions import similarity as SIM
-    from kadiyadb_spark.functions.dedup import MinHashIndex
     from kadiyadb_spark.manifest import GenLog
 
-    docs = spark.createDataFrame(
-        [Row(doc_id=i, text=f"document number {i} with shared words quick brown fox {i % 3}")
-         for i in range(8)]
-    )
-    idx = MinHashIndex.build(docs, str(tmp_path / "mh"), num_hashes=8, bands=4)
-    idx.add(docs.filter("doc_id < 2"))
-    batch = spark.createDataFrame([Row(doc_id=99, text="document number 0 with shared words quick brown fox 0")])
-    want = {(r.new_id, r.index_id) for r in idx.query(batch, min_est=0.3).collect()}
+    idx, batch, probe, _ = _index_store(spark, tmp_path, kind)
+    idx.add(batch)
+    want = probe(idx)
 
     real_commit = GenLog.commit
 
-    def exploding_commit(self, m, prev_gen):
+    def exploding_commit(self, m, prev_gen, keep=None):
         raise RuntimeError("injected crash before manifest commit")
 
     GenLog.commit = exploding_commit
@@ -948,28 +989,44 @@ def test_index_compact_crash_leaves_previous_generation_readable(spark, tmp_path
     finally:
         GenLog.commit = real_commit
     # previous generation intact: same answers, no missing-index window
-    got = {(r.new_id, r.index_id) for r in idx.query(batch, min_est=0.3).collect()}
-    assert got == want
+    assert probe(idx) == want
     # and a subsequent (non-crashing) compact recovers and still answers
     idx.compact()
-    assert {(r.new_id, r.index_id) for r in idx.query(batch, min_est=0.3).collect()} == want
+    assert probe(idx) == want and 100 in _stored_ids(idx)
 
-    # same contract for IVFIndex
-    emb = spark.createDataFrame(
-        [Row(vec_id=i, embedding=[float(i % 5), float(i % 2), 1.0]) for i in range(32)]
-    )
-    ivf = SIM.IVFIndex.build(emb, str(tmp_path / "ivf"), num_centroids=4)
-    qs = spark.createDataFrame([Row(query_id=1, query_vec=[1.0, 0.0, 0.0])])
-    want_s = [tuple(r) for r in ivf.search(qs, k=3).orderBy("rank").collect()]
-    GenLog.commit = exploding_commit
+
+@pytest.mark.parametrize("kind", INDEX_STORES)
+def test_index_add_fenced_against_concurrent_compact(spark, tmp_path, kind):
+    """Compact-during-append race: another handle compacts right after an
+    add resolves its live generation and before it appends, so the
+    compaction stages and commits a generation WITHOUT the batch. The
+    add's fence (a bump commit of the manifest it resolved) then collides
+    and the add retries against the new live dir; an unfenced add leaves
+    the batch only in the superseded dir, invisible at head and deleted by
+    the next compaction's GC."""
+    from kadiyadb_spark.manifest import GenLog
+
+    idx, batch, _, reopen = _index_store(spark, tmp_path, kind)
+    other = reopen()
+    fired = []
+    real_read = GenLog.read
+
+    def read_then_compact(self, at_gen=None):
+        m = real_read(self, at_gen)
+        if not fired:
+            fired.append(m["gen"])
+            other.compact()  # lands between the add's resolve and its append
+        return m
+
+    GenLog.read = read_then_compact
     try:
-        with pytest.raises(RuntimeError):
-            ivf.compact()
+        idx.add(batch)
     finally:
-        GenLog.commit = real_commit
-    assert [tuple(r) for r in ivf.search(qs, k=3).orderBy("rank").collect()] == want_s
-    ivf.compact()
-    assert [tuple(r) for r in ivf.search(qs, k=3).orderBy("rank").collect()] == want_s
+        GenLog.read = real_read
+    assert fired
+    assert 100 in _stored_ids(idx)
+    idx.compact()  # GC drops every dir no retained manifest names
+    assert 100 in _stored_ids(idx)
 
 
 def test_minhash_compact_dedups_replayed_adds(spark, tmp_path):
@@ -1016,11 +1073,11 @@ def test_minhash_pinned_generation_survives_compact(spark, tmp_path):
     )
     idx = MinHashIndex.build(docs, str(tmp_path / "mh"), num_hashes=8, bands=4)
     g0 = idx.generations()[-1]
-    idx.add(batch)
+    idx.add(batch)  # fenced: bump-commits g0's manifest as g0 + 1
     pre_compact = idx.banded().count()  # g0's dir, adds included
     # a long probe job pins g0, then a maintenance cycle lands mid-scan
     idx.compact()
-    assert idx.generations() == [g0, g0 + 1]
+    assert idx.generations() == [g0, g0 + 1, g0 + 2]
     # the pinned read serves EXACTLY the directory state the reader resolved
     # before the swap (the pin is a GC guard over that dir)
     assert idx.banded(at_gen=g0).count() == pre_compact
@@ -1109,40 +1166,6 @@ def test_index_rebuild_keeps_pinned_generation_consistent(spark, tmp_path):
     assert all(vid >= 200 for vid, _ in v2)
     pinned = [(r.vec_id, r.rank) for r in idx2.search(queries, k=3, nprobe=4, at_gen=g1).collect()]
     assert pinned == v1  # old gen = old centroids + old codebooks + old codes
-
-
-def test_ivf_index_add_fenced_against_concurrent_compact(spark, tmp_path):
-    """The add fence (r13): add bump-commits the unchanged manifest, so a
-    compact that swapped generations mid-append collides and add retries
-    against the new live dir instead of losing the batch to the
-    superseded dir's GC. Simulated by compacting between add's manifest
-    read and its commit via a wrapped GenLog."""
-    emb = spark.createDataFrame(
-        [Row(vec_id=i, embedding=[float(i % 5), 1.0]) for i in range(10)]
-    )
-    idx = SIM.IVFIndex.build(emb, str(tmp_path / "fenced"), num_centroids=2)
-
-    real_log = idx._log
-    state = {"fired": False}
-
-    class Hooked:
-        def __getattr__(self, a):
-            return getattr(real_log(), a)
-
-        def commit(self, m, prev_gen, keep=None):
-            if not state["fired"]:
-                state["fired"] = True
-                idx2 = SIM.IVFIndex(spark, idx.path, idx.id_col, idx.vec_col)
-                idx2.compact()  # swaps the generation first
-            return real_log().commit(m, prev_gen, keep)
-
-    idx._log = lambda: Hooked()
-    late = spark.createDataFrame([Row(vec_id=100, embedding=[9.0, 1.0])])
-    idx.add(late)  # first commit collides; retry lands in the new live dir
-    idx._log = real_log
-    q = spark.createDataFrame([Row(query_id=0, query_vec=[9.0, 1.0])])
-    got = {r.vec_id for r in idx.search(q, k=1, nprobe=2).collect()}
-    assert got == {100}
 
 
 def test_span_dedup_keeps_first_global_occurrence(spark):
@@ -2168,6 +2191,18 @@ def test_bm25_score_golden_vs_python(spark):
 
     top1 = TX.bm25_score(_docs(spark, texts), ["apple", "banana"], k=1).collect()
     assert len(top1) == 1 and top1[0].rank == 1
+
+    # a shared OUTER-exploded token frame (the rag_rrf_fusion shape): the
+    # empty-text doc's null-token marker row must not count toward dl or T
+    with_empty = _docs(spark, [*texts, ""])
+    outer = with_empty.select(
+        "doc_id", F.explode_outer(TX.tokens_expr(F.col("text"))).alias("_tok")
+    )
+    assert outer.filter(F.col("_tok").isNull()).count() == 1
+    terms = ["apple", "banana", "missing"]
+    shared = TX.bm25_score(with_empty, terms, toks=outer).collect()
+    own = TX.bm25_score(with_empty, terms).collect()
+    assert sorted(map(tuple, shared)) == sorted(map(tuple, own))
 
     with pytest.raises(ValueError):
         TX.bm25_score(_docs(spark, texts), [])

@@ -58,14 +58,10 @@ def test_driver_mem_garbage_cpus_falls_back_to_host_cores():
 def test_pydaemon_importable_and_wraps_stock_manager():
     # The daemon module must import cleanly (a failure here would take down
     # EVERY Python worker) and re-export pyspark.daemon.manager unchanged.
-    # Both the top-level module (what sessions configure since r14) and the
-    # back-compat package alias must resolve to the stock manager.
     mod = importlib.import_module("kdb_pydaemon")
-    alias = importlib.import_module("kadiyadb_spark.pydaemon")
     from pyspark.daemon import manager as stock_manager
 
     assert mod.manager is stock_manager
-    assert alias.manager is stock_manager
 
 
 def test_pydaemon_is_top_level_module():

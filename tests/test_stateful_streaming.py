@@ -349,3 +349,24 @@ def test_compact_decisions_spares_staged_uncommitted_segment(spark, tmp_path):
     # manifests that still reference them — the pinned-read contract)
     # committed view folds to the 2 committed rows; staged stays invisible
     assert read_decisions(spark, d).count() == 2
+
+
+def test_stage_sessionize_batches_stages_an_empty_batch(spark, tmp_path):
+    """The sessionize entry's staging writes no ``_b=a`` partition when
+    batch a has no rows (every event within the last 4 h); it must still
+    stage two ordered batch files, the first schema-only."""
+    import os
+
+    import __spark_entry__ as entry
+
+    sf = tmp_path / "sf"
+    spark.createDataFrame(
+        [Row(ts=BASE + i * SEC, user_id=i % 2, value=1.0) for i in range(4)], SRC_SCHEMA
+    ).coalesce(1).write.parquet(str(sf / "events.parquet"))
+    entry._stage_sessionize_batches(spark, str(sf), str(tmp_path))
+    a = spark.read.parquet(str(tmp_path / "events" / "a.parquet"))
+    b = spark.read.parquet(str(tmp_path / "events" / "b.parquet"))
+    assert a.count() == 0 and a.columns == SRC_SCHEMA.names
+    assert b.count() == 4
+    a_t, b_t = (os.path.getmtime(tmp_path / "events" / f"{n}.parquet") for n in "ab")
+    assert a_t < b_t
