@@ -159,15 +159,18 @@ def main() -> None:
                 {"metric": "total_query_wall_seconds", "value": min_total,
                  "unit": "sec", "queries": merged, "sf": sf,
                  "n_queries": len(merged),
-                 # Reader note (r08 phase profile, SURVEY §14/§15.5): the
-                 # Structured Streaming entries pay a FIXED ~5-7 s/micro-batch
-                 # of trigger/commit/offset-log machinery at toy batch sizes —
-                 # streaming_index_dedup (~18 s) and streaming_join (~10 s)
-                 # are ~70% that fixed cost, not per-row work; it amortizes
-                 # to noise at production batch sizes. Round-over-round
-                 # deltas on streaming_* entries are therefore host-timing
-                 # noise unless they exceed ~2x.
-                 "notes": {"streaming_fixed_overhead_sec_per_batch": 6.0,
+                 # Reader note: the Structured Streaming entries pay a fixed
+                 # per-trigger cost of trigger/commit/offset-log machinery
+                 # around the foreachBatch sink. Measured, not assumed
+                 # (perfbench/README.md "Measured streaming overhead": traced
+                 # ingest, 4 cpus, 10k events per trigger): ~75 ms per
+                 # trigger around the sink, 0.52 s per whole trigger.
+                 # Round-over-round deltas on streaming_* entries are
+                 # host-timing noise unless they exceed ~2x.
+                 "notes": {"streaming_fixed_overhead_sec_per_batch": 0.075,
+                           "streaming_trigger_sec_per_10k_events": 0.52,
+                           "streaming_overhead_source":
+                               "perfbench/README.md#measured-streaming-overhead (4 cpus)",
                            "git_head": git_head,
                            "cpus": cpus,
                            "rule": "per-query min across same-HEAD same-cpus runs",

@@ -14,7 +14,8 @@ This package reproduces those semantics Spark-first:
 - catalog.Params          O13: params.json validation (database.go:128-137)
 - database.Database       O10/O12/O13: persisted parquet cube partitioned by epoch;
                           Database.expire is O11 (drop epochs older than a cutoff)
-- streaming.ingest        O1 streaming form: readStream -> windowed agg -> merge sink
+- streaming.ingest        O1 streaming form: raw, update-mode and append-mode cube
+                          sinks over track_batch's event -> cube-row core
 - streaming.stateful      applyInPandasWithState session assembly
 - functions.*             north-star ops: dedup (incl. clustering), similarity
                           (incl. persisted IVFIndex), text analysis, multimodal,

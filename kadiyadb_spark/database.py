@@ -51,6 +51,7 @@ from __future__ import annotations
 import functools
 import json
 import uuid
+from typing import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -58,7 +59,7 @@ from pyspark.sql import functions as F
 from kadiyadb_spark import schema as S
 from kadiyadb_spark.catalog import Params
 from kadiyadb_spark.fs import HadoopFS
-from kadiyadb_spark.ingest import fold_aggs, track_batch
+from kadiyadb_spark.ingest import _prefix_fanout, fold_aggs, track_batch
 from kadiyadb_spark.manifest import ConcurrentWriteError, GenLog
 from kadiyadb_spark.query import fetch as fetch_df
 
@@ -212,36 +213,58 @@ class Database:
         m.setdefault("stats", {})
         return m
 
-    def _commit_manifest(self, m: dict, prev_gen: int, keep: int = _KEEP_MANIFESTS) -> None:
-        """Atomically publish the next generation via manifest.GenLog (one
-        shared commit primitive; the rename IS the commit — before it,
-        nothing referenced the staged segments). This method owns only the
-        CUBE-shaped normalization of the manifest body.
+    def _commit_manifest(
+        self,
+        m: dict,
+        refs: "dict[int, str] | None" = None,
+        stats: "dict[str, dict] | None" = None,
+        drop: "Iterable[int]" = (),
+        hwm: "dict[str, int] | None" = None,
+        keep: int = _KEEP_MANIFESTS,
+    ) -> None:
+        """THE cube mutation: apply one edit to manifest ``m`` — the body
+        the mutation read (and, for a rewrite, folded over) — and publish it
+        as generation ``m["gen"] + 1`` via manifest.GenLog (the rename IS
+        the commit; before it, nothing referenced the staged segments).
 
-        ``keep`` bounds the retained snapshot window (old manifests are pure
+        The edit: every ref of the ``drop`` epochs (replaced or expired) is
+        removed, each ``refs`` {epoch: ref} is appended, and ``stats`` /
+        ``hwm`` merge over m's; data-skipping stats ride the same atomic
+        swap as the refs they describe, so they can never disagree with the
+        data, and entries for de-referenced refs are dropped. ``keep``
+        bounds the retained snapshot window (old manifests are pure
         metadata, bytes-sized); data-DELETING commits pass keep=1 so the
-        deleted data is not resurrectable through an older snapshot."""
-        segments = {str(e): refs for e, refs in sorted(m["segments"].items()) if refs}
-        live = {ref for refs in segments.values() for ref in refs}
+        deleted data is not resurrectable through an older snapshot.
+
+        This is the only place cube data is deleted. Under rotation GC
+        (code-review r12) it deletes the refs retained before this commit
+        that no manifest retained after it references — a segment
+        de-referenced at commit g is freed once its last retaining manifest
+        rotates out, instead of leaking until vacuum(). With
+        ``rotation_gc=False`` only m's own refs are candidates, so a keep=1
+        commit (expire) still frees the data it drops at once while keep=3
+        commits free nothing. A crash between the commit and the deletes
+        leaves orphans — vacuum's job — never dangling refs."""
+        drop = set(drop)
+        edited = {e: list(rs) for e, rs in m["segments"].items() if e not in drop}
+        for e, ref in (refs or {}).items():
+            edited.setdefault(e, []).append(ref)
+        segments = {str(e): rs for e, rs in sorted(edited.items()) if rs}
+        live = {ref for rs in segments.values() for ref in rs}
         body = {
             "segments": segments,
-            "hwm": m.get("hwm", {}),
-            # data-skipping stats ride the same atomic swap as the refs they
-            # describe, so they can never disagree with the data; entries for
-            # de-referenced segments are dropped here.
-            "stats": {r: v for r, v in m.get("stats", {}).items() if r in live},
+            "hwm": {**m.get("hwm", {}), **(hwm or {})},
+            "stats": {
+                r: v
+                for r, v in {**m.get("stats", {}), **(stats or {})}.items()
+                if r in live
+            },
         }
-        # Rotation GC (code-review r12): _gc keeps any ref a RETAINED
-        # manifest still references, and GenLog rotation deletes only the
-        # JSON — so a segment de-referenced at commit g used to stay on
-        # disk FOREVER once manifests g-1/g-2 rotated out (only vacuum()
-        # reclaimed it; an update-mode merge_replace-per-batch stream would
-        # leak unboundedly). Delete the refs retained before THIS commit
-        # that no manifest retained after it references. A crash between
-        # the commit and the deletes leaves orphans — vacuum's job — never
-        # dangling refs.
-        doomed = self._genlog.retained_refs(_seg_refs) - live if self.rotation_gc else set()
-        self._genlog.commit(body, prev_gen, keep=keep)
+        before = (
+            self._genlog.retained_refs(_seg_refs) if self.rotation_gc else set(_seg_refs(m))
+        )
+        doomed = before - live
+        self._genlog.commit(body, m["gen"], keep=keep)
         if doomed:
             for ref in doomed - self._genlog.retained_refs(_seg_refs):
                 self.fs.delete(HadoopFS.join(self.cube_path, ref))
@@ -303,56 +326,65 @@ class Database:
             return {}, {}
         if not collect_stats:
             return refs, {}
-        by_epoch = self._seg_stats(seg_root)
-        return refs, {ref: by_epoch.get(e) for e, ref in refs.items()}
+        return refs, self._seg_stats(list(refs.values()))
 
-    def _seg_stats(self, seg_root: str) -> dict[int, dict[str, list[str] | None]]:
-        """Per-epoch distinct dimension values of a just-written segment,
-        for EVERY field column — the manifest's data-skipping stats, the
-        Spark-native form of the reference's index Find narrowing reads to
-        matching series (index/node.go:126-198). Computed from the WRITTEN
-        files (a column-pruned scan of the batch-sized segment, never a
-        recompute of the upstream plan): one scan explodes the (level,
-        value) pairs, so all dimensions cost one aggregation. A (epoch,
-        level) with more than ``_STATS_MAX`` distinct values records None
-        ("too wide to skip on"); the rank cap bounds what reaches the
-        driver at MAX+1 rows per (epoch, level) no matter the dimension's
-        cardinality."""
+    def _seg_stats(self, refs: list[str]) -> dict[str, dict[str, list[str] | None]]:
+        """THE data-skipping stats census: per segment ref, the distinct
+        dimension values of EVERY field column — the Spark-native form of
+        the reference's index Find narrowing reads to matching series
+        (index/node.go:126-198). ``_write_segment`` runs it on the segment
+        it just wrote; ``refresh_stats`` on the refs the streaming sinks
+        committed without stats.
+
+        ONE Spark job covers all ``refs``: their leaf dirs scan together
+        (column-pruned, from the WRITTEN files — never a recompute of the
+        upstream plan) and each row is attributed back to its ref via
+        ``input_file_name()`` (the ``segs/<seg>/epoch_p=<E>`` ref IS a
+        substring of the file path); one explode of the (level, value)
+        pairs makes all dimensions cost one aggregation. A (ref, level)
+        with more than ``_STATS_MAX`` distinct values records None ("too
+        wide to skip on"); the rank cap bounds what reaches the driver at
+        MAX+1 rows per (ref, level) no matter the dimension's cardinality.
+        Every ref gets an entry — an empty one when it holds no non-null
+        field value (skips nothing; pruning acts only on positive
+        evidence)."""
         fcols = S.field_cols(self.max_depth)
         if not fcols:
             return {}
         from pyspark.sql import Window
-        from pyspark.sql import types as T
 
-        # pinned schema (same reasoning as _read_fold) + the epoch_p
-        # partition column this root-level read discovers from dir names
-        seg_schema = T.StructType(
-            [*S.cube_schema(self.max_depth).fields, T.StructField("epoch_p", T.LongType())]
-        )
+        # pinned schema (same reasoning as _read_fold)
         pairs = (
-            self.spark.read.schema(seg_schema).parquet(seg_root)
-            .select("epoch_p", F.posexplode(F.array(*[F.col(c) for c in fcols])).alias("_i", "_v"))
+            self.spark.read.schema(S.cube_schema(self.max_depth))
+            .parquet(*[HadoopFS.join(self.cube_path, ref) for ref in refs])
+            .select(
+                F.regexp_extract(
+                    F.input_file_name(), r"(segs/[^/]+/epoch_p=[^/]+)/", 1
+                ).alias("_ref"),
+                F.posexplode(F.array(*[F.col(c) for c in fcols])).alias("_i", "_v"),
+            )
             .where(F.col("_v").isNotNull())
         )
         # ONE shuffle, spill-safe: the window's sort-based dense_rank caps
-        # each (epoch, level) at MAX+1 DISTINCT values BEFORE any aggregation
+        # each (ref, level) at MAX+1 DISTINCT values BEFORE any aggregation
         # buffer exists (sorts spill to disk; an unbounded collect_set buffer
         # cannot — a million-cardinality level would OOM the final agg task),
         # and the groupBy rides the window's partitioning with no second
         # exchange. collect_set then holds <= MAX+1 values per group.
-        w = Window.partitionBy("epoch_p", "_i").orderBy("_v")
+        w = Window.partitionBy("_ref", "_i").orderBy("_v")
         rows = (
             pairs.withColumn("_dr", F.dense_rank().over(w))
             .where(F.col("_dr") <= _STATS_MAX + 1)
-            .groupBy("epoch_p", "_i")
+            .groupBy("_ref", "_i")
             .agg(F.sort_array(F.collect_set("_v")).alias("vals"))
             .collect()
         )
-        out: dict[int, dict[str, list[str] | None]] = {}
+        out: dict[str, dict[str, list[str] | None]] = {ref: {} for ref in refs}
         for r in rows:
-            e, col = int(r["epoch_p"]), S.field_col(int(r["_i"]) + 1)
             vals = list(r["vals"])
-            out.setdefault(e, {})[col] = vals if len(vals) <= _STATS_MAX else None
+            out.setdefault(r["_ref"], {})[S.field_col(int(r["_i"]) + 1)] = (
+                vals if len(vals) <= _STATS_MAX else None
+            )
         return out
 
     def _segment_paths(
@@ -453,38 +485,36 @@ class Database:
             if not pred_sets or _keep(ref)
         ]
 
-    def _gc(self, refs: list[str]) -> None:
-        """Drop de-referenced segment leaf directories. Runs AFTER the
-        manifest commit, so a crash leaves only orphans (vacuum's job),
-        never dangling references. A ref still reachable from a RETAINED
-        older manifest is kept so pinned snapshot reads stay consistent;
-        it is collected when that generation rotates out (a few tiny JSON
-        reads per GC — pure metadata)."""
-        live = self._genlog.retained_refs(_seg_refs)
-        for ref in set(refs) - live:
-            self.fs.delete(HadoopFS.join(self.cube_path, ref))
+    def _orphans(self, live: set[str]) -> list[str]:
+        """Segment data under ``cube/segs`` that no ref in ``live`` names —
+        the one walk behind ``vacuum()`` and ``fsck()["orphans"]``: a
+        segment dir none of whose leaves is live goes whole, a live
+        segment's unreferenced epoch leaves go one by one. One listing of
+        the segs tree plus one per live segment dir."""
+        live_roots = {ref.rsplit("/", 1)[0] for ref in live}
+        segs_root = HadoopFS.join(self.cube_path, "segs")
+        out = []
+        for seg in self.fs.listdir(segs_root):
+            root = f"segs/{seg}"
+            if root not in live_roots:
+                out.append(root)
+                continue
+            out.extend(
+                f"{root}/{child}"
+                for child in self.fs.listdir(HadoopFS.join(segs_root, seg))
+                if child.startswith("epoch_p=") and f"{root}/{child}" not in live
+            )
+        return sorted(out)
 
     def vacuum(self) -> list[str]:
         """Remove segment data not referenced by ANY retained manifest —
         leftovers of writes that crashed before their commit. Safe under the
         single-writer assumption (an in-flight writer's staged segments are
         unreferenced by definition; don't vacuum concurrently with writes)."""
-        live = self._genlog.retained_refs(_seg_refs)
-        live_roots = {ref.split("/")[1] for ref in live}
-        removed = []
-        segs_root = HadoopFS.join(self.cube_path, "segs")
-        for seg in self.fs.listdir(segs_root):
-            seg_path = HadoopFS.join(segs_root, seg)
-            if seg not in live_roots:
-                self.fs.delete(seg_path)
-                removed.append(f"segs/{seg}")
-                continue
-            for child in self.fs.listdir(seg_path):
-                rel = f"segs/{seg}/{child}"
-                if child.startswith("epoch_p=") and rel not in live:
-                    self.fs.delete(HadoopFS.join(seg_path, child))
-                    removed.append(rel)
-        return sorted(removed)
+        removed = self._orphans(self._genlog.retained_refs(_seg_refs))
+        for rel in removed:
+            self.fs.delete(HadoopFS.join(self.cube_path, rel))
+        return removed
 
     # -- read path -------------------------------------------------------------
     def cube(
@@ -518,9 +548,10 @@ class Database:
         travel): because commits are whole-manifest swaps and segments are
         immutable, every kept manifest is a consistent point-in-time view —
         a long-running job can pin the generation it started on and never
-        see a torn mix of old and new data. GC only deletes segments
-        dereferenced by the CURRENT manifest, so pinned reads must stay
-        within the retained window (``generations()``)."""
+        see a torn mix of old and new data. GC deletes a segment only once
+        no retained manifest references it (``_commit_manifest``; expire
+        collapses the window to its own generation), so pinned reads must
+        stay within the retained window (``generations()``)."""
         return self._read_fold(
             self._scan_paths(
                 from_epoch, to_epoch, at_gen, prune_pattern, epochs, prune_patterns
@@ -669,13 +700,8 @@ class Database:
             value_dp=p.value_dp,
         )
         refs, stats = self._write_segment(delta)
-        if not refs:
-            return
-        m = self._manifest()
-        for e, ref in refs.items():
-            m["segments"].setdefault(e, []).append(ref)
-        m["stats"].update(stats)
-        self._commit_manifest(m, m["gen"])
+        if refs:
+            self._commit_manifest(self._manifest(), refs, stats)
 
     # -- streaming idempotency ------------------------------------------------
     def applied_batch_hwm(self, stream_id: str) -> int:
@@ -691,7 +717,6 @@ class Database:
         ts_col: str = "ts",
         total_col: str = "value",
         count_col: str | None = None,
-        collect_stats: bool = False,
     ) -> bool:
         """Increment-merge one micro-batch, EXACTLY-ONCE under replay.
 
@@ -708,12 +733,12 @@ class Database:
         Returns True if the batch was applied, False if skipped as already
         applied.
 
-        ``collect_stats`` defaults OFF here (unlike batch ``track``): the
-        data-skipping stats census is one extra Spark job per segment — pure
-        fixed latency on every micro-batch of a low-latency stream (measured
-        25-40% per-batch tax at tiny batches). Missing stats only disable
-        segment skipping for the batch's epochs until ``refresh_stats()`` /
-        ``compact()`` (both inside ``maintain()``) backfill them."""
+        Unlike batch ``track`` this skips the data-skipping stats census:
+        it is one extra Spark job per segment — pure fixed latency on every
+        micro-batch of a low-latency stream (measured 25-40% per-batch tax
+        at tiny batches). Missing stats only disable segment skipping for
+        the batch's epochs until ``refresh_stats()`` / ``compact()`` (both
+        inside ``maintain()``) backfill them."""
         p = self.params
         delta = track_batch(
             batch,
@@ -725,9 +750,7 @@ class Database:
             duration=p.duration,
             value_dp=p.value_dp,
         )
-        return self.commit_cube_batch(
-            delta, batch_id, stream_id=stream_id, collect_stats=collect_stats
-        )
+        return self.commit_cube_batch(delta, batch_id, stream_id=stream_id)
 
     def commit_cube_batch(
         self,
@@ -750,37 +773,31 @@ class Database:
             return False
         cols = [f.name for f in S.cube_schema(self.max_depth).fields]
         refs, stats = self._write_segment(delta.select(*cols), collect_stats=collect_stats)
-        for e, ref in refs.items():
-            m["segments"].setdefault(e, []).append(ref)
-        m["stats"].update(stats)
-        m.setdefault("hwm", {})[stream_id] = batch_id
-        self._commit_manifest(m, m["gen"])
+        self._commit_manifest(m, refs, stats, hwm={stream_id: batch_id})
         return True
 
-    def merge_replace(self, delta: DataFrame, collect_stats: bool = False) -> None:
+    def merge_replace(self, delta: DataFrame) -> None:
         """Replace-merge cube-shaped delta rows (cumulative values win over
         stored ones) — the sink for update-mode streaming aggregation, where
         each emitted row is the running (total, cnt) for its group. The
         rewritten epochs swap in atomically with the manifest commit; replay
         safety here comes from the VALUES being cumulative (rewriting the
-        same batch lands the same totals), so no hwm is needed.
-        ``collect_stats`` defaults OFF like the other per-micro-batch sinks
-        (see track_stream_batch); ``refresh_stats()`` backfills."""
+        same batch lands the same totals), so no hwm is needed. Like the
+        other per-micro-batch sinks it skips the stats census (see
+        track_stream_batch); ``refresh_stats()`` backfills."""
         fcols = S.field_cols(self.max_depth)
         keys = [S.EPOCH, S.BUCKET, *fcols, S.DEPTH]
         delta = delta.select(*keys, S.TOTAL, S.CNT).persist()
         try:
             # Driver-side epoch census of the BATCH (bounded: epochs-per-batch,
             # not data volume) — decides which epochs get rewritten.
-            touched = [int(r[0]) for r in delta.select(S.EPOCH).distinct().collect()]
+            touched = {int(r[0]) for r in delta.select(S.EPOCH).distinct().collect()}
             if not touched:
                 return
             m = self._manifest()
-            # exact epoch-set scan: only the touched epochs' segments are
-            # listed/planned (the filter stays for row-level safety)
-            existing = self.cube(epochs=set(touched)).filter(
-                F.col(S.EPOCH).isin(touched)
-            )
+            # exact epoch-set scan of the manifest this commit replaces:
+            # only the touched epochs' segments are listed/planned
+            existing = self._read_fold(self._segment_paths(m, touched))
             # NULL-safe key equality: f-columns are null for prefix rows, and
             # a plain equality join would never match them.
             d = delta.select(*keys)
@@ -789,15 +806,8 @@ class Database:
                 c = existing[k].eqNullSafe(d[k])
                 cond = c if cond is None else (cond & c)
             merged = existing.join(d, on=cond, how="left_anti").unionByName(delta)
-            refs, stats = self._write_segment(merged, collect_stats=collect_stats)
-            old = [ref for e in touched for ref in m["segments"].get(e, [])]
-            for e in touched:
-                m["segments"][e] = []
-            for e, ref in refs.items():
-                m["segments"].setdefault(e, []).append(ref)
-            m["stats"].update(stats)
-            self._commit_manifest(m, m["gen"])
-            self._gc(old)
+            refs, _ = self._write_segment(merged, collect_stats=False)
+            self._commit_manifest(m, refs, drop=touched)
         finally:
             delta.unpersist()
 
@@ -947,13 +957,11 @@ class Database:
         dropped = sorted(e for e in m["segments"] if e < cutoff)
         if not dropped:
             return []
-        old = [ref for e in dropped for ref in m["segments"].pop(e)]
         # keep=1: expiry is data DELETION — older snapshots must not keep
         # the expired epochs reachable (retention is often a compliance
         # boundary, not just a space reclaim), so the retained-manifest
         # window collapses to the new generation and the segments free now.
-        self._commit_manifest(m, m["gen"], keep=1)
-        self._gc(old)
+        self._commit_manifest(m, drop=dropped, keep=1)
         return dropped
 
     def expire_by_retention(self, now_ts: int) -> list[int]:
@@ -989,18 +997,9 @@ class Database:
         )
         if not fragmented:
             return []
-        folded = self.cube(epochs=set(fragmented)).filter(
-            F.col(S.EPOCH).isin(fragmented)
-        )
+        folded = self._read_fold(self._segment_paths(m, set(fragmented)))
         refs, stats = self._write_segment(folded, sort_series=sort_series, salt_files=salt_files)
-        old = [ref for e in fragmented for ref in m["segments"].get(e, [])]
-        for e in fragmented:
-            m["segments"][e] = []
-        for e, ref in refs.items():
-            m["segments"].setdefault(e, []).append(ref)
-        m["stats"].update(stats)
-        self._commit_manifest(m, m["gen"])
-        self._gc(old)
+        self._commit_manifest(m, refs, stats, drop=fragmented)
         return fragmented
 
     def refresh_stats(self) -> list[str]:
@@ -1009,65 +1008,21 @@ class Database:
         for ingest latency (see ``track_stream_batch``), so a long-running
         stream leaves its epochs un-prunable until maintenance runs.
 
-        ONE Spark job covers every stats-less ref: all their leaf dirs scan
-        together and each row is attributed back to its ref via
-        ``input_file_name()`` (the ``segs/<seg>/epoch_p=<E>`` ref IS a
-        substring of the file path), so the cost is one column-pruned scan
-        of the un-statted data — never a job per segment. The same
-        rank-capped census as ``_seg_stats`` bounds what reaches the driver
-        at ``_STATS_MAX``+1 rows per (ref, level). The refreshed stats
+        ONE Spark job covers every stats-less ref (the ``_seg_stats``
+        census, attributing rows to refs by file path), so the cost is one
+        column-pruned scan of the un-statted data — never a job per
+        segment; with nothing to backfill no job runs. The refreshed stats
         commit through the usual atomic manifest swap (same segment refs,
-        next generation). Returns the refs backfilled."""
+        next generation). A scanned ref with no non-null field value (e.g.
+        a depth-0-only segment) gets an explicit EMPTY entry, so it leaves
+        the missing set instead of being re-scanned by every maintain().
+        Returns the refs backfilled."""
         m = self._manifest()
-        have = m.get("stats", {})
-        missing = [
-            ref for refs in m["segments"].values() for ref in refs if ref not in have
-        ]
-        fcols = S.field_cols(self.max_depth)
-        if not missing or not fcols:
+        missing = [ref for ref in _seg_refs(m) if ref not in m["stats"]]
+        if not missing or not self.max_depth:
             return []
-        from pyspark.sql import Window
-
-        df = self.spark.read.schema(S.cube_schema(self.max_depth)).parquet(
-            *[HadoopFS.join(self.cube_path, ref) for ref in missing]
-        )
-        pairs = (
-            df.select(
-                F.regexp_extract(
-                    F.input_file_name(), r"(segs/[^/]+/epoch_p=[^/]+)/", 1
-                ).alias("_ref"),
-                F.posexplode(F.array(*[F.col(c) for c in fcols])).alias("_i", "_v"),
-            )
-            .where(F.col("_v").isNotNull())
-        )
-        # same single-exchange spill-safe shape as _seg_stats: dense_rank
-        # caps DISTINCT values per (ref, level) in the window's (spillable)
-        # sort before any agg buffer; the groupBy reuses the partitioning
-        w = Window.partitionBy("_ref", "_i").orderBy("_v")
-        rows = (
-            pairs.withColumn("_dr", F.dense_rank().over(w))
-            .where(F.col("_dr") <= _STATS_MAX + 1)
-            .groupBy("_ref", "_i")
-            .agg(F.sort_array(F.collect_set("_v")).alias("vals"))
-            .collect()
-        )
-        backfilled: dict[str, dict[str, list[str] | None]] = {}
-        for r in rows:
-            col = S.field_col(int(r["_i"]) + 1)
-            vals = list(r["vals"])
-            backfilled.setdefault(r["_ref"], {})[col] = (
-                vals if len(vals) <= _STATS_MAX else None
-            )
-        # A scanned ref that yielded no non-null field values (e.g. a
-        # depth-0-only segment) still gets an explicit EMPTY stats entry:
-        # without one it would stay in the missing set and be re-scanned by
-        # every maintain() forever. Empty stats skip nothing (pruning acts
-        # only on positive evidence), so this is purely a "scanned, nothing
-        # to record" marker.
-        for ref in missing:
-            backfilled.setdefault(ref, {})
-        m["stats"].update(backfilled)
-        self._commit_manifest(m, m["gen"])
+        backfilled = self._seg_stats(missing)
+        self._commit_manifest(m, stats=backfilled)
         return sorted(backfilled)
 
     def maintain(
@@ -1120,27 +1075,15 @@ class Database:
         segs tree — no data files are opened, so it is safe to run on a
         100 TB cube (the listing is one LIST per segment dir on an object
         store; run it as maintenance, not per query). Never mutates."""
-        names = self._manifest_names()
         live = self._genlog.retained_refs(_seg_refs)
         missing = sorted(
             ref for ref in live if not self.fs.exists(HadoopFS.join(self.cube_path, ref))
         )
-        orphans: list[str] = []
-        segs_root = HadoopFS.join(self.cube_path, "segs")
-        for seg in self.fs.listdir(segs_root):
-            seg_path = HadoopFS.join(segs_root, seg)
-            leaves = [c for c in self.fs.listdir(seg_path) if c.startswith("epoch_p=")]
-            if not leaves and f"segs/{seg}" not in {r.rsplit("/", 1)[0] for r in live}:
-                orphans.append(f"segs/{seg}")
-            for child in leaves:
-                rel = f"segs/{seg}/{child}"
-                if rel not in live:
-                    orphans.append(rel)
         return {
             "gens": self.generations(),
-            "current": int(self._manifest()["gen"]) if names else -1,
+            "current": self.current_gen(),
             "missing": missing,
-            "orphans": sorted(orphans),
+            "orphans": self._orphans(live),
             "ok": not missing,
         }
 
@@ -1192,10 +1135,10 @@ class Database:
         for col, val in preds:
             sel = sel & match_expr(col, val)
         m = self._manifest()
-        cube = self.cube()
         leaf = F.col(S.DEPTH) == n
         hits = (
-            cube.filter(leaf & sel)
+            self._read_fold(self._segment_paths(m))
+            .filter(leaf & sel)
             .groupBy(S.EPOCH)
             .agg(F.count(F.lit(1)).alias("_n"))
             .collect()
@@ -1204,41 +1147,22 @@ class Database:
             return {"epochs": [], "forgotten_rows": 0}
         affected = sorted(int(r[S.EPOCH]) for r in hits)
         forgotten = int(sum(r["_n"] for r in hits))
-        survivors = self.cube(epochs=set(affected)).filter(leaf & ~sel)
+        survivors = self._read_fold(self._segment_paths(m, set(affected))).filter(
+            leaf & ~sel
+        )
         fcols = S.field_cols(n)
-        parts = []
-        for d in range(1, n + 1):
-            parts.append(
-                survivors.select(
-                    S.EPOCH,
-                    S.BUCKET,
-                    *[
-                        (F.col(fcols[j]) if j < d else F.lit(None).cast("string")).alias(
-                            fcols[j]
-                        )
-                        for j in range(n)
-                    ],
-                    F.lit(d).cast("int").alias(S.DEPTH),
-                    S.TOTAL,
-                    S.CNT,
-                )
-            )
-        from functools import reduce
-
         rebuilt = (
-            reduce(DataFrame.unionByName, parts)
+            _prefix_fanout(
+                survivors,
+                {c: F.col(c) for c in (S.EPOCH, S.BUCKET, S.TOTAL, S.CNT)},
+                [F.col(c) for c in fcols],
+                range(1, n + 1),
+            )
             .groupBy(S.EPOCH, S.BUCKET, *fcols, S.DEPTH)
             .agg(*self._fold_aggs)
         )
         refs, stats = self._write_segment(rebuilt, sort_series=True)
-        old = [ref for e in affected for ref in m["segments"].get(e, [])]
-        for e in affected:
-            m["segments"][e] = []
-        for e, ref in refs.items():
-            m["segments"].setdefault(e, []).append(ref)
-        m["stats"].update(stats)
-        self._commit_manifest(m, m["gen"])
-        self._gc(old)
+        self._commit_manifest(m, refs, stats, drop=affected)
         return {"epochs": affected, "forgotten_rows": forgotten}
 
     def clone(self, dst_path: str, at_gen: int | None = None) -> "Database":
@@ -1288,10 +1212,7 @@ class Database:
                     HadoopFS.join(self.cube_path, ref),
                     HadoopFS.join(dst.cube_path, ref),
                 )
-        dst._commit_manifest(
-            {"segments": m["segments"], "hwm": m.get("hwm", {}), "stats": m.get("stats", {})},
-            prev_gen=-1,
-        )
+        dst._commit_manifest({**m, "gen": -1})
         return dst
 
 

@@ -79,6 +79,152 @@ def validate_fields_df(df: DataFrame, fields: list[str]) -> DataFrame:
     return df.filter(cond)
 
 
+def _prefix_fanout(
+    df: DataFrame, carry: dict[str, Column], fields: list[Column], depths
+) -> DataFrame:
+    """THE prefix fan-out (reference write-time rollup, epoch/epoch.go:66-80):
+    one output row per input row and depth ``d`` in ``depths``, holding the
+    ``carry`` columns, the first ``d`` of ``fields`` as f1..fd with the rest
+    null, and ``depth`` = d. Shared by both Track paths, ``Database.forget``'s
+    re-fold and ``query.rollup_at_read``. One struct per depth; explode fans
+    out in the same codegen stage as the projection feeding it."""
+    n = len(fields)
+    fcols = S.field_cols(n)
+    prefixes = F.array(
+        *[
+            F.struct(
+                F.lit(d).alias(S.DEPTH),
+                *[
+                    (fields[j] if j < d else F.lit(None).cast("string")).alias(fcols[j])
+                    for j in range(n)
+                ],
+            )
+            for d in depths
+        ]
+    )
+    return df.select(
+        *[c.alias(k) for k, c in carry.items()], F.explode(prefixes).alias("_p")
+    ).select(
+        *carry,
+        *[F.col(f"_p.{c}").alias(c) for c in fcols],
+        F.col(f"_p.{S.DEPTH}").cast("int").alias(S.DEPTH),
+    )
+
+
+def _track_rows(
+    df: DataFrame,
+    fields: list[str],
+    ts_col: str = "ts",
+    total_col: str = "value",
+    count_col: str | None = None,
+    value_dp: int | None = 4,
+    validate: bool = True,
+    rollup: bool = True,
+) -> DataFrame:
+    """The one event -> cube-row transform behind every Track path (batch
+    ``track_batch`` and the windowed streaming sinks): validate fields and
+    values, normalize event time and apply the ErrInvTime guard, quantize
+    (total, count), fan out the path prefixes. Returns one row per
+    (event, prefix) with columns ``_ts`` (long ns), f1..fN, depth, ``_t``,
+    ``_c``; callers group them with ``_ingest_aggs``. Parameters as in
+    ``track_batch``."""
+    n = len(fields)
+    if n == 0:
+        raise ValueError("need at least one field column")
+    if validate:
+        df = validate_fields_df(df, fields)
+        # poison-value rows reject like illegal fields (code-review r12):
+        # NULL half-counts, NaN/Inf/out-of-grid aborts the scaled cast —
+        # track_rejects surfaces them with per-reason labels
+        df = df.filter(~value_illegal(F.col(total_col), value_dp))
+        if count_col is not None:
+            # counts are INTEGERS (reference Point.Count, block/blockrw.go)
+            # and fold at dp=0, so their grid bound is 2^53 flat
+            df = df.filter(
+                ~value_illegal(F.col(count_col), 0 if value_dp is not None else None)
+            )
+
+    # Event-time boundary: accept long-ns, TIMESTAMP, TIMESTAMP_NTZ, DATE or
+    # ISO string input and emit long-ns (schema.ts_ns_expr) — the engine
+    # convention. Filter on the CONVERTED expression: NULL event time is
+    # unrepresentable in the reference (uint64 ts) and has no position on
+    # the time axis, and an unparseable string normalizes to NULL — both
+    # are dropped here rather than becoming a poison null-bucket series or
+    # tripping the negative-ts assert with a misleading message (the
+    # negative-ts case below still aborts — a bad clock is a pipeline bug,
+    # a null/unparseable value is missing data).
+    ts = S.ts_ns_expr(df.schema[ts_col].dataType, ts_col)
+    df = df.filter(ts.isNotNull())
+    # ErrInvTime guard (database.go:156-158, 190-193): negative ts would
+    # silently floor into negative buckets (or, streaming, a misaligned
+    # window); raise at execution instead.
+    # r13 optimization (guide §1.2 per-task work): the guard is a FILTER
+    # conjunct, not a wrapper on the ts VALUE. The old form
+    # ``ts + coalesce(assert_true(...), 0)`` was inlined by project
+    # collapse into every downstream bucket/epoch/range expression — the
+    # fetch entries' plans carried ~14 copies of the full
+    # raise_error/coalesce tree per Filter, bloating optimizer time,
+    # generated code and per-row work. As a filter it is evaluated once
+    # per row; coalesce(ts >= 0, true) keeps it null-safe so optimizer
+    # conjunct reordering can never make a null-ts row (dropped by the
+    # filter above) trip the assert. assert_true is NULL on pass, so
+    # coalesce(.., true) is the pass-through; a negative ts still aborts
+    # the job with the same ErrInvTime message.
+    df = df.filter(
+        F.coalesce(
+            F.assert_true(
+                F.coalesce(ts >= 0, F.lit(True)),
+                F.concat(
+                    F.lit("ErrInvTime: negative timestamp "), ts.cast("string")
+                ),
+            ).cast("boolean"),
+            F.lit(True),
+        )
+    )
+    if value_dp is None:
+        total = F.col(total_col).cast("double")
+        cnt = F.lit(1.0) if count_col is None else F.col(count_col).cast("double")
+    else:
+        s = 10**value_dp
+        total = F.round(F.col(total_col).cast("double") * s).cast("long")
+        # counts quantize at dp=0 (integers, like the reference's
+        # Point.Count) — VERDICT r12 item 2: scaling them by 10^dp burned
+        # 10^dp of the 2^53 exact-fold headroom for nothing, so a group
+        # with cnt past 2^53/10^dp ingested cleanly and aborted at its
+        # first compact/merge re-fold
+        cnt = (
+            F.lit(1).cast("long")
+            if count_col is None
+            else F.round(F.col(count_col).cast("double")).cast("long")
+        )
+    return _prefix_fanout(
+        df,
+        {"_ts": ts, "_t": total, "_c": cnt},
+        [F.col(f).cast("string") for f in fields],
+        range(1, n + 1) if rollup else [n],
+    )
+
+
+def _ingest_aggs(value_dp: int | None) -> list[Column]:
+    """The (total, cnt) aggregates over ``_track_rows``' quantized ``_t`` /
+    ``_c`` — one definition for the batch groupBy and the streaming window
+    state, so stream and batch fold the same exact scaled longs regardless
+    of micro-batch boundaries or state-merge order."""
+    if value_dp is None:
+        return [F.sum("_t").alias(S.TOTAL), F.sum("_c").alias(S.CNT)]
+    return [
+        # guarded: decimal(38,0) accumulation (no 2^63 wrap) + hard error
+        # past 2^53, where the stored double would silently stop being an
+        # exact dp-multiple
+        (guarded_scaled_sum(F.col("_t"), value_dp) / F.lit(float(10**value_dp)))
+        .cast("double")
+        .alias(S.TOTAL),
+        # counts are plain longs at dp=0 either way (1s for count_col=None,
+        # round(count) otherwise) — full 2^53 headroom, no divide-back
+        guarded_scaled_sum(F.col("_c"), 0).cast("double").alias(S.CNT),
+    ]
+
+
 def track_batch(
     df: DataFrame,
     fields: list[str],
@@ -124,131 +270,26 @@ def track_batch(
     timestamps DO abort (ErrInvTime, database.go:156-158): a bad clock is a
     pipeline bug, not a data-quality case.
 
-    Returns a DataFrame with schema ``cube_schema(len(fields))``.
+    Returns a DataFrame with schema ``cube_schema(len(fields))``: the
+    ``_track_rows`` core grouped by (epoch, bucket, f1..fN, depth) — ONE
+    shuffle, with map-side partial aggregation.
     """
-    n = len(fields)
-    if n == 0:
-        raise ValueError("need at least one field column")
-    if validate:
-        df = validate_fields_df(df, fields)
-        # poison-value rows reject like illegal fields (code-review r12):
-        # NULL half-counts, NaN/Inf/out-of-grid aborts the scaled cast —
-        # track_rejects surfaces them with per-reason labels
-        df = df.filter(~value_illegal(F.col(total_col), value_dp))
-        if count_col is not None:
-            # counts are INTEGERS (reference Point.Count, block/blockrw.go)
-            # and fold at dp=0, so their grid bound is 2^53 flat
-            df = df.filter(
-                ~value_illegal(F.col(count_col), 0 if value_dp is not None else None)
-            )
-
-    # Event-time boundary: accept long-ns, TIMESTAMP, TIMESTAMP_NTZ, DATE or
-    # ISO string input and emit long-ns (schema.ts_ns_expr) — the engine
-    # convention. Filter on the CONVERTED expression: NULL event time is
-    # unrepresentable in the reference (uint64 ts) and has no position on
-    # the time axis, and an unparseable string normalizes to NULL — both
-    # are dropped here rather than becoming a poison null-bucket series or
-    # tripping the negative-ts assert with a misleading message (the
-    # negative-ts case below still aborts — a bad clock is a pipeline bug,
-    # a null/unparseable value is missing data).
-    ts = S.ts_ns_expr(df.schema[ts_col].dataType, ts_col)
-    df = df.filter(ts.isNotNull())
-    # ErrInvTime guard (database.go:156-158, 190-193): negative ts would
-    # silently floor into negative buckets; raise at execution instead.
-    # r13 optimization (guide §1.2 per-task work): the guard is a FILTER
-    # conjunct, not a wrapper on the ts VALUE. The old form
-    # ``ts + coalesce(assert_true(...), 0)`` was inlined by project
-    # collapse into every downstream bucket/epoch/range expression — the
-    # fetch entries' plans carried ~14 copies of the full
-    # raise_error/coalesce tree per Filter, bloating optimizer time,
-    # generated code and per-row work. As a filter it is evaluated once
-    # per row; coalesce(ts >= 0, true) keeps it null-safe so optimizer
-    # conjunct reordering can never make a null-ts row (dropped by the
-    # filter above) trip the assert. assert_true is NULL on pass, so
-    # coalesce(.., true) is the pass-through; a negative ts still aborts
-    # the job with the same ErrInvTime message.
-    df = df.filter(
-        F.coalesce(
-            F.assert_true(
-                F.coalesce(ts >= 0, F.lit(True)),
-                F.concat(
-                    F.lit("ErrInvTime: negative timestamp "), ts.cast("string")
-                ),
-            ).cast("boolean"),
-            F.lit(True),
-        )
+    rows = _track_rows(
+        df, fields, ts_col, total_col, count_col, value_dp, validate, rollup
     )
-    bucket = bucket_expr(ts, resolution)
-    if value_dp is None:
-        total = F.col(total_col).cast("double")
-        cnt = F.lit(1.0) if count_col is None else F.col(count_col).cast("double")
-    else:
-        s = 10**value_dp
-        total = F.round(F.col(total_col).cast("double") * s).cast("long")
-        # counts quantize at dp=0 (integers, like the reference's
-        # Point.Count) — VERDICT r12 item 2: scaling them by 10^dp burned
-        # 10^dp of the 2^53 exact-fold headroom for nothing, so a group
-        # with cnt past 2^53/10^dp ingested cleanly and aborted at its
-        # first compact/merge re-fold
-        cnt = (
-            F.lit(1).cast("long")
-            if count_col is None
-            else F.round(F.col(count_col).cast("double")).cast("long")
-        )
-
-    src = [F.col(f).cast("string") for f in fields]
-    depths = range(1, n + 1) if rollup else [n]
-    # One struct per prefix depth; explode fans out in the same codegen stage.
-    prefixes = F.array(
-        *[
-            F.struct(
-                F.lit(d).alias(S.DEPTH),
-                *[
-                    (src[j] if j < d else F.lit(None).cast("string")).alias(S.field_col(j + 1))
-                    for j in range(n)
-                ],
-            )
-            for d in depths
-        ]
-    )
-    exploded = df.select(
-        bucket.alias(S.BUCKET),
-        total.alias("_t"),
-        cnt.alias("_c"),
-        F.explode(prefixes).alias("_p"),
-    )
-    fcols = S.field_cols(n)
+    bucket = bucket_expr(F.col("_ts"), resolution)
+    fcols = S.field_cols(len(fields))
     return (
-        exploded.select(
-            epoch_expr(F.col(S.BUCKET), duration).alias(S.EPOCH),
-            S.BUCKET,
-            *[F.col(f"_p.{c}").alias(c) for c in fcols],
-            F.col(f"_p.{S.DEPTH}").cast("int").alias(S.DEPTH),
+        rows.select(
+            epoch_expr(bucket, duration).alias(S.EPOCH),
+            bucket.alias(S.BUCKET),
+            *fcols,
+            S.DEPTH,
             "_t",
             "_c",
         )
         .groupBy(S.EPOCH, S.BUCKET, *fcols, S.DEPTH)
-        .agg(
-            *(
-                [F.sum("_t").alias(S.TOTAL), F.sum("_c").alias(S.CNT)]
-                if value_dp is None
-                else [
-                    # guarded: decimal(38,0) accumulation (no 2^63 wrap) +
-                    # hard error past 2^53, where the stored double would
-                    # silently stop being an exact dp-multiple
-                    (
-                        guarded_scaled_sum(F.col("_t"), value_dp)
-                        / F.lit(float(10**value_dp))
-                    )
-                    .cast("double")
-                    .alias(S.TOTAL),
-                    # counts are plain longs at dp=0 either way (1s for
-                    # count_col=None, round(count) otherwise) — full 2^53
-                    # headroom, no divide-back
-                    guarded_scaled_sum(F.col("_c"), 0).cast("double").alias(S.CNT),
-                ]
-            )
-        )
+        .agg(*_ingest_aggs(value_dp))
     )
 
 

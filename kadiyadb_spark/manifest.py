@@ -278,7 +278,7 @@ class GenLog:
 
         ``keep`` overrides the log's retention for THIS commit: data-DELETING
         commits pass 1 so deleted data is not resurrectable through an older
-        snapshot (the cube's expire/merge_replace contract).
+        snapshot (the cube's ``expire``).
 
         The written body seeds the read cache under the key the
         post-commit listing reports, so the writer's next read of its own

@@ -297,22 +297,18 @@ def rollup_at_read(
     must match the cube's ingest quantization (ingest.track_batch) so the
     read-time fold sums the same exact scaled longs the write-time rollup
     summed — the equality is then bit-exact at any parallelism."""
-    from kadiyadb_spark.ingest import fold_aggs
+    from kadiyadb_spark.ingest import _prefix_fanout, fold_aggs
 
-    fcols = S.field_cols(to_depth)
+    fcols = S.field_cols(max_depth)
     return (
-        cube.filter(F.col(S.DEPTH) == F.lit(max_depth))
-        .groupBy(S.EPOCH, S.BUCKET, *fcols)
-        .agg(*fold_aggs(value_dp))
-        .select(
-            S.EPOCH,
-            S.BUCKET,
-            *fcols,
-            *[F.lit(None).cast("string").alias(S.field_col(i)) for i in range(to_depth + 1, max_depth + 1)],
-            F.lit(to_depth).cast("int").alias(S.DEPTH),
-            S.TOTAL,
-            S.CNT,
+        _prefix_fanout(
+            cube.filter(F.col(S.DEPTH) == F.lit(max_depth)),
+            {c: F.col(c) for c in (S.EPOCH, S.BUCKET, S.TOTAL, S.CNT)},
+            [F.col(c) for c in fcols],
+            [to_depth],
         )
+        .groupBy(S.EPOCH, S.BUCKET, *fcols, S.DEPTH)
+        .agg(*fold_aggs(value_dp))
     )
 
 

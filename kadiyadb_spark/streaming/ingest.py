@@ -2,25 +2,33 @@
 
 The reference's write path is synchronous Track() calls into mmap'd epochs
 (SURVEY §3.1). The Spark-native equivalent is a stream of events micro-batched
-into the persisted cube. Two strategies, both exactly-once-ish via
-checkpointing:
+into the persisted cube. Three cube sinks, each exactly-once via
+checkpointing plus the manifest commit:
 
 1. ``stream_track_raw`` — foreachBatch over the RAW event stream; each
-   micro-batch runs the same aggregate-then-merge-increment as batch Track.
+   micro-batch runs batch Track (``Database.track_stream_batch``) and
+   commits its segment with the stream's batch high-water mark.
    Faithful to reference increments; supports arbitrarily late data (the
    reference accepts any timestamp within retention via RO->RW promotion,
    epoch/cache.go:94-132).
 
-2. ``stream_track_agg`` — idiomatic: watermark + windowed aggregation in
-   update mode; each micro-batch emits the *cumulative* (total, cnt) per
-   (window, fields) group, which is REPLACE-merged into the cube. State
-   bounded by the watermark; late data beyond it is dropped (a documented
-   divergence from the reference, which has no watermark concept).
+2. ``stream_track_agg`` — watermark + windowed aggregation in update mode;
+   each micro-batch emits the *cumulative* (total, cnt) per (window,
+   fields) group, which is REPLACE-merged into the cube
+   (``Database.merge_replace``). State bounded by the watermark; late data
+   beyond it is dropped (a documented divergence from the reference, which
+   has no watermark concept).
 
-Scale notes: both paths shuffle once per micro-batch keyed by the cube key;
-the merge touches only the epoch partitions present in the batch. On a real
-cluster the source would be Kafka; tests use the file source with
-Trigger.AvailableNow.
+3. ``stream_track_agg_append`` — the same windowed aggregation in append
+   mode; each group is emitted once, when the watermark closes its window,
+   and committed as a pure segment append (``Database.commit_cube_batch``).
+
+All three share batch Track's event -> cube-row core
+(``ingest._track_rows``) and fold (``ingest._ingest_aggs``); the windowed
+two differ from batch only in grouping by a watermarked event-time window.
+Each micro-batch shuffles once keyed by the cube key; only epochs present
+in the batch are touched. On a real cluster the source would be Kafka;
+tests use the file source with Trigger.AvailableNow.
 """
 
 from __future__ import annotations
@@ -31,7 +39,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from kadiyadb_spark import schema as S
 from kadiyadb_spark.database import Database
-from kadiyadb_spark.ingest import validate_fields_df
+from kadiyadb_spark.ingest import _ingest_aggs, _track_rows, epoch_expr
 
 
 def stream_track_raw(
@@ -192,53 +200,16 @@ def _windowed_cube_delta(
     count_col: str | None,
     watermark: str,
 ) -> DataFrame:
-    """Shared core of both windowed-aggregation strategies: watermarked
-    per-resolution window groupBy over the prefix fan-out, emitting
-    cube-shaped rows (epoch, bucket, f1..fN, depth, total, cnt)."""
+    """Shared core of both windowed-aggregation strategies: batch Track's
+    event -> cube-row transform (``ingest._track_rows``: validation, ErrInvTime
+    guard, quantization, prefix fan-out) and fold (``ingest._ingest_aggs``),
+    grouped by a watermarked per-resolution event-time window instead of the
+    bucket — so stream and batch reject the same rows and fold the same exact
+    scaled longs. Emits cube-shaped rows (epoch, bucket, f1..fN, depth, total,
+    cnt)."""
     p = db.params
-    n = len(p.fields)
-    if n == 0:
+    if not p.fields:
         raise ValueError("database params must declare fields for streaming ingest")
-
-    ts = S.ts_ns_expr(events.schema[ts_col].dataType, ts_col)
-    # Same write-path rejection of ""/"*" field values as batch track
-    # (index/node.go:200-214); null/unparseable event time dropped on the
-    # CONVERTED expression like track_batch.
-    events = validate_fields_df(events, list(p.fields)).filter(ts.isNotNull())
-    # poison-value rows reject exactly like the batch path (code-review
-    # r12): NULL half-counts, NaN/Inf/off-grid aborts the scaled cast
-    from kadiyadb_spark.ingest import value_illegal
-
-    events = events.filter(~value_illegal(F.col(total_col), p.value_dp))
-    if count_col is not None:
-        # counts validate at dp=0, mirroring the batch path (integers)
-        events = events.filter(
-            ~value_illegal(F.col(count_col), 0 if p.value_dp is not None else None)
-        )
-    # ErrInvTime guard, same as batch track_batch (code-review r12): a
-    # negative ts here would silently land in a misaligned epoch (Spark's %
-    # rounds toward zero) that fetch's >= 0 clamp never reads — abort the
-    # query loudly instead, exactly like the batch path (a bad clock is a
-    # pipeline bug). r13: a FILTER conjunct, not a wrapper on the ts value —
-    # the wrapped form was inlined into every downstream window/bucket
-    # expression (see ingest.track_batch for the full rationale); the
-    # null-safe coalesce keeps dropped null-ts rows from tripping it.
-    events = events.filter(
-        F.coalesce(
-            F.assert_true(
-                F.coalesce(ts >= 0, F.lit(True)),
-                F.concat(
-                    F.lit("ErrInvTime: negative timestamp "), ts.cast("string")
-                ),
-            ).cast("boolean"),
-            F.lit(True),
-        )
-    )
-    # Watermarks need a TimestampType column; ns -> micros loses nothing at
-    # our resolutions (resolution >= 1us).
-    evt = events.withColumn("_event_time", F.timestamp_micros(S.ts_us_expr(ts)))
-    evt = evt.withWatermark("_event_time", watermark)
-
     # Express the window in MICROseconds: integer-dividing by 1e9 silently
     # turns any sub-second resolution into "0 seconds" (params accept ms/us/ns
     # durations). Timestamps are µs precision, so require µs granularity.
@@ -247,73 +218,26 @@ def _windowed_cube_delta(
             f"windowed streaming ingest requires resolution in whole "
             f"microseconds (timestamps are µs precision); got {p.resolution} ns"
         )
-    win = F.window("_event_time", f"{p.resolution // 1_000} microseconds")
-    # Same exact scaled-long fold as batch ingest (ingest.track_batch
-    # value_dp): the stateful sum folds longs, so the emitted totals are the
-    # exact dp-multiples the batch path produces regardless of micro-batch
-    # boundaries or state-merge order.
-    vdp = p.value_dp
-    if vdp is None:
-        tot = F.col(total_col).cast("double")
-        cnt = F.lit(1.0) if count_col is None else F.col(count_col).cast("double")
-    else:
-        s = 10**vdp
-        tot = F.round(F.col(total_col).cast("double") * s).cast("long")
-        # counts quantize at dp=0 like the batch path (integers; full 2^53
-        # fold headroom) — VERDICT r12 item 2
-        cnt = (
-            F.lit(1).cast("long")
-            if count_col is None
-            else F.round(F.col(count_col).cast("double")).cast("long")
-        )
-    src = [F.col(f).cast("string") for f in p.fields]
-
-    # Prefix fan-out before the stateful agg (same trick as track_batch).
-    prefixes = F.array(
-        *[
-            F.struct(
-                F.lit(d).alias(S.DEPTH),
-                *[
-                    (src[j] if j < d else F.lit(None).cast("string")).alias(S.field_col(j + 1))
-                    for j in range(n)
-                ],
-            )
-            for d in range(1, n + 1)
-        ]
+    fcols = S.field_cols(len(p.fields))
+    rows = _track_rows(
+        events, list(p.fields), ts_col, total_col, count_col, p.value_dp
     )
-    fcols = S.field_cols(n)
-    exploded = evt.select(
-        "_event_time",
-        tot.alias("_t"),
-        cnt.alias("_c"),
-        F.explode(prefixes).alias("_p"),
-    ).select("_event_time", "_t", "_c", *[F.col(f"_p.{c}").alias(c) for c in [*fcols, S.DEPTH]])
-
-    if vdp is None:
-        folds = [F.sum("_t").alias(S.TOTAL), F.sum("_c").alias(S.CNT)]
-    else:
-        # SAME guarded fold as batch track_batch (code-review r12): plain
-        # sum(long) would silently stop being an exact dp-multiple past
-        # 2^53 where the batch path hard-errors — stream/batch exactness
-        # parity is the whole point of the scaled-long design
-        from kadiyadb_spark.functions.num import guarded_scaled_sum
-
-        sd = float(10**vdp)
-        folds = [
-            (guarded_scaled_sum(F.col("_t"), vdp) / F.lit(sd))
-            .cast("double")
-            .alias(S.TOTAL),
-            # counts fold at dp=0 either way (batch-path parity)
-            guarded_scaled_sum(F.col("_c"), 0).cast("double").alias(S.CNT),
-        ]
-    agg = exploded.groupBy(win.alias("_w"), *fcols, S.DEPTH).agg(*folds)
+    # Watermarks need a TimestampType column; ns -> micros loses nothing at
+    # our resolutions (resolution >= 1us).
+    evt = rows.withColumn(
+        "_event_time", F.timestamp_micros(S.ts_us_expr(F.col("_ts")))
+    ).withWatermark("_event_time", watermark)
+    win = F.window("_event_time", f"{p.resolution // 1_000} microseconds")
+    agg = evt.groupBy(win.alias("_w"), *fcols, S.DEPTH).agg(*_ingest_aggs(p.value_dp))
+    bucket = F.unix_micros(F.col("_w.start")) * 1000
     return agg.select(
-        (F.unix_micros(F.col("_w.start")) * 1000).alias(S.BUCKET),
+        epoch_expr(bucket, p.duration).alias(S.EPOCH),
+        bucket.alias(S.BUCKET),
         *fcols,
         S.DEPTH,
         S.TOTAL,
         S.CNT,
-    ).withColumn(S.EPOCH, (F.col(S.BUCKET) - (F.col(S.BUCKET) % F.lit(p.duration))).cast("long"))
+    )
 
 
 def stream_track_agg(

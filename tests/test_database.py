@@ -95,6 +95,13 @@ def test_expire_drops_old_epochs(spark, tmp_path):
         assert "epoch_p=0" not in children
     # retention-driven: now=21, retention=10 -> cutoff 11 -> epoch 5 dropped
     assert db.expire_by_retention(now_ts=21) == [5]
+    # with rotation GC off, expire's keep=1 commit still frees the dropped
+    # epoch at once instead of leaving it to vacuum()
+    off = Database.open(spark, str(tmp_path / "db_off"), P, rotation_gc=False)
+    off.track(_events(spark, [(0, "a", "b", 1.0), (5, "a", "b", 2.0)]), total_col="v")
+    gone = _refs(off, 0)
+    assert off.expire(before_ts=5) == [0]
+    assert gone and not any(off.fs.exists(HadoopFS.join(off.cube_path, r)) for r in gone)
 
 
 def test_compact_reduces_segments_preserves_values(spark, tmp_path):
@@ -177,7 +184,7 @@ def test_stream_batch_crash_before_commit_leaves_no_data(spark, tmp_path, monkey
     class Crash(RuntimeError):
         pass
 
-    def boom(m, prev_gen):
+    def boom(*args, **kwargs):
         raise Crash("crash between data write and manifest commit")
 
     monkeypatch.setattr(db, "_commit_manifest", boom)
@@ -280,7 +287,7 @@ def test_concurrent_writer_loses_loudly(spark, tmp_path):
     m = db_b._manifest()
     db_a.track(_events(spark, [(1, "a", "b", 1.0)]), total_col="v")
     with pytest.raises(ConcurrentWriteError):
-        db_b._commit_manifest(m, m["gen"])
+        db_b._commit_manifest(m)
     # A's committed data is intact
     assert db_a.cube().filter("depth = 2").count() == 2
 
@@ -385,7 +392,7 @@ def test_fsck_reports_missing_and_orphans(spark, tmp_path):
     fs.mkdirs(HadoopFS.join(db.cube_path, "segs", "seg-deadbeef", "epoch_p=0"))
     rep = db.fsck()
     assert rep["ok"] and any("seg-deadbeef" in o for o in rep["orphans"])
-    db.vacuum()
+    assert db.vacuum() == rep["orphans"]  # fsck reports what vacuum removes
     rep = db.fsck()
     assert rep["orphans"] == []
 
@@ -480,6 +487,32 @@ def test_f1_stats_overflow_disables_pruning_not_correctness(spark, tmp_path, mon
     # None level -> no pruning on it: still read for any exact f1 value
     assert len(db._segment_paths(m, {0}, prune_pattern=["t3", "u"])) == 1
     assert _pts(db.fetch(0, 1, ["t3", "u"])) == [(0, ("t3", "u"), 0, 1.0, 1.0)]
+
+
+def test_inline_stats_equal_refresh_stats_backfill(spark, tmp_path, monkeypatch):
+    """One census: the stats ``track`` writes inline equal what
+    ``refresh_stats`` backfills once they are cleared, including a level
+    past the cap recording None and a multi-epoch segment."""
+    import kadiyadb_spark.database as dbmod
+
+    monkeypatch.setattr(dbmod, "_STATS_MAX", 2)
+    db = Database.open(spark, str(tmp_path / "db_census"), P)
+    db.track(
+        _events(
+            spark,
+            [(0, "a", "u1", 1.0), (1, "b", "u2", 1.0), (2, "a", "u3", 1.0), (6, "c", "u1", 1.0)],
+        ),
+        total_col="v",
+    )
+    m = db._manifest()
+    inline = m["stats"]
+    ref0 = m["segments"][0][0]
+    assert inline[ref0] == {"f1": ["a", "b"], "f2": None}  # f2 overflowed the cap
+    assert inline[m["segments"][5][0]] == {"f1": ["c"], "f2": ["u1"]}
+    db._commit_manifest({**m, "stats": {}})
+    assert db._manifest()["stats"] == {}
+    assert sorted(db.refresh_stats()) == sorted(inline)
+    assert db._manifest()["stats"] == inline
 
 
 def test_f1_stats_survive_compact_and_follow_gc(spark, tmp_path):

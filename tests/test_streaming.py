@@ -7,7 +7,13 @@ from pyspark.sql import types as T
 
 from kadiyadb_spark.catalog import Params
 from kadiyadb_spark.database import Database
-from kadiyadb_spark.streaming import stream_dedup, stream_track_agg, stream_track_raw
+from kadiyadb_spark.ingest import track_batch
+from kadiyadb_spark.streaming import (
+    stream_dedup,
+    stream_track_agg,
+    stream_track_agg_append,
+    stream_track_raw,
+)
 
 # seconds-scale params so event-time watermarking is meaningful
 SEC = 1_000_000_000
@@ -27,7 +33,13 @@ B0 = BASE - (BASE % (3600 * SEC))  # epoch start
 
 
 def _write_batch(spark, path, rows):
-    spark.createDataFrame([Row(ts=r[0], et=r[1], uid=r[2], value=float(r[3])) for r in rows], SRC_SCHEMA).write.mode(
+    spark.createDataFrame(
+        [
+            Row(ts=r[0], et=r[1], uid=r[2], value=None if r[3] is None else float(r[3]))
+            for r in rows
+        ],
+        SRC_SCHEMA,
+    ).write.mode(
         "append"
     ).parquet(path)
 
@@ -41,26 +53,42 @@ def _pts(df):
     return sorted(out)
 
 
-@pytest.mark.parametrize("strategy", ["raw", "agg"])
+# rows batch Track rejects; every streaming sink must reject exactly these
+POISON = [
+    (B0 + 5 * SEC, "click", "u1", float("nan")),
+    (B0 + 5 * SEC, "click", "u1", None),
+    (B0 + 5 * SEC, "", "u1", 1.0),
+    (B0 + 5 * SEC, "click", "*", 1.0),
+    (None, "click", "u1", 1.0),
+    (B0 + 5 * SEC, "click", "u1", 1e12),  # past the 2^53 / 10^4 scaled-long grid
+]
+
+
+@pytest.mark.parametrize("strategy", ["raw", "agg", "agg_append"])
 def test_stream_matches_batch(spark, tmp_path, strategy):
     src = str(tmp_path / "src")
-    rows1 = [(B0 + 5 * SEC, "click", "u1", 5.0), (B0 + 65 * SEC, "click", "u1", 7.0)]
+    rows1 = [(B0 + 5 * SEC, "click", "u1", 5.0), (B0 + 65 * SEC, "click", "u1", 7.0), *POISON]
     rows2 = [(B0 + 10 * SEC, "click", "u1", 3.0), (B0 + 70 * SEC, "view", "u2", 1.0)]
-    _write_batch(spark, src, rows1)
-
     db = Database.open(spark, str(tmp_path / f"db_{strategy}"), P)
-    events = spark.readStream.schema(SRC_SCHEMA).parquet(src)
-    start = stream_track_raw if strategy == "raw" else stream_track_agg
-    q = start(events, db, checkpoint=str(tmp_path / f"ckpt_{strategy}_1"))
-    q.awaitTermination(120)
-
-    _write_batch(spark, src, rows2)
-    q = start(
-        spark.readStream.schema(SRC_SCHEMA).parquet(src),
-        db,
-        checkpoint=str(tmp_path / f"ckpt_{strategy}_1"),  # same checkpoint: batch 1 not reprocessed
-    )
-    q.awaitTermination(120)
+    start = {
+        "raw": stream_track_raw,
+        "agg": stream_track_agg,
+        "agg_append": stream_track_agg_append,
+    }[strategy]
+    # append mode commits a window only once the watermark passes it: a
+    # last event two hours later closes every window of epoch B0
+    runs = [rows1, rows2]
+    if strategy == "agg_append":
+        runs.append([(B0 + 7200 * SEC, "late", "x", 1.0)])
+    for rows in runs:
+        _write_batch(spark, src, rows)
+        # same checkpoint every run: earlier batches are not reprocessed
+        q = start(
+            spark.readStream.schema(SRC_SCHEMA).parquet(src),
+            db,
+            checkpoint=str(tmp_path / f"ckpt_{strategy}_1"),
+        )
+        q.awaitTermination(120)
 
     got = _pts(db.fetch(B0, B0 + 120 * SEC, ["click", "u1"]))
     assert got == [
@@ -72,6 +100,15 @@ def test_stream_matches_batch(spark, tmp_path, strategy):
     assert got1 == [(B0 + 60 * SEC, ("click",), 7.0, 1.0)]
     got2 = _pts(db.fetch(B0 + 60 * SEC, B0 + 120 * SEC, ["view", "u2"]))
     assert got2 == [(B0 + 60 * SEC, ("view", "u2"), 1.0, 1.0)]
+    # the whole committed epoch equals batch Track over the same files,
+    # poison rows included
+    batch = track_batch(
+        spark.read.schema(SRC_SCHEMA).parquet(src),
+        fields=list(P.fields),
+        resolution=P.resolution,
+        duration=P.duration,
+    )
+    assert _pts(db.cube().filter(f"epoch = {B0}")) == _pts(batch.filter(f"epoch = {B0}"))
 
 
 def test_replayed_batch_is_noop(spark, tmp_path):
