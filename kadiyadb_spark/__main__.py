@@ -496,18 +496,13 @@ def main(argv: list[str] | None = None) -> int:
 
         db = _open(spark, args.path)
         pat = args.pattern.split(",")
-        res, dur = db.params.resolution, db.params.duration
-        from_b = max(args.from_ns, 0) - (max(args.from_ns, 0) % res)
-        to_b = max(args.to_ns, 0) - (max(args.to_ns, 0) % res)
-        e_from = from_b - (from_b % dur)
-        e_to = (to_b - res) - ((to_b - res) % dur) if to_b > from_b else e_from
         r = fetch_absent(
-            db.cube(e_from, e_to, prune_pattern=pat),
+            db._read_range(args.from_ns, args.to_ns, [pat]),
             args.from_ns,
             args.to_ns,
             pat,
-            resolution=res,
-            duration=dur,
+            resolution=db.params.resolution,
+            duration=db.params.duration,
         )
         for row in r.orderBy("bucket").limit(args.limit).collect():
             _emit(row.asDict())

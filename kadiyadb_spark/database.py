@@ -406,33 +406,21 @@ class Database:
         an early-round list-form entry missing the level is never skipped —
         skipping only ever acts on positive evidence, so stale or missing
         stats degrade to a full read, not a wrong one."""
-        from kadiyadb_spark.query import Re
+        from kadiyadb_spark.query import Re, compile_pattern
 
         stats = m.get("stats", {})
-        # value-set levels (the IN matcher) prune too: a segment is
-        # skippable only when its stats exclude EVERY listed value.
-        # Re levels prune on positive evidence as well — ONLY for
-        # patterns inside the _re_prune_safe whitelist (constructs the
-        # JVM rlike and Python re dialects provably share: pruning must
-        # never skip a segment the filter would match, so escapes, class
-        # intersection/nesting, inline flags etc. degrade to a full
-        # read). ``prune_any`` is the batch form (fetch_multi): a
-        # segment is kept when ANY pattern keeps it.
-        def _preds(pat: list) -> list:
-            return [
-                (
-                    S.field_col(i),
-                    v if isinstance(v, (str, Re)) else tuple(sorted(set(v))),
-                )
-                for i, v in enumerate(pat, start=1)
-                if isinstance(v, (list, tuple, set, frozenset, Re)) or v != "*"
-            ]
-
-        pred_sets: list[list] = []
-        if prune_pattern:
-            pred_sets = [_preds(prune_pattern)]
-        elif prune_any:
-            pred_sets = [_preds(p) for p in prune_any]
+        # Pruning reads compile_pattern's predicates (the one pattern form).
+        # Value-set levels (the IN matcher) prune too: a segment is
+        # skippable only when its stats exclude EVERY listed value. Re
+        # levels prune on positive evidence as well — ONLY for patterns
+        # inside the _re_prune_safe whitelist (constructs the JVM rlike and
+        # Python re dialects provably share: pruning must never skip a
+        # segment the filter would match, so escapes, class
+        # intersection/nesting, inline flags etc. degrade to a full read).
+        # ``prune_any`` is the batch form (fetch_multi): a segment is kept
+        # when ANY pattern keeps it.
+        pats = [prune_pattern] if prune_pattern else (prune_any or [])
+        pred_sets = [compile_pattern(p)[1] for p in pats]
 
         def _keep_one(st: dict, preds: list) -> bool:
             for col, val in preds:
@@ -812,16 +800,29 @@ class Database:
             delta.unpersist()
 
     # -- O2 Fetch ------------------------------------------------------------
-    def _epoch_bounds(self, from_ts: int, to_ts: int) -> "tuple[int, int]":
-        """[e_from, e_to] epoch range covering the half-open bucket window
-        of [from_ts, to_ts) — the single source of the flooring math all
-        three read paths (fetch / fetch_multi / rule_group) prune with."""
-        res, dur = self.params.resolution, self.params.duration
-        from_b = max(from_ts, 0) - (max(from_ts, 0) % res)
-        to_b = max(to_ts, 0) - (max(to_ts, 0) % res)
-        e_from = from_b - (from_b % dur)
-        e_to = (to_b - res) - ((to_b - res) % dur) if to_b > from_b else e_from
-        return e_from, e_to
+    def _read_range(
+        self,
+        from_ts: int,
+        to_ts: int,
+        patterns: "list[list]",
+        at_gen: int | None = None,
+        cluster: "list[str] | None" = None,
+    ) -> DataFrame:
+        """The one read preamble of ``fetch``, ``fetch_multi`` and
+        ``rule_group``. Callers compile their patterns first; the range spec
+        (query._slot_range) then validates [from_ts, to_ts), so a bad
+        request raises before the store is touched. The manifest is pruned
+        to the range's epochs and, in UNION form, to the segments whose
+        dimension stats keep at least one pattern — a batch scans exactly
+        the segments its individual fetches would have touched, once —
+        and the kept segments are read folded (``_read_fold``)."""
+        from kadiyadb_spark.query import _slot_range
+
+        rng = _slot_range(from_ts, to_ts, self.params.resolution, self.params.duration)
+        m = self._manifest(at_gen=at_gen)
+        return self._read_fold(
+            self._segment_paths(m, rng.epochs, prune_any=patterns), cluster=cluster
+        )
 
     def fetch(
         self,
@@ -840,23 +841,17 @@ class Database:
         ``cube``)."""
         from kadiyadb_spark.query import compile_pattern
 
-        # validate BEFORE manifest pruning touches the pattern: an illegal
-        # level must raise compile_pattern's descriptive error, not an
-        # opaque TypeError from _preds (code-review r12)
         depth, _ = compile_pattern(pattern)
-        res, dur = self.params.resolution, self.params.duration
-        e_from, e_to = self._epoch_bounds(from_ts, to_ts)
-        paths = self._scan_paths(e_from, e_to, at_gen=at_gen, prune_pattern=pattern)
         # densify groups by (epoch, f1..fd): clustering the scan on those
         # keys lets the fold and the densify share one Exchange (_read_fold)
         cluster = [S.EPOCH, *S.field_cols(depth)] if densify else None
         return fetch_df(
-            self._read_fold(paths, cluster=cluster),
+            self._read_range(from_ts, to_ts, [pattern], at_gen, cluster),
             from_ts,
             to_ts,
             pattern,
-            resolution=res,
-            duration=dur,
+            resolution=self.params.resolution,
+            duration=self.params.duration,
             densify=densify,
         )
 
@@ -868,27 +863,20 @@ class Database:
         at_gen: int | None = None,
     ) -> DataFrame:
         """The rule-evaluation batch over the persisted store: every
-        pattern answered from ONE shared scan (query.py:fetch_multi), with
-        manifest-level data skipping in UNION form — a segment is read iff
-        at least one pattern's stats evidence keeps it, so the batch scans
-        exactly the segments the individual fetches would have touched,
-        once. Sparse output with a leading ``query`` label."""
-        from kadiyadb_spark.query import compile_pattern
+        pattern answered from ONE shared scan (query.py:fetch_multi) over
+        the union-pruned segments (``_read_range``). Sparse output with a
+        leading ``query`` label."""
+        from kadiyadb_spark.query import _compile_batch
         from kadiyadb_spark.query import fetch_multi as fetch_multi_df
 
-        for p in patterns.values():  # validate before pruning (see fetch)
-            compile_pattern(p)
-        res, dur = self.params.resolution, self.params.duration
-        e_from, e_to = self._epoch_bounds(from_ts, to_ts)
+        _compile_batch(patterns)
         return fetch_multi_df(
-            self.cube(
-                e_from, e_to, at_gen=at_gen, prune_patterns=list(patterns.values())
-            ),
+            self._read_range(from_ts, to_ts, list(patterns.values()), at_gen),
             from_ts,
             to_ts,
             patterns,
-            resolution=res,
-            duration=dur,
+            resolution=self.params.resolution,
+            duration=self.params.duration,
         )
 
     def rule_group(
@@ -900,28 +888,20 @@ class Database:
     ) -> DataFrame:
         """Prometheus rule-group evaluation over the persisted store
         (query.py:fetch_rule_group): every rule answered from ONE shared
-        scan, with the same manifest-level pruning as ``fetch_multi`` —
-        epoch range from [from_ts, to_ts) plus UNION-form dimension-stats
-        skipping across the rules' patterns (a segment is read iff at
-        least one rule's evidence keeps it)."""
-        from kadiyadb_spark.query import compile_pattern, fetch_rule_group
+        scan over the segments at least one rule's stats evidence keeps
+        (``_read_range``, as ``fetch_multi``)."""
+        from kadiyadb_spark.query import _compile_rules, fetch_rule_group
 
-        for r in rules.values():  # validate before pruning (see fetch)
-            compile_pattern(r["pattern"])
-        res, dur = self.params.resolution, self.params.duration
-        e_from, e_to = self._epoch_bounds(from_ts, to_ts)
+        _compile_rules(rules)
         return fetch_rule_group(
-            self.cube(
-                e_from,
-                e_to,
-                at_gen=at_gen,
-                prune_patterns=[r["pattern"] for r in rules.values()],
+            self._read_range(
+                from_ts, to_ts, [r["pattern"] for r in rules.values()], at_gen
             ),
             from_ts,
             to_ts,
             rules,
-            resolution=res,
-            duration=dur,
+            resolution=self.params.resolution,
+            duration=self.params.duration,
         )
 
     def create_rule_group_view(
@@ -1121,7 +1101,7 @@ class Database:
         rows removed; run from the single-writer maintenance cadence like
         compact).
         """
-        from kadiyadb_spark.query import compile_pattern, match_expr
+        from kadiyadb_spark.query import _match_cond, compile_pattern
 
         n = self.max_depth
         depth, preds = compile_pattern(pattern)
@@ -1131,9 +1111,7 @@ class Database:
                 f"got depth {depth}: a shallower pattern would target rollup "
                 f"rows whose children survive"
             )
-        sel = F.lit(True)
-        for col, val in preds:
-            sel = sel & match_expr(col, val)
+        sel = _match_cond(None, preds)
         m = self._manifest()
         leaf = F.col(S.DEPTH) == n
         hits = (

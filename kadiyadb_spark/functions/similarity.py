@@ -845,9 +845,8 @@ def _residual_sample(
 ) -> "np.ndarray":
     """Residual matrix of the ``n`` LOWEST-ID vectors vs their cosine-argmax
     centroid (ivf_assign's rule) — the ONE sample/residual construction
-    shared by all three residual-codebook trainers (was copy-pasted three
-    times; a tie-break or assignment fix must hit every trainer and the
-    SQL oracle at once — review finding)."""
+    shared by all three residual-codebook trainers (a tie-break or
+    assignment fix must hit every trainer and the SQL oracle at once)."""
     import numpy as np
 
     _ids, v = _collect_matrix(

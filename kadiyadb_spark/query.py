@@ -9,6 +9,13 @@ Reference semantics (SURVEY §2):
 - to < from -> error; from == to -> empty result (fine-print #4)
 - result ordering unspecified (fine-print #8)
 
+Every reader of the Fetch family shares one definition of each read-side
+decision: ``_slot_range`` is the range spec (validation, slot flooring,
+epoch bounds, the empty flag and the pushed-down scan predicate as one SQL
+expression); ``compile_pattern`` is the one pattern form; ``_pivot_pair``
+is the two-pattern scan-and-align; ``_SlotRange.spine`` is the whole-range
+slot spine and ``_densify`` the per-epoch zero-fill.
+
 Spark shape: ONE predicate-pushed filter on the cube (epoch range, the
 bucket image of that range, exact depth and dimension equality/IN reach
 the parquet scan), then ONE aggregation keyed (epoch, series) that gathers
@@ -24,7 +31,10 @@ fold, so the fold and the densify aggregation share ONE Exchange
 
 from __future__ import annotations
 
+import functools
 import math
+import operator
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -47,10 +57,11 @@ class Re:
     when no metacharacter is needed. The pattern must compile under
     Python ``re`` (fail-fast here); evaluation is Spark's JVM ``rlike``,
     whose semantics agree with Python's for the practical construct set —
-    manifest-stats segment pruning additionally refuses to act on any
-    pattern containing a backslash escape so a dialect divergence can
+    manifest-stats segment pruning acts only on patterns inside a
+    whitelist of constructs both dialects share (no escapes, no class
+    intersection or nesting, no inline flags), so a dialect divergence can
     only ever cost a full read, never a wrong skip
-    (database.py:_segment_paths)."""
+    (database.py:_re_prune_safe)."""
 
     __slots__ = ("pattern",)
 
@@ -66,7 +77,7 @@ class Re:
             # '[..&&..]' never apply here; suppress that FutureWarning
             # deliberately (segment pruning already refuses to act on any
             # '&&' class — database.py:_re_prune_safe), keeping pytest
-            # warning-clean (VERDICT r10 item 6).
+            # warning-clean.
             with _warnings.catch_warnings():
                 _warnings.filterwarnings(
                     "ignore", message="Possible set", category=FutureWarning
@@ -143,35 +154,155 @@ def match_expr(col: str, val) -> "F.Column":
     return F.col(col) == F.lit(val)
 
 
-def _match_cond(depth: int, preds: list) -> "F.Column":
+def _match_cond(depth: "int | None", preds: list) -> "F.Column":
     """O6/O7 as one predicate over a compiled pattern: exact depth +
-    equality/IN/RLIKE on non-* levels."""
-    cond = F.col(S.DEPTH) == F.lit(depth)
-    for col, val in preds:
-        cond = cond & match_expr(col, val)
-    return cond
+    equality/IN/RLIKE on non-* levels. ``depth=None`` leaves the depth
+    term out (the two-pattern pivot states the shared depth once in its
+    scan); a pattern with no exact level then matches every row."""
+    conds = [match_expr(col, val) for col, val in preds]
+    if depth is not None:
+        conds.insert(0, F.col(S.DEPTH) == F.lit(depth))
+    return functools.reduce(operator.and_, conds) if conds else F.lit(True)
 
 
 def pattern_filter(df: DataFrame, pattern: list) -> DataFrame:
-    """O6/O7 as a Catalyst filter: exact depth + equality/IN on non-* levels."""
+    """O6/O7 as a Catalyst filter: exact depth + equality/IN/RLIKE on
+    non-* levels."""
     return df.filter(_match_cond(*compile_pattern(pattern)))
 
 
-def _epoch_slots_sql(from_b: int, to_b: int, resolution: int, duration: int) -> str:
-    """Slot starts of ONE epoch clipped to [from_b, to_b), as an array
-    expression over the row's epoch column. sequence() is inclusive of its
-    stop, so the last slot is the exclusive clip minus one resolution; both
-    ends are slot-aligned by construction (duration % resolution == 0).
-    Evaluated per (epoch, series) row at explode time — the densify axis is
-    never materialized as a table, so its memory cost is O(slots-per-epoch)
-    however wide the requested range is.
+class _SlotRange(NamedTuple):
+    """The one range spec of every Fetch-family reader, built once per call
+    by ``_slot_range``: [from_b, to_b) are the slot-floored ends, and
+    ``duration`` (the cube's epoch length) is None when the caller does not
+    know it. Integer-only expressions are SQL text, not Column calls: one
+    parsed expression costs one JVM round trip where the Column form costs
+    one per call."""
 
-    SQL text, not Column calls: every bound is an int, and one parsed
-    expression costs one JVM round trip where the Column form costs one
-    per call."""
+    from_b: int
+    to_b: int
+    resolution: int
+    duration: "int | None"
+
+    @property
+    def empty(self) -> bool:
+        """from == to after flooring: an empty result, not an error."""
+        return self.from_b == self.to_b
+
+    @property
+    def epochs(self) -> range:
+        """Start of every epoch holding a slot of [from_b, to_b) — the
+        manifest-level prune set; ``epochs.start``/``epochs.stop`` bound
+        the buckets of those whole epochs. Needs ``duration``."""
+        d = self.duration
+        first = self.from_b - self.from_b % d
+        if self.empty:
+            return range(first, first, d)
+        last = self.to_b - self.resolution
+        return range(first, last - last % d + d, d)
+
+    def scan_sql(self, whole_epochs: bool = False) -> str:
+        """The pushed-down scan predicate: epoch bounds plus bucket range.
+        Catalyst cannot derive epoch bounds from the bucket range through
+        the floor arithmetic, so they are stated explicitly and an
+        epoch-partitioned cube prunes partitions. The upper bound (an epoch
+        starts at or before its last in-range slot) holds for ANY duration;
+        a known ``duration`` adds the exact lower bound. ``whole_epochs``
+        widens the bucket range to the touched epochs' full span — it drops
+        no row of those epochs, which densify's per-epoch membership
+        needs."""
+        lo, hi = self.from_b, self.to_b
+        if whole_epochs:
+            lo, hi = self.epochs.start, self.epochs.stop
+        sql = (
+            f"{S.EPOCH} <= {self.to_b - self.resolution} "
+            f"AND {S.BUCKET} >= {lo} AND {S.BUCKET} < {hi}"
+        )
+        if self.duration is not None:
+            sql = f"{S.EPOCH} >= {self.epochs.start} AND {sql}"
+        return sql
+
+    def epoch_slots_sql(self) -> str:
+        """Slot starts of the row's epoch clipped to [from_b, to_b), as an
+        array expression over the epoch column (needs ``duration``).
+        sequence() is inclusive of its stop, so the last slot is the
+        exclusive clip minus one resolution. Evaluated per (epoch, series)
+        row at explode time — the densify axis is never materialized as a
+        table, so its memory cost is O(slots-per-epoch) however wide the
+        requested range is."""
+        return (
+            f"sequence(greatest({S.EPOCH}, {self.from_b}), "
+            f"least({S.EPOCH} + {self.duration}, {self.to_b}) - {self.resolution}, "
+            f"{self.resolution})"
+        )
+
+    def spine(self, spark: SparkSession, labels: "list[str]" = ()) -> DataFrame:
+        """Every slot start of [from_b, to_b) as ``bucket`` — once per
+        label, carried as ``query``, when ``labels`` are given. A Range
+        node generates the slots lazily, so the plan holds no literal array
+        however wide the range, and an empty range yields no rows."""
+        slots = spark.range(self.from_b, self.to_b, self.resolution)
+        if not labels:
+            return slots.selectExpr(f"id AS {S.BUCKET}")
+        return slots.select(
+            F.explode(F.array(*[F.lit(n) for n in labels])).alias("query"),
+            F.col("id").alias(S.BUCKET),
+        )
+
+
+def _slot_range(
+    from_ts: int, to_ts: int, resolution: int, duration: "int | None" = None
+) -> _SlotRange:
+    """Validate [from_ts, to_ts) and floor both ends to the slot grid. The
+    reference FLOORS both ends (database.go:176-199, split at :267-277 —
+    pos1 = floor((to-ets)/res)) and scans slots [pos0, pos1), so a `to`
+    inside a slot EXCLUDES that partial slot: fetch(0, 90) at res=60
+    returns only slot 0, and fetch(90, 90) is empty."""
+    if from_ts < 0 or to_ts < from_ts:
+        raise InvalidTimeRange(
+            f"invalid range [{from_ts}, {to_ts}): need 0 <= from <= to"
+        )
+    return _SlotRange(
+        from_ts - from_ts % resolution, to_ts - to_ts % resolution, resolution, duration
+    )
+
+
+def _densify(df: DataFrame, keys: list, rng: _SlotRange, zeros: dict) -> DataFrame:
+    """Per-epoch dense zero-fill in ONE aggregation: each ``keys`` group
+    (which includes the epoch) gathers its in-range points into a map
+    bucket -> struct(value columns), then fans out to its epoch's clipped
+    slot sequence map-side; a gap slot reads each value column as its
+    ``zeros`` literal. Series membership is per-EPOCH, not per-slot: a
+    group present in a touched epoch yields a dense (possibly all-zero)
+    vector for that epoch and nothing for epochs where it never appeared
+    (database.go:204-251, database_test.go:203-281) — rows OUTSIDE the
+    bucket range still vote for membership (the CASE leaves them out of
+    the map but not out of the group). Per-group state is bounded by
+    slots-per-epoch, never by range width or series count. The map build
+    assumes one row per (keys, bucket); duplicate bucket keys would
+    error."""
+    vals = ", ".join(zeros)
     return (
-        f"sequence(greatest({S.EPOCH}, {from_b}), "
-        f"least({S.EPOCH} + {duration}, {to_b}) - {resolution}, {resolution})"
+        df.groupBy(*keys)
+        .agg(
+            # collect_list drops the CASE's nulls; all-out-of-range groups
+            # yield an empty map (all-zero dense vector)
+            F.expr(
+                f"map_from_entries(collect_list(CASE WHEN {S.BUCKET} >= {rng.from_b} "
+                f"AND {S.BUCKET} < {rng.to_b} THEN struct({S.BUCKET}, struct({vals})) "
+                "END)) AS _pts"
+            )
+        )
+        .selectExpr(*keys, f"explode({rng.epoch_slots_sql()}) AS {S.BUCKET}", "_pts")
+        .selectExpr(
+            *keys,
+            S.BUCKET,
+            # try_element_at is NULL on gap slots
+            *[
+                f"coalesce(try_element_at(_pts, {S.BUCKET}).{c}, {z}) AS {c}"
+                for c, z in zeros.items()
+            ],
+        )
     )
 
 
@@ -191,22 +322,10 @@ def fetch(
     densifies; sparse mode is for when the caller aggregates anyway).
     Row order is unspecified (fine-print #8).
     """
-    if from_ts < 0 or to_ts < 0:
-        raise InvalidTimeRange("timestamps must be non-negative")
-    if to_ts < from_ts:
-        raise InvalidTimeRange(f"invalid range: to={to_ts} < from={from_ts}")
-
+    rng = _slot_range(from_ts, to_ts, resolution, duration)
     depth, preds = compile_pattern(pattern)
     fcols = S.field_cols(depth)
-
-    # Slot-align the range: reference FLOORS both ends (database.go:176-199,
-    # split at :267-277 — pos1 = floor((to-ets)/res)) and scans slots
-    # [pos0, pos1), so a `to` inside a slot EXCLUDES that partial slot:
-    # fetch(0, 90) at res=60 returns only slot 0, and fetch(90, 90) is empty.
-    from_b = from_ts - (from_ts % resolution)
-    to_b = to_ts - (to_ts % resolution)
-
-    if from_b == to_b:
+    if rng.empty:
         # from == to -> empty result, not an error (fine-print #4)
         return cube.sparkSession.createDataFrame(
             [],
@@ -215,75 +334,24 @@ def fetch(
             + ", bucket long, total double, cnt double",
         )
 
-    # The epoch bounds are derivable from the bucket range but Catalyst can't
-    # infer that through the floor arithmetic — state them explicitly so the
-    # values scan partition-prunes on epoch too. Every DataFrame call is a
-    # driver-side analysis pass and every Column call a JVM round trip, so
-    # all predicates go into ONE filter and the integer-only expressions
-    # below are SQL text (one round trip each).
-    e_from = from_b - (from_b % duration)
-    e_to = (to_b - resolution) - ((to_b - resolution) % duration)
+    # Every DataFrame call is a driver-side analysis pass and every Column
+    # call a JVM round trip, so all predicates go into ONE filter and the
+    # range predicate is SQL text (one round trip).
     matched = _match_cond(depth, preds)
-    epochs = f"{S.EPOCH} BETWEEN {e_from} AND {e_to}"
     if not densify:
-        return cube.filter(
-            matched & F.expr(f"{epochs} AND {S.BUCKET} >= {from_b} AND {S.BUCKET} < {to_b}")
-        ).select(S.EPOCH, *fcols, S.BUCKET, S.TOTAL, S.CNT)
-
-    # Series membership is per-EPOCH, not per-slot: a series present in a
-    # touched epoch's index yields a dense (possibly all-zero) vector for
-    # that epoch, and nothing for epochs where it was never tracked
-    # (database.go:204-251, database_test.go:203-281).
-    #
-    # r13 (guide §2.4, remove shuffles outright): densify is ONE
-    # aggregation keyed (epoch, series) — each group gathers its in-range
-    # points into a map and fans out to the epoch's clipped slot sequence
-    # map-side. The previous shape (distinct membership frame + left join
-    # of the grid against the matched points) cost a second full scan+fold
-    # of the cube plus two extra Exchanges (distinct, join); this one scans
-    # once and shuffles once. Per-group state is bounded by
-    # slots-per-epoch (duration/resolution — e.g. 1440 for 1m slots in a
-    # 1d epoch), never by range width or series count. Rows OUTSIDE the
-    # bucket range still vote for membership (the CASE leaves them out
-    # of the map but not out of the group) — the per-epoch membership rule
-    # above. The map build assumes the cube is FOLDED (one row per
-    # (epoch, series, bucket) — both track_batch and Database.cube
-    # guarantee it); duplicate bucket keys would error here where the old
-    # join silently emitted duplicate slots.
-    #
-    # The bucket bounds of the filter are the epoch range restated on the
-    # bucket axis (every row of epoch e has e <= bucket < e + duration):
-    # they drop no member row, and they give the parquet reader a bucket
-    # predicate for row-group skipping.
-    per_series = (
-        cube.filter(
-            matched
-            & F.expr(
-                f"{epochs} AND {S.BUCKET} >= {e_from} "
-                f"AND {S.BUCKET} < {e_to + duration}"
-            )
+        return cube.filter(matched & F.expr(rng.scan_sql())).select(
+            S.EPOCH, *fcols, S.BUCKET, S.TOTAL, S.CNT
         )
-        .groupBy(S.EPOCH, *fcols)
-        .agg(
-            # collect_list drops the CASE's nulls; all-out-of-range groups
-            # yield an empty map (all-zero dense vector)
-            F.expr(
-                f"map_from_entries(collect_list(CASE WHEN {S.BUCKET} >= {from_b} "
-                f"AND {S.BUCKET} < {to_b} THEN struct({S.BUCKET}, "
-                f"struct({S.TOTAL} AS t, {S.CNT} AS c)) END)) AS _pts"
-            )
-        )
-    )
-    slots = _epoch_slots_sql(from_b, to_b, resolution, duration)
-    return per_series.selectExpr(
-        S.EPOCH, *fcols, f"explode({slots}) AS {S.BUCKET}", "_pts"
-    ).selectExpr(
-        S.EPOCH,
-        *fcols,
-        S.BUCKET,
-        # try_element_at is NULL on gap slots
-        f"coalesce(try_element_at(_pts, {S.BUCKET}).t, 0.0D) AS {S.TOTAL}",
-        f"coalesce(try_element_at(_pts, {S.BUCKET}).c, 0.0D) AS {S.CNT}",
+    # Densify scans whole epochs (membership is per epoch, see _densify);
+    # the bucket bounds restate the epoch range on the bucket axis, so they
+    # drop no member row and give the parquet reader a bucket predicate
+    # for row-group skipping. The map build assumes the cube is FOLDED —
+    # both track_batch and Database.cube guarantee it.
+    return _densify(
+        cube.filter(matched & F.expr(rng.scan_sql(whole_epochs=True))),
+        [S.EPOCH, *fcols],
+        rng,
+        {S.TOTAL: "0.0D", S.CNT: "0.0D"},
     )
 
 
@@ -428,20 +496,12 @@ def series_smooth(
     )
 
 
-def _exact_pattern_pred(pattern: list[str]) -> "F.Column":
-    """Equality predicate of an EXACT pattern (every level a scalar
-    string) — the pivot condition of the two-pattern operator family."""
-    cond = F.lit(True)
-    for i, v in enumerate(pattern, start=1):
-        cond = cond & (F.col(S.field_col(i)) == F.lit(v))
-    return cond
-
-
-def _require_exact_pair(a: list[str], b: list[str], op: str) -> int:
+def _require_exact_pair(a: list[str], b: list[str], op: str) -> tuple:
     """Shared validation of the two-pattern operators (ratio, binop,
-    burn_rate, ...): both patterns exact scalars of one shared depth —
-    ONE definition (the preamble had been copy-pasted four times).
-    Returns the depth."""
+    burn_rate): both patterns exact scalars of one shared depth. Returns
+    (depth, a_preds, b_preds) — the compiled predicates ``_pivot_pair``
+    takes."""
+    compiled = []
     for p in (a, b):
         d, preds = compile_pattern(p)
         if any(isinstance(v, tuple) for _, v in preds):
@@ -449,13 +509,59 @@ def _require_exact_pair(a: list[str], b: list[str], op: str) -> int:
         if any(not isinstance(v, str) for _, v in preds):
             # Re matchers compile to one pred per level, so the len check
             # below passes them — without this they die much later in
-            # F.lit(Re(...)) with an opaque literal error (review finding)
+            # F.lit(Re(...)) with an opaque literal error
             raise ValueError(f"{op} needs scalar exact patterns (no regex matchers)")
         if len(preds) != d:
             raise ValueError(f"{op} needs exact patterns, got {p!r}")
+        compiled.append(preds)
     if len(a) == 0 or len(a) != len(b):
         raise ValueError(f"{op}: both patterns must share a depth >= 1")
-    return len(a)
+    return (len(a), *compiled)
+
+
+def _pivot_pair(
+    cube: DataFrame,
+    rng: _SlotRange,
+    depth: int,
+    a_preds: list,
+    b_preds: list,
+    keys: "list[str]" = (),
+) -> DataFrame:
+    """The two-pattern operators' shared scan and alignment: ONE pushed-down
+    scan of the depth-``depth`` rows matching either compiled pattern in
+    the range, and ONE (keys, bucket) aggregation pivoting each role's
+    integer-scaled exact sum into ``_a4`` / ``_b4`` (null where that role
+    never fired). No self-join, no second scan: the naive two-fetch
+    formulation scans the cube twice and shuffles both sides into an
+    equi-join. Long sums are associative, so each operator's output is one
+    deterministic expression over exact inputs — never a quotient of
+    partition-order double sums (functions/num.py:exact_sum4_expr)."""
+    is_a, is_b = _match_cond(None, a_preds), _match_cond(None, b_preds)
+    x4 = scale4_expr(F.col(S.TOTAL))
+    return (
+        cube.filter(F.expr(f"{S.DEPTH} = {depth} AND {rng.scan_sql()}") & (is_a | is_b))
+        .groupBy(*keys, S.BUCKET)
+        .agg(
+            F.sum(F.when(is_a, x4)).alias("_a4"),
+            F.sum(F.when(is_b, x4)).alias("_b4"),
+        )
+    )
+
+
+def _ratio_select(g: DataFrame, *keys: str) -> DataFrame:
+    """series_ratio's output over a pivot: the ratio divides the two LONG
+    sums directly — one long/long division, identical IEEE in any
+    engine."""
+    from kadiyadb_spark.functions.num import round4_expr
+
+    ratio = F.when(F.col("_b4") != 0, F.col("_a4") / F.col("_b4"))
+    return g.select(
+        *keys,
+        S.BUCKET,
+        (F.col("_a4") / F.lit(10000.0)).alias("num_total"),
+        (F.col("_b4") / F.lit(10000.0)).alias("den_total"),
+        round4_expr(ratio).alias("ratio"),
+    )
 
 
 def series_ratio(
@@ -470,44 +576,14 @@ def series_ratio(
     """Aligned binary operation over two exact series (the PromQL
     ``a / b`` — error rate = errors/clicks per slot): ONE cube scan
     filters both exact paths, a conditional-sum pivot aligns them per
-    bucket, and the ratio is null where the denominator is absent or
-    zero. No self-join, no second scan: the naive two-fetch formulation
-    scans the cube twice and shuffles both sides into an equi-join, where
-    this is one pushed-down scan and one bucket-keyed aggregation.
+    bucket (``_pivot_pair``), and the ratio is null where the denominator
+    is absent or zero.
 
     Patterns must be exact (no wildcards) and the same depth — aligned
     division across wildcard fan-outs is ``series_ratio_wildcard``."""
-    depth = _require_exact_pair(num_pattern, den_pattern, "series_ratio")
-    if to_ts < from_ts or from_ts < 0:
-        raise InvalidTimeRange(f"invalid range [{from_ts}, {to_ts})")
-    from kadiyadb_spark.functions.num import round4_expr
-
-    from_b = from_ts - (from_ts % resolution)
-    to_b = to_ts - (to_ts % resolution)
-
-    is_num, is_den = _exact_pattern_pred(num_pattern), _exact_pattern_pred(den_pattern)
-    base = cube.filter(
-        (F.col(S.DEPTH) == F.lit(depth))
-        & _epoch_bounds_pred(from_b, to_b, resolution, duration)
-        & (F.col(S.BUCKET) >= F.lit(from_b))
-        & (F.col(S.BUCKET) < F.lit(to_b))
-        & (is_num | is_den)
-    )
-    # Integer-scaled exact sums (functions/num.py:exact_sum4_expr rationale):
-    # the ratio divides the two LONG sums directly — one deterministic
-    # division on associative inputs, never a partition-order double sum.
-    scaled = scale4_expr(F.col(S.TOTAL))
-    g = base.groupBy(S.BUCKET).agg(
-        F.sum(F.when(is_num, scaled)).alias("_n4"),
-        F.sum(F.when(is_den, scaled)).alias("_d4"),
-    )
-    ratio = F.when(F.col("_d4") != 0, F.col("_n4") / F.col("_d4"))
-    return g.select(
-        S.BUCKET,
-        (F.col("_n4") / F.lit(10000.0)).alias("num_total"),
-        (F.col("_d4") / F.lit(10000.0)).alias("den_total"),
-        round4_expr(ratio).alias("ratio"),
-    )
+    depth, pn, pd = _require_exact_pair(num_pattern, den_pattern, "series_ratio")
+    rng = _slot_range(from_ts, to_ts, resolution, duration)
+    return _ratio_select(_pivot_pair(cube, rng, depth, pn, pd))
 
 
 def series_ratio_wildcard(
@@ -544,75 +620,20 @@ def series_ratio_wildcard(
         )
     if not wild:
         raise ValueError("no wildcard level; use series_ratio for exact patterns")
+    compiled = []
     for p in (num_pattern, den_pattern):
-        _, _preds = compile_pattern(p)  # validates '' / illegal values
-        if any(not isinstance(v, str) for _, v in _preds):
+        _, preds = compile_pattern(p)  # validates '' / illegal values
+        if any(not isinstance(v, str) for _, v in preds):
             raise ValueError(
                 "series_ratio_wildcard needs scalar exact levels "
                 "(no value sets or regex matchers)"
             )
-    if to_ts < from_ts or from_ts < 0:
-        raise InvalidTimeRange(f"invalid range [{from_ts}, {to_ts})")
-    from kadiyadb_spark.functions.num import round4_expr
-
-    depth = len(num_pattern)
-    from_b = from_ts - (from_ts % resolution)
-    to_b = to_ts - (to_ts % resolution)
-
-    def _is(pattern):
-        # wildcard-AWARE predicate: '*' levels match anything (the shared
-        # _exact_pattern_pred is for exact patterns only)
-        cond = F.lit(True)
-        for i, v in enumerate(pattern, start=1):
-            if v != "*":
-                cond = cond & (F.col(S.field_col(i)) == F.lit(v))
-        return cond
-
-    is_num, is_den = _is(num_pattern), _is(den_pattern)
+        compiled.append(preds)
+    rng = _slot_range(from_ts, to_ts, resolution, duration)
     wild_cols = [S.field_col(i) for i in wild]
-    base = cube.filter(
-        (F.col(S.DEPTH) == F.lit(depth))
-        & _epoch_bounds_pred(from_b, to_b, resolution, duration)
-        & (F.col(S.BUCKET) >= F.lit(from_b))
-        & (F.col(S.BUCKET) < F.lit(to_b))
-        & (is_num | is_den)
+    return _ratio_select(
+        _pivot_pair(cube, rng, len(num_pattern), *compiled, keys=wild_cols), *wild_cols
     )
-    # Same integer-scaled exact-sum shape as series_ratio: long sums are
-    # associative, and the ratio is ONE long/long division (identical IEEE
-    # result in any engine) instead of a quotient of partition-order sums.
-    scaled = scale4_expr(F.col(S.TOTAL))
-    g = base.groupBy(*wild_cols, S.BUCKET).agg(
-        F.sum(F.when(is_num, scaled)).alias("_n4"),
-        F.sum(F.when(is_den, scaled)).alias("_d4"),
-    )
-    ratio = F.when(F.col("_d4") != 0, F.col("_n4") / F.col("_d4"))
-    return g.select(
-        *wild_cols,
-        S.BUCKET,
-        (F.col("_n4") / F.lit(10000.0)).alias("num_total"),
-        (F.col("_d4") / F.lit(10000.0)).alias("den_total"),
-        round4_expr(ratio).alias("ratio"),
-    )
-
-
-def _epoch_bounds_pred(
-    from_b: int, to_b: int, resolution: int, duration: "int | None"
-) -> "F.Column":
-    """Explicit epoch-partition bounds for a bucket-range scan. Catalyst
-    cannot derive epoch bounds from the bucket range through the floor
-    arithmetic (fetch's own preamble states them for this reason), so
-    without them an epoch-PARTITIONED 100 TB cube lists and scans every
-    partition for a one-hour query (review finding — the whole series_*
-    family scanned unpruned). The upper bound (an epoch starts at or
-    before its last bucket) holds for ANY duration; passing the cube's
-    ``duration`` adds the exact lower bound too. Degenerate empty ranges
-    (to_b <= from_b) skip the pred — callers return empty anyway."""
-    if to_b <= from_b:
-        return F.lit(True)
-    cond = F.col(S.EPOCH) <= F.lit(to_b - resolution)
-    if duration is not None:
-        cond = cond & (F.col(S.EPOCH) >= F.lit(from_b - (from_b % duration)))
-    return cond
 
 
 def _series_scan_cond(
@@ -622,27 +643,14 @@ def _series_scan_cond(
     resolution: int,
     duration: "int | None" = None,
 ) -> tuple["F.Column", int]:
-    """Shared scan preamble of the series_* operator family: compile the
-    pattern, validate the half-open range, floor both ends to the slot
-    grid, and build the pushed-down (depth, epoch-bounds, bucket-range,
-    level predicates) filter. ONE definition — a fix to range flooring or
-    pattern-predicate handling must not need replicating across every
-    operator (live-review finding: the preamble had been copy-pasted
-    nine times). ``duration``: the cube's epoch length — pass it to
-    partition-prune the epoch lower bound (see _epoch_bounds_pred).
-    Returns (condition, depth)."""
+    """Shared scan filter of the series_* operator family: the compiled
+    pattern's (depth, level predicates) and the range spec's pushed-down
+    epoch bounds and bucket range (``_SlotRange.scan_sql``).
+    ``duration``: the cube's epoch length — pass it to partition-prune the
+    epoch lower bound too. Returns (condition, depth)."""
     depth, preds = compile_pattern(pattern)
-    if to_ts < from_ts or from_ts < 0:
-        raise InvalidTimeRange(f"invalid range [{from_ts}, {to_ts})")
-    from_b = from_ts - (from_ts % resolution)
-    to_b = to_ts - (to_ts % resolution)
-    cond = (
-        _match_cond(depth, preds)
-        & _epoch_bounds_pred(from_b, to_b, resolution, duration)
-        & (F.col(S.BUCKET) >= F.lit(from_b))
-        & (F.col(S.BUCKET) < F.lit(to_b))
-    )
-    return cond, depth
+    rng = _slot_range(from_ts, to_ts, resolution, duration)
+    return _match_cond(depth, preds) & F.expr(rng.scan_sql()), depth
 
 
 def series_sum_by(
@@ -1837,27 +1845,11 @@ def series_binop(
     ops = {"add", "sub", "mul", "div"}
     if op not in ops:
         raise ValueError(f"op must be one of {sorted(ops)}, got {op!r}")
-    depth = _require_exact_pair(a_pattern, b_pattern, "series_binop")
-    if to_ts < from_ts or from_ts < 0:
-        raise InvalidTimeRange(f"invalid range [{from_ts}, {to_ts})")
+    depth, pa, pb = _require_exact_pair(a_pattern, b_pattern, "series_binop")
+    rng = _slot_range(from_ts, to_ts, resolution, duration)
     from kadiyadb_spark.functions.num import round4_expr
 
-    from_b = from_ts - (from_ts % resolution)
-    to_b = to_ts - (to_ts % resolution)
-
-    is_a, is_b = _exact_pattern_pred(a_pattern), _exact_pattern_pred(b_pattern)
-    base = cube.filter(
-        (F.col(S.DEPTH) == F.lit(depth))
-        & _epoch_bounds_pred(from_b, to_b, resolution, duration)
-        & (F.col(S.BUCKET) >= F.lit(from_b))
-        & (F.col(S.BUCKET) < F.lit(to_b))
-        & (is_a | is_b)
-    )
-    scaled = scale4_expr(F.col(S.TOTAL))
-    g = base.groupBy(S.BUCKET).agg(
-        F.sum(F.when(is_a, scaled)).alias("_a4"),
-        F.sum(F.when(is_b, scaled)).alias("_b4"),
-    )
+    g = _pivot_pair(cube, rng, depth, pa, pb)
     a4, b4 = F.col("_a4"), F.col("_b4")
     if op == "add":
         val = ((a4 + b4) / F.lit(10000.0))
@@ -2324,8 +2316,8 @@ def series_burn_rate(
     error/request counters the reference stores.
 
     Engine-default-free: one pushed-down scan pivots the two exact paths
-    per slot (series_ratio's shape); the slot axis DENSIFIES via a
-    generated range (missing slots count 0 — a gap must not shrink the
+    per slot (series_ratio's shape); the slot axis DENSIFIES over the
+    range's slot spine (missing slots count 0 — a gap must not shrink the
     window); window sums fold exact scaled longs; each burn is ONE
     long/long division divided by the (1 − slo) literal — both engines
     compute the identical double. The windows order a SINGLE global
@@ -2335,44 +2327,21 @@ def series_burn_rate(
 
     Output: bucket, err_total, req_total, burn_short, burn_long,
     firing."""
-    depth = _require_exact_pair(error_pattern, total_pattern, "series_burn_rate")
+    depth, pe, pt = _require_exact_pair(error_pattern, total_pattern, "series_burn_rate")
     if not (0.0 < slo < 1.0):
         raise ValueError(f"slo must be in (0, 1), got {slo}")
     if not (1 <= short_slots <= long_slots):
         raise ValueError("need 1 <= short_slots <= long_slots")
-    if to_ts < from_ts or from_ts < 0:
-        raise InvalidTimeRange(f"invalid range [{from_ts}, {to_ts})")
+    rng = _slot_range(from_ts, to_ts, resolution, duration)
     from pyspark.sql import Window
 
     from kadiyadb_spark.functions.num import round4_expr
 
-    from_b = from_ts - (from_ts % resolution)
-    to_b = to_ts - (to_ts % resolution)
-
-    is_err, is_tot = _exact_pattern_pred(error_pattern), _exact_pattern_pred(total_pattern)
-    x4 = scale4_expr(F.col(S.TOTAL))
-    g = (
-        cube.filter(
-            (F.col(S.DEPTH) == F.lit(depth))
-            & _epoch_bounds_pred(from_b, to_b, resolution, duration)
-            & (F.col(S.BUCKET) >= F.lit(from_b))
-            & (F.col(S.BUCKET) < F.lit(to_b))
-            & (is_err | is_tot)
-        )
-        .groupBy(S.BUCKET)
-        .agg(
-            F.sum(F.when(is_err, x4)).alias("_e4"),
-            F.sum(F.when(is_tot, x4)).alias("_t4"),
-        )
-    )
-    n_slots = (to_b - from_b) // resolution
-    axis = cube.sparkSession.range(n_slots).select(
-        (F.lit(from_b) + F.col("id") * F.lit(resolution)).alias(S.BUCKET)
-    )
-    dense = axis.join(g, S.BUCKET, "left").select(
+    g = _pivot_pair(cube, rng, depth, pe, pt)
+    dense = rng.spine(cube.sparkSession).join(g, S.BUCKET, "left").select(
         S.BUCKET,
-        F.coalesce("_e4", F.lit(0)).alias("_e4"),
-        F.coalesce("_t4", F.lit(0)).alias("_t4"),
+        F.coalesce("_a4", F.lit(0)).alias("_e4"),
+        F.coalesce("_b4", F.lit(0)).alias("_t4"),
     )
     budget = 1.0 - slo  # one Python double, embedded identically in the oracle
 
@@ -2417,7 +2386,7 @@ def fetch_multi(
     pattern it matches, and explodes — fan-out equals the number of
     matches, rows matching nothing never leave the scan.
 
-    Depths may MIX (real Prometheus rule groups do — VERDICT r09 item 7):
+    Depths may MIX (real Prometheus rule groups do):
     the output carries field columns to the batch's MAXIMUM depth, and a
     shallower query's rows leave the deeper columns NULL — exactly how
     the cube itself stores rollup rows, so the schema stays rectangular
@@ -2429,43 +2398,21 @@ def fetch_multi(
     zero-fill densify per query downstream — densification is per-query
     series membership, which no longer shares work. Row order
     unspecified (fine-print #8)."""
-    if not patterns:
-        raise ValueError("empty pattern batch")
-    if from_ts < 0 or to_ts < 0:
-        raise InvalidTimeRange("timestamps must be non-negative")
-    if to_ts < from_ts:
-        raise InvalidTimeRange(f"invalid range: to={to_ts} < from={from_ts}")
-    compiled = {name: compile_pattern(p) for name, p in patterns.items()}
-    max_depth = max(d for d, _ in compiled.values())
-    fcols = S.field_cols(max_depth)
-
-    from_b = from_ts - (from_ts % resolution)
-    to_b = to_ts - (to_ts % resolution)
-    spark = cube.sparkSession
-    if from_b == to_b:
-        return spark.createDataFrame(
+    compiled = _compile_batch(patterns)
+    rng = _slot_range(from_ts, to_ts, resolution, duration)
+    fcols = S.field_cols(max(d for d, _ in compiled.values()))
+    if rng.empty:
+        return cube.sparkSession.createDataFrame(
             [],
             schema="query string, epoch long, "
             + ", ".join(f"{c} string" for c in fcols)
             + ", bucket long, total double, cnt double",
         )
-    e_from = from_b - (from_b % duration)
-    e_to = (to_b - resolution) - ((to_b - resolution) % duration)
-
     # each pattern's predicate is built once and used twice (the scan's
     # OR and the labels): every Column call is a JVM round trip
     conds = {name: _match_cond(*item) for name, item in sorted(compiled.items())}
-    any_match = F.lit(False)
-    for cond in conds.values():
-        any_match = any_match | cond
-    # integer bounds as SQL text: one JVM round trip (see fetch)
-    scanned = cube.filter(
-        F.expr(
-            f"{S.EPOCH} BETWEEN {e_from} AND {e_to} "
-            f"AND {S.BUCKET} >= {from_b} AND {S.BUCKET} < {to_b}"
-        )
-        & any_match
-    )
+    any_match = functools.reduce(operator.or_, conds.values())
+    scanned = cube.filter(F.expr(rng.scan_sql()) & any_match)
     # deterministic label order; array_compact drops the non-matches
     labels = F.array_compact(
         F.array(*[F.when(cond, F.lit(name)) for name, cond in conds.items()])
@@ -2473,6 +2420,13 @@ def fetch_multi(
     return scanned.select(
         F.explode(labels).alias("query"), S.EPOCH, *fcols, S.BUCKET, S.TOTAL, S.CNT
     )
+
+
+def _compile_batch(patterns: "dict[str, list]") -> dict:
+    """Validate a named pattern batch: {name: compile_pattern(pattern)}."""
+    if not patterns:
+        raise ValueError("empty pattern batch")
+    return {name: compile_pattern(p) for name, p in patterns.items()}
 
 
 def fetch_absent(
@@ -2492,42 +2446,20 @@ def fetch_absent(
 
     Plan shape: the matched buckets come off ONE filtered scan (the same
     pushdown predicates as ``fetch``) collapsed to distinct buckets —
-    cardinality <= slots in range, tiny — and a dense slot spine is
-    generated MAP-SIDE (explode(sequence()) over a literal range, no axis
-    table) and LEFT-ANTI joined against them. At 100 TB the cost is the
-    pruned scan; the anti-join sides are both O(range/resolution) rows."""
-    if from_ts < 0 or to_ts < 0:
-        raise InvalidTimeRange("timestamps must be non-negative")
-    if to_ts < from_ts:
-        raise InvalidTimeRange(f"invalid range: to={to_ts} < from={from_ts}")
-    compile_pattern(pattern)  # validates depth/values
-    from_b = from_ts - (from_ts % resolution)
-    to_b = to_ts - (to_ts % resolution)
-    spark = cube.sparkSession
-    if from_b == to_b:
-        return spark.createDataFrame([], schema="bucket long, absent int")
-    e_from = from_b - (from_b % duration)
-    e_to = (to_b - resolution) - ((to_b - resolution) % duration)
+    cardinality <= slots in range, tiny — and the range's slot spine
+    (a lazily generated Range, no axis table) is LEFT-ANTI joined against
+    them. At 100 TB the cost is the pruned scan; the anti-join sides are
+    both O(range/resolution) rows."""
+    rng = _slot_range(from_ts, to_ts, resolution, duration)
     present = (
-        pattern_filter(cube, pattern)
-        .filter(
-            (F.col(S.EPOCH) >= F.lit(e_from))
-            & (F.col(S.EPOCH) <= F.lit(e_to))
-            & (F.col(S.BUCKET) >= F.lit(from_b))
-            & (F.col(S.BUCKET) < F.lit(to_b))
-        )
+        cube.filter(_match_cond(*compile_pattern(pattern)) & F.expr(rng.scan_sql()))
         .select(S.BUCKET)
         .distinct()
     )
-    spine = spark.range(1).select(
-        F.explode(
-            F.sequence(
-                F.lit(from_b), F.lit(to_b - resolution), F.lit(resolution)
-            )
-        ).alias(S.BUCKET)
-    )
-    return spine.join(present, on=S.BUCKET, how="left_anti").select(
-        S.BUCKET, F.lit(1).alias("absent")
+    return (
+        rng.spine(cube.sparkSession)
+        .join(present, on=S.BUCKET, how="left_anti")
+        .select(S.BUCKET, F.lit(1).alias("absent"))
     )
 
 
@@ -2683,21 +2615,21 @@ def fetch_rule_group(
     exists for (a rule group is evaluated every interval; at 100 TB the
     scan is the cost, so N rules must not mean N scans).
 
-    Rule kinds (r13, VERDICT r12 item 8 — previously above-only):
+    Rule kinds:
 
     - ABOVE (default): ``{pattern, threshold > 0, for_slots}``. Evaluates
       on the SPARSE frame: an absent slot zero-fills below any positive
       threshold, so run consecutiveness over observed buckets (integer
       gaps-and-islands on slot − rank) equals the dense evaluation —
-      validated at construction. Above-only groups keep the r12 plan:
-      one window Exchange AFTER the breach filter, nothing else.
+      validated at construction. Above-only groups plan one window
+      Exchange AFTER the breach filter, nothing else.
     - BELOW: ``{pattern, threshold, for_slots, above: False}``. Needs the
       DENSE frame — a missing slot reads as the reference's zero-fill
       (O2) and 0 <= threshold breaches — so the rule's matched series
-      densify over the slot grid (map-side per-epoch sequence explode,
-      fetch's exact membership rule: a series zero-fills only over epochs
-      where it was tracked) and left-join their observed totals: ONE
-      extra (query, series, bucket) Exchange for the below subset only. Fine print (PromQL parity): the
+      densify through fetch's own ``_densify`` (map-side per-epoch slot
+      explode, fetch's exact membership rule: a series zero-fills only
+      over epochs where it was tracked): ONE extra (query, series, epoch)
+      Exchange for the below subset only. Fine print (PromQL parity): the
       series universe is the series OBSERVED in the window — a series
       with ZERO rows in [from_ts, to_ts) contributes no grid rows and
       cannot fire, exactly as a Prometheus ``<`` rule never sees a series
@@ -2706,8 +2638,8 @@ def fetch_rule_group(
       not a window scan). Pinned in tests/test_track_fetch.py.
     - ABSENT: ``{pattern, absent: True, for_slots}`` — PromQL absent():
       fires on runs of slots where NO series matched the pattern at all
-      (peak is NULL, series columns NULL). Grid anti-join against the
-      rule's distinct observed buckets.
+      (peak is NULL, series columns NULL). The range's slot spine
+      anti-joined against the rule's distinct observed buckets.
 
     All kinds share the ONE fetch_multi scan (at 100 TB the scan is the
     cost, so N rules must not mean N scans) and one final window +
@@ -2717,40 +2649,12 @@ def fetch_rule_group(
     firing_start, run_end, n_slots, peak)."""
     from pyspark.sql import Window
 
-    from kadiyadb_spark.functions.num import quantize4
-
-    if not rules:
-        raise ValueError("empty rule group")
-    patterns = {}
-    thr4s: dict[str, int] = {}
-    fors: dict[str, int] = {}
-    kinds: dict[str, str] = {}
-    for name, r in rules.items():
-        fs = int(r.get("for_slots", 1))
-        if fs < 1:
-            raise ValueError(f"rule {name!r}: need for_slots >= 1, got {fs}")
-        if r.get("absent", False):
-            kinds[name] = "absent"
-            thr4s[name] = 0  # unused; keeps the when-chain total
-        elif r.get("above", True):
-            thr = r["threshold"]
-            if thr <= 0:
-                raise ValueError(
-                    f"rule {name!r}: above-threshold rules need threshold "
-                    f"> 0 (sparse-frame contract; got {thr}) — pass "
-                    f"above=False for a below rule"
-                )
-            kinds[name] = "above"
-            thr4s[name] = quantize4(thr)
-        else:
-            # quantize4, not floor(x*1e4+0.5): a NEGATIVE below threshold
-            # must round away from zero like the F.round-scaled data
-            # (review finding — bare floor rounds toward +inf at -.5 ties)
-            kinds[name] = "below"
-            thr4s[name] = quantize4(r["threshold"])
-        patterns[name] = r["pattern"]
-        fors[name] = fs
-    sparse = fetch_multi(cube, from_ts, to_ts, patterns, resolution, duration)
+    kinds, thr4s, fors = _compile_rules(rules)
+    rng = _slot_range(from_ts, to_ts, resolution, duration)
+    sparse = fetch_multi(
+        cube, from_ts, to_ts, {n: r["pattern"] for n, r in rules.items()},
+        resolution, duration,
+    )
     fcols = S.series_field_cols(sparse.columns)  # the ONE field-col definition
 
     thr_c = None
@@ -2760,17 +2664,7 @@ def fetch_rule_group(
         thr_c = (F.when if thr_c is None else thr_c.when)(cnd, F.lit(thr4s[name]).cast("long"))
         for_c = (F.when if for_c is None else for_c.when)(cnd, F.lit(fors[name]).cast("long"))
 
-    from_b = from_ts - (from_ts % resolution)
-    to_b = to_ts - (to_ts % resolution)
-    slot_grid = F.explode(
-        F.sequence(F.lit(from_b), F.lit(to_b - resolution), F.lit(resolution))
-    ).alias(S.BUCKET)
     by_kind = {k: sorted(n for n in rules if kinds[n] == k) for k in ("above", "below", "absent")}
-    # Sub-slot window (no complete slot): the grid sequence would have
-    # start > stop and raise at action time; fetch_multi already returns
-    # the empty frame, and no rule kind can fire over zero slots.
-    grid_ok = to_b - resolution >= from_b
-
     t4 = scale4_expr(F.col(S.TOTAL))
     sp = sparse.select("query", *fcols, S.BUCKET, t4.alias("_t4"))
     branches = []
@@ -2781,73 +2675,44 @@ def fetch_rule_group(
             .filter(F.col("_t4") >= F.col("_thr4"))
             .drop("_thr4")
         )
-    if by_kind["below"] and grid_ok:
-        # Membership is per-EPOCH, exactly fetch's densify rule (O2): a
-        # series zero-fills only over epochs where it was tracked, and
-        # contributes nothing for epochs it never existed in — the
-        # full-window grid fired long runs across epochs a decommissioned
-        # series never reached (review finding; fetch+series_alerts
-        # produce no rows there). r13: same one-aggregation densify as
-        # fetch (guide §2.4) — the previous distinct-membership + grid
-        # left-join shape cost a second pass over the below subset plus a
-        # join Exchange; sparse is already bucket-range filtered, so every
-        # row enters its group's map, and the groupBy over
-        # (query, series, epoch) IS the membership set. NULL deeper field
-        # columns group as one key — the old join's eqNullSafe semantics.
-        per = (
-            sparse.filter(F.col("query").isin(by_kind["below"]))
-            .groupBy("query", *fcols, S.EPOCH)
-            .agg(
-                F.map_from_entries(
-                    F.collect_list(F.struct(F.col(S.BUCKET), t4.alias("_t4")))
-                ).alias("_pts")
-            )
-        )
-        dense = per.select(
-            "query",
-            *fcols,
-            F.explode(
-                F.expr(_epoch_slots_sql(from_b, to_b, resolution, duration))
-            ).alias(S.BUCKET),
-            "_pts",
-        ).select(
-            "query",
-            *fcols,
-            S.BUCKET,
-            F.coalesce(
-                F.try_element_at(F.col("_pts"), F.col(S.BUCKET)),
-                F.lit(0).cast("long"),
-            ).alias("_t4"),
+    if by_kind["below"]:
+        # Membership is per-EPOCH, exactly fetch's densify (O2, shared
+        # _densify): a series zero-fills only over epochs where it was
+        # tracked, and contributes nothing for epochs it never existed in.
+        # The groupBy over (query, series, epoch) IS the membership set;
+        # NULL deeper field columns group as one key.
+        dense = _densify(
+            sparse.filter(F.col("query").isin(by_kind["below"])).select(
+                "query", *fcols, S.EPOCH, S.BUCKET, t4.alias("_t4")
+            ),
+            ["query", *fcols, S.EPOCH],
+            rng,
+            {"_t4": "0L"},
         )
         branches.append(
             dense.withColumn("_thr4", thr_c)
             .filter(F.col("_t4") <= F.col("_thr4"))
-            .drop("_thr4")
+            .drop(S.EPOCH, "_thr4")
         )
-    if by_kind["absent"] and grid_ok:
-        qdf = cube.sparkSession.createDataFrame(
-            [(n,) for n in by_kind["absent"]], "query string"
-        )
-        agrid = qdf.select("query", slot_grid)
+    if by_kind["absent"]:
+        # the range's slot spine per absent rule, anti-joined against the
+        # rule's distinct observed buckets
         obs = (
             sparse.filter(F.col("query").isin(by_kind["absent"]))
             .select("query", S.BUCKET)
             .distinct()
         )
         branches.append(
-            agrid.join(obs, ["query", S.BUCKET], "left_anti").select(
+            rng.spine(cube.sparkSession, by_kind["absent"])
+            .join(obs, ["query", S.BUCKET], "left_anti")
+            .select(
                 "query",
                 *[F.lit(None).cast("string").alias(c) for c in fcols],
                 S.BUCKET,
                 F.lit(None).cast("long").alias("_t4"),
             )
         )
-    if not branches:  # only grid-driven rules over a sub-slot window
-        branches.append(sp.limit(0))
-    br = branches[0]
-    for b in branches[1:]:
-        br = br.unionByName(b)
-    br = br.select(
+    br = functools.reduce(DataFrame.unionByName, branches).select(
         "query",
         *fcols,
         S.BUCKET,
@@ -2874,6 +2739,48 @@ def fetch_rule_group(
         .filter(F.col("n_slots") >= F.col("_fs"))
         .drop("_run", "_fs")
     )
+
+
+def _compile_rules(rules: "dict[str, dict]") -> tuple:
+    """Validate a rule group: every rule's kind ('above' | 'below' |
+    'absent'), threshold as a scaled long and for_slots, plus its pattern
+    (compiled here so a bad one fails before any scan). Returns
+    (kinds, thr4s, fors), each keyed by rule name."""
+    from kadiyadb_spark.functions.num import quantize4
+
+    if not rules:
+        raise ValueError("empty rule group")
+    thr4s: dict[str, int] = {}
+    fors: dict[str, int] = {}
+    kinds: dict[str, str] = {}
+    for name, r in rules.items():
+        if "pattern" not in r:
+            raise ValueError(f"rule {name!r}: missing 'pattern'")
+        compile_pattern(r["pattern"])
+        fs = int(r.get("for_slots", 1))
+        if fs < 1:
+            raise ValueError(f"rule {name!r}: need for_slots >= 1, got {fs}")
+        if r.get("absent", False):
+            kinds[name] = "absent"
+            thr4s[name] = 0  # unused; keeps the when-chain total
+        elif r.get("above", True):
+            thr = r["threshold"]
+            if thr <= 0:
+                raise ValueError(
+                    f"rule {name!r}: above-threshold rules need threshold "
+                    f"> 0 (sparse-frame contract; got {thr}) — pass "
+                    f"above=False for a below rule"
+                )
+            kinds[name] = "above"
+            thr4s[name] = quantize4(thr)
+        else:
+            # quantize4, not floor(x*1e4+0.5): a NEGATIVE below threshold
+            # must round away from zero like the F.round-scaled data
+            # (bare floor rounds toward +inf at -.5 ties)
+            kinds[name] = "below"
+            thr4s[name] = quantize4(r["threshold"])
+        fors[name] = fs
+    return kinds, thr4s, fors
 
 
 def series_group_share(
@@ -2907,20 +2814,10 @@ def series_group_share(
 
     from kadiyadb_spark.functions.num import round4_expr
 
-    if to_ts < from_ts or from_ts < 0:
-        raise InvalidTimeRange(f"invalid range [{from_ts}, {to_ts})")
+    rng = _slot_range(from_ts, to_ts, resolution, duration)
     # f1-level predicate only: exact / value-set / Re / "*"
     _, preds = compile_pattern([f1_pattern])
-    from_b = from_ts - (from_ts % resolution)
-    to_b = to_ts - (to_ts % resolution)
-    cond = (
-        F.col(S.DEPTH).isin(1, 2)
-        & _epoch_bounds_pred(from_b, to_b, resolution, duration)
-        & (F.col(S.BUCKET) >= F.lit(from_b))
-        & (F.col(S.BUCKET) < F.lit(to_b))
-    )
-    for col, val in preds:
-        cond = cond & match_expr(col, val)
+    cond = F.expr(f"{S.DEPTH} IN (1, 2) AND {rng.scan_sql()}") & _match_cond(None, preds)
     t4 = scale4_expr(F.col(S.TOTAL))
     base = cube.filter(cond).select(
         S.DEPTH, "f1", "f2", S.BUCKET, t4.alias("_t4")

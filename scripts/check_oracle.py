@@ -9,6 +9,8 @@ reproduce the driver's layout. Override with KDB_ORACLE_PAR=N to re-check
 at another width (order-independent entries must pass at every width).
 
 Usage: [KDB_ORACLE_PAR=N] python scripts/check_oracle.py [sf_dir] [query ...]
+       (each query selector is an entry name or an fnmatch glob:
+        'fetch_*' selects every fetch entry; none selects all)
        python scripts/check_oracle.py --describe [sf_dir]   # type-scan only
 
 r08 post-mortem hardening: the driver hash canonicalizes DuckDB HUGEINT /
@@ -23,6 +25,7 @@ seconds without starting Spark.
 
 from __future__ import annotations
 
+import fnmatch
 import math
 import os
 import sys
@@ -98,7 +101,7 @@ def main():
     if "--describe" in sys.argv[1:]:
         return describe_all(argv[0] if argv else "/root/testdata/sf0.01")
     sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
-    only = set(argv[1:])
+    only = argv[1:]
     con = duckdb.connect()
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
@@ -110,7 +113,7 @@ def main():
     oracles = entry_mod.oracle_sql()
     failures = []
     for name, fn in qs.items():
-        if only and name not in only:
+        if only and not any(fnmatch.fnmatchcase(name, sel) for sel in only):
             continue
         t0 = time.time()
         try:

@@ -938,7 +938,7 @@ def test_empty_db_gen_minus_one_paths(spark, tmp_path):
 def test_fetch_illegal_pattern_raises_before_pruning(spark, tmp_path):
     """code-review r12: pattern validation must run BEFORE manifest
     pruning — an illegal level raises the descriptive ValueError, never
-    _preds' opaque TypeError."""
+    an opaque TypeError from the pruning layer."""
     db = Database.open(spark, str(tmp_path / "valf"), P)
     db.track(_events(spark, [(0, "a", "b", 1.0)]), total_col="v")
     with pytest.raises(ValueError, match="illegal query field value"):
@@ -947,6 +947,39 @@ def test_fetch_illegal_pattern_raises_before_pruning(spark, tmp_path):
         db.fetch_multi(0, 10, {"q": ["a", 42]})
     with pytest.raises(ValueError, match="illegal query field value"):
         db.rule_group(0, 10, {"r": {"pattern": ["a", 42], "threshold": 1.0}})
+
+
+def test_bad_read_requests_raise_before_reading_the_manifest(spark, tmp_path, monkeypatch):
+    """fetch / fetch_multi / rule_group check the request (range, batch,
+    rules) in their shared preamble before the store is touched: a bad
+    request costs zero manifest reads and plans no scan."""
+    from kadiyadb_spark.manifest import GenLog
+    from kadiyadb_spark.query import InvalidTimeRange
+
+    db = Database.open(spark, str(tmp_path / "pre"), P)
+    db.track(_events(spark, [(0, "a", "b", 1.0)]), total_col="v")
+    reads = []
+    read = GenLog.read
+    monkeypatch.setattr(GenLog, "read", lambda self, *a, **k: reads.append(1) or read(self, *a, **k))
+    with pytest.raises(InvalidTimeRange):
+        db.fetch(5, 2, ["a", "b"])
+    with pytest.raises(InvalidTimeRange):
+        db.fetch(-1, 2, ["a", "b"])
+    with pytest.raises(InvalidTimeRange):
+        db.fetch_multi(5, 2, {"q": ["a", "*"]})
+    with pytest.raises(ValueError, match="empty pattern batch"):
+        db.fetch_multi(0, 5, {})
+    with pytest.raises(ValueError, match="empty rule group"):
+        db.rule_group(0, 5, {})
+    with pytest.raises(InvalidTimeRange):
+        db.rule_group(5, 2, {"r": {"pattern": ["a", "*"], "threshold": 1.0}})
+    # a rule without a pattern is a ValueError naming the rule, not a KeyError
+    with pytest.raises(ValueError, match="'r'.*pattern"):
+        db.rule_group(0, 5, {"r": {"threshold": 1.0}})
+    assert reads == []
+    # a good request reads the manifest once
+    db.fetch(0, 5, ["a", "b"])
+    assert len(reads) == 1
 
 
 def test_clone_refuses_partial_target(spark, tmp_path):

@@ -1144,3 +1144,70 @@ def test_p27_default_psl_path_is_monotone_over_subset_shapes(spark, labels, suff
     exp = url_components(df, psl=None).collect()[0]["registrable_domain"]
     got = url_components(df).collect()[0]["registrable_domain"]
     assert got == exp
+
+
+@given(
+    res=st.integers(min_value=1, max_value=7),
+    k=st.integers(min_value=1, max_value=5),
+    frm=st.integers(min_value=-20, max_value=120),
+    to=st.integers(min_value=-20, max_value=120),
+)
+@settings(
+    max_examples=40,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
+)
+def test_p29_slot_range_spec_epochs_and_shared_validation(spark, res, k, frm, to):
+    """P29 (one read path): the slot-range spec's epoch set equals the
+    brute-force set — the epochs of the slots in [from_b, to_b) — and every
+    Fetch-family reader raises InvalidTimeRange on exactly the same inputs.
+    Plans only: every reader runs over an empty local cube and nothing is
+    collected."""
+    from kadiyadb_spark import schema as S
+    from kadiyadb_spark.query import (
+        InvalidTimeRange,
+        _slot_range,
+        fetch,
+        fetch_absent,
+        fetch_multi,
+        fetch_rule_group,
+        series_binop,
+        series_burn_rate,
+        series_group_share,
+        series_ratio,
+        series_sum_by,
+    )
+
+    dur = res * k
+    cube = spark.createDataFrame([], S.cube_schema(2))
+    readers = {
+        "fetch": lambda: fetch(cube, frm, to, ["a", "*"], res, dur),
+        "fetch_multi": lambda: fetch_multi(cube, frm, to, {"q": ["a", "*"]}, res, dur),
+        "fetch_absent": lambda: fetch_absent(cube, frm, to, ["a", "*"], res, dur),
+        "fetch_rule_group": lambda: fetch_rule_group(
+            cube, frm, to,
+            {"hot": {"pattern": ["a", "*"], "threshold": 1.0},
+             "gone": {"pattern": ["a"], "absent": True}},
+            res, dur,
+        ),
+        "series_sum_by": lambda: series_sum_by(cube, frm, to, ["a", "*"], [2], res, dur),
+        "series_ratio": lambda: series_ratio(cube, frm, to, ["a"], ["b"], res, dur),
+        "series_binop": lambda: series_binop(cube, frm, to, ["a"], ["b"], "sub", res, dur),
+        "series_burn_rate": lambda: series_burn_rate(
+            cube, frm, to, ["a"], ["b"], resolution=res, duration=dur
+        ),
+        "series_group_share": lambda: series_group_share(cube, frm, to, "a", res, dur),
+    }
+    raised = set()
+    for name, build in readers.items():
+        try:
+            build()
+        except InvalidTimeRange:
+            raised.add(name)
+    valid = 0 <= frm <= to
+    assert raised == (set() if valid else set(readers))
+    if valid:
+        rng = _slot_range(frm, to, res, dur)
+        from_b, to_b = frm // res * res, to // res * res
+        assert (rng.from_b, rng.to_b, rng.empty) == (from_b, to_b, from_b == to_b)
+        assert set(rng.epochs) == {s // dur * dur for s in range(from_b, to_b, res)}

@@ -1870,6 +1870,31 @@ def test_fetch_rule_group_below_membership_is_per_epoch(spark):
         for r in al.collect()
     } == {("a", "u", 2, 5, 3)}
 
+    # Shared spine and densify parity: an absent rule with for_slots 1
+    # fires on exactly fetch_absent's slots, and a below rule whose
+    # threshold tops every total fires on exactly the dense fetch's
+    # (series, bucket) set.
+    from kadiyadb_spark.query import fetch_absent
+
+    parity = fetch_rule_group(cube, 0, 10, {
+        "gone": {"pattern": ["b", "*"], "absent": True, "for_slots": 1},
+        "all": {"pattern": ["a", "*"], "threshold": 100.0, "for_slots": 1,
+                "above": False},
+    }, resolution=res, duration=dur).collect()
+
+    def _slots(name):
+        return {
+            ((r["f1"], r["f2"]), b)
+            for r in parity if r["query"] == name
+            for b in range(r["pending_start"], r["run_end"], res)
+        }
+
+    absent = {r["bucket"] for r in fetch_absent(cube, 0, 10, ["b", "*"], res, dur).collect()}
+    assert {b for _, b in _slots("gone")} == absent == {0, 1, 2, 3, 4}
+    assert _slots("gone") == {((None, None), b) for b in absent}
+    assert _slots("all") == {((r["f1"], r["f2"]), r["bucket"]) for r in dense.collect()}
+    assert len(_slots("all")) == 5
+
 
 def test_quality_model_centroid_save_load_roundtrip(spark, tmp_path):
     """load_model accepts BOTH trained shapes: the LBFGS
