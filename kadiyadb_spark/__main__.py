@@ -496,8 +496,9 @@ def main(argv: list[str] | None = None) -> int:
 
         db = _open(spark, args.path)
         pat = args.pattern.split(",")
+        _, _, paths = db._read_range(args.from_ns, args.to_ns, [pat])
         r = fetch_absent(
-            db._read_range(args.from_ns, args.to_ns, [pat]),
+            db._read_fold(paths),
             args.from_ns,
             args.to_ns,
             pat,

@@ -50,12 +50,15 @@ from __future__ import annotations
 
 import functools
 import json
+import logging
+import re
 import uuid
-from typing import Iterable
+from typing import TYPE_CHECKING, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kadiyadb_spark import arrow_read
 from kadiyadb_spark import schema as S
 from kadiyadb_spark.catalog import Params
 from kadiyadb_spark.fs import HadoopFS
@@ -63,13 +66,30 @@ from kadiyadb_spark.ingest import _prefix_fanout, fold_aggs, track_batch
 from kadiyadb_spark.manifest import ConcurrentWriteError, GenLog
 from kadiyadb_spark.query import fetch as fetch_df
 
+if TYPE_CHECKING:
+    import pyarrow as pa
+
+    from kadiyadb_spark.query import _SlotRange
+
 _MANIFEST_PREFIX = "MANIFEST-"
 _KEEP_MANIFESTS = 3  # old generations kept for debugging/readers-in-flight
 _STATS_MAX = 64  # distinct values recorded per (segment, epoch, dimension) for data skipping
+# Kept-segment bytes up to which fetch/fetch_multi read, fold and densify on
+# the driver (arrow_read) instead of running Spark jobs. Measured at 4 cpus
+# (local[4], one 1 h epoch, a depth-3 pattern matching 16 series, medians
+# of 5 fetch+collect): driver vs Spark 43 vs 313 ms at 0.32 MB kept, 42 vs
+# 263 at 1 MB, 80 vs 485 at 3.9 MB, 160 vs 521 at 16 MB, 436 vs 1023 at
+# 34 MB. No crossover up to 34 MB, so driver memory sets the bound: the
+# decoded rows take ~10x their parquet bytes (16 MB decoded to 167 MB, at
+# a 388 MB peak RSS), and 4 MB keeps a read near 40 MB.
+_DRIVER_READ_MAX_BYTES = 4 << 20
+
+log = logging.getLogger(__name__)
 
 # Characters a Re pattern may use OUTSIDE character classes for manifest
-# pruning to act on it (see _re_prune_safe).
+# pruning and the driver-side filter to act on it (see _re_prune_safe).
 _RE_SAFE_META = set("_|.*+?()^${},:/ -=!<>@#%'\";~")
+_RE_QUANTIFIER = re.compile(r"\{\d+(,\d*)?\}")
 
 
 def _seg_refs(m: dict) -> list[str]:
@@ -91,7 +111,13 @@ def _re_prune_safe(pattern: str) -> bool:
     (alphanumerics + common punctuation), alternation, anchors,
     quantifiers (* + ? {m,n}), plain ``(?:`` groups, and simple character
     classes with no ``&&``/nesting. Anything else degrades to a full
-    read — a divergence can then only cost a scan, never a wrong skip."""
+    read — a divergence can then only cost a scan, never a wrong skip.
+    Inside the whitelist ``_jmatch`` replays the JVM's matcher exactly,
+    so the driver-side fetch filters with it too. For that, a class may
+    not open with ``]`` (``[]a]``, ``[^]a]``), whose end the dialects
+    find differently, and a ``{`` must open a well-formed ``{m}``,
+    ``{m,}`` or ``{m,n}`` quantifier (Java rejects a stray one, Python
+    reads it literally)."""
     if "\\" in pattern or "&" in pattern:
         return False
     in_class = False
@@ -100,11 +126,15 @@ def _re_prune_safe(pattern: str) -> bool:
             if ch == "[":
                 return False  # Java nests classes; Python reads '[' literally
             if ch == "]":
+                if pattern[i - 1] == "[" or pattern[i - 2 : i] == "[^":
+                    return False
                 in_class = False
             continue
         if ch == "[":
             in_class = True
             continue
+        if ch == "{" and not _RE_QUANTIFIER.match(pattern, i):
+            return False
         if ch == "?" and i > 0 and pattern[i - 1] == "(":
             # group modifiers: only plain non-capturing '(?:' is whitelisted
             # (inline flags '(?i)', lookarounds '(?=', named groups differ
@@ -115,6 +145,40 @@ def _re_prune_safe(pattern: str) -> bool:
         if not (ch.isalnum() or ch in _RE_SAFE_META):
             return False
     return not in_class
+
+
+# Java's line terminators (java.util.regex without UNIX_LINES): '.' matches
+# none of them, and a '$' outside MULTILINE matches at the end of input and
+# before a final terminator — but not between the two halves of a "\r\n"
+_JAVA_DOT = "[^\n\r\x85\u2028\u2029]"
+_JAVA_DOLLAR = "(?:\\Z|(?=\r\n\\Z)|(?=[\r\x85\u2028\u2029]\\Z)|(?<!\r)(?=\n\\Z))"
+
+
+@functools.lru_cache(maxsize=1024)
+def _java_anchored(pattern: str) -> "re.Pattern":
+    """Python form of Spark's ``rlike('^(?:pattern)$')``: outside
+    character classes, '.' and '$' become their Java definitions."""
+    out, in_class = [], False
+    for ch in pattern:
+        if in_class:
+            in_class = ch != "]"
+        elif ch == "[":
+            in_class = True
+        elif ch == ".":
+            ch = _JAVA_DOT
+        elif ch == "$":
+            ch = _JAVA_DOLLAR
+        out.append(ch)
+    return re.compile(f"(?:{''.join(out)}){_JAVA_DOLLAR}")
+
+
+def _jmatch(pattern: str, value: str) -> bool:
+    """Whether Spark's anchored ``rlike('^(?:pattern)$')`` (Java regex,
+    ``find`` from the start) matches ``value``, for a ``pattern`` inside
+    the ``_re_prune_safe`` whitelist. The one Java-anchored matcher: stats
+    pruning skips a segment only when no recorded value matches, and the
+    driver-side fetch (``arrow_read``) filters ``Re`` levels with it."""
+    return _java_anchored(pattern).match(value) is not None
 
 
 class Database:
@@ -391,19 +455,19 @@ class Database:
         self,
         m: dict,
         epochs: set[int] | None = None,
-        prune_pattern: list[str] | None = None,
         prune_any: "list[list] | None" = None,
     ) -> list[str]:
         """Resolve manifest refs to scan paths, applying manifest-level data
         skipping: epoch pruning, then dimension-value pruning against the
-        per-segment stats ``_write_segment`` recorded — for EVERY exact
-        (non-``*``) level of ``prune_pattern``, a segment whose recorded
-        value set for that level excludes the value cannot hold a matching
-        row (a pattern of depth L only matches depth-L rows, whose f1..fL
-        are all non-null, and the stats cover all non-null values at every
-        depth — conservative, never wrongly skips). A ref with no stats
-        entry (pre-stats manifest), a None level (cardinality overflow), or
-        an early-round list-form entry missing the level is never skipped —
+        per-segment stats ``_write_segment`` recorded. A segment is kept
+        when ANY pattern of ``prune_any`` keeps it (a single fetch passes
+        one pattern); a pattern drops it when, for some exact (non-``*``)
+        level, the recorded value set for that level excludes the value —
+        a pattern of depth L only matches depth-L rows, whose f1..fL are
+        all non-null, and the stats cover all non-null values at every
+        depth, so this never wrongly skips. A ref with no stats entry
+        (pre-stats manifest), a None level (cardinality overflow), or an
+        early-round list-form entry missing the level is never skipped —
         skipping only ever acts on positive evidence, so stale or missing
         stats degrade to a full read, not a wrong one."""
         from kadiyadb_spark.query import Re, compile_pattern
@@ -413,14 +477,11 @@ class Database:
         # Value-set levels (the IN matcher) prune too: a segment is
         # skippable only when its stats exclude EVERY listed value. Re
         # levels prune on positive evidence as well — ONLY for patterns
-        # inside the _re_prune_safe whitelist (constructs the JVM rlike and
-        # Python re dialects provably share: pruning must never skip a
-        # segment the filter would match, so escapes, class
-        # intersection/nesting, inline flags etc. degrade to a full read).
-        # ``prune_any`` is the batch form (fetch_multi): a segment is kept
-        # when ANY pattern keeps it.
-        pats = [prune_pattern] if prune_pattern else (prune_any or [])
-        pred_sets = [compile_pattern(p)[1] for p in pats]
+        # inside the _re_prune_safe whitelist, matched by _jmatch (the JVM
+        # filter's own semantics: pruning must never skip a segment the
+        # filter would match, so escapes, class intersection/nesting,
+        # inline flags etc. degrade to a full read).
+        pred_sets = [compile_pattern(p)[1] for p in prune_any or []]
 
         def _keep_one(st: dict, preds: list) -> bool:
             for col, val in preds:
@@ -429,27 +490,7 @@ class Database:
                     if isinstance(val, Re):
                         if not _re_prune_safe(val.pattern):
                             continue  # dialect-safe: never skip outside the whitelist
-                        import re as _re
-
-                        rx = _re.compile(val.pattern)
-
-                        def _jmatch(x: str) -> bool:
-                            # mirror Java's anchored rlike exactly: its '$'
-                            # ALSO matches just before one FINAL line
-                            # terminator, which re.fullmatch does not — a
-                            # divergence that would wrongly SKIP a segment
-                            # the JVM filter matches (code-review r12)
-                            if rx.fullmatch(x):
-                                return True
-                            if x.endswith("\r\n") and rx.fullmatch(x[:-2]):
-                                return True
-                            return bool(
-                                x
-                                and x[-1] in "\n\r\x85\u2028\u2029"
-                                and rx.fullmatch(x[:-1])
-                            )
-
-                        if not any(_jmatch(x) for x in vals):
+                        if not any(_jmatch(val.pattern, x) for x in vals):
                             return False
                         continue
                     want = val if isinstance(val, tuple) else (val,)
@@ -510,9 +551,8 @@ class Database:
         from_epoch: int | None = None,
         to_epoch: int | None = None,
         at_gen: int | None = None,
-        prune_pattern: list[str] | None = None,
         epochs: set[int] | None = None,
-        prune_patterns: "list[list] | None" = None,
+        prune_any: "list[list] | None" = None,
     ) -> DataFrame:
         """The cube as a DataFrame, FOLDED to one row per cube key.
 
@@ -526,11 +566,11 @@ class Database:
         column with one value per file, so parquet min-max stats skip
         whole row groups for any further epoch predicate Catalyst pushes.
 
-        ``prune_pattern`` applies manifest-level data skipping: segments
-        whose recorded dimension stats exclude any exact level's value are
+        ``prune_any`` applies manifest-level data skipping: segments whose
+        recorded dimension stats rule out every one of those patterns are
         left out of the scan entirely (see ``_segment_paths`` for the
-        soundness contract — callers must themselves apply the pattern's
-        exact-depth equality filter).
+        soundness contract — callers must themselves apply the patterns'
+        exact-depth filters).
 
         ``at_gen`` reads a RETAINED older generation (snapshot read / time
         travel): because commits are whole-manifest swaps and segments are
@@ -541,9 +581,7 @@ class Database:
         collapses the window to its own generation), so pinned reads must
         stay within the retained window (``generations()``)."""
         return self._read_fold(
-            self._scan_paths(
-                from_epoch, to_epoch, at_gen, prune_pattern, epochs, prune_patterns
-            )
+            self._scan_paths(from_epoch, to_epoch, at_gen, epochs, prune_any)
         )
 
     def _scan_paths(
@@ -551,9 +589,8 @@ class Database:
         from_epoch: int | None = None,
         to_epoch: int | None = None,
         at_gen: int | None = None,
-        prune_pattern: list[str] | None = None,
         epochs: set[int] | None = None,
-        prune_patterns: "list[list] | None" = None,
+        prune_any: "list[list] | None" = None,
     ) -> list[str]:
         """The segment paths ``cube`` scans for these arguments."""
         m = self._manifest(at_gen=at_gen)
@@ -568,9 +605,7 @@ class Database:
             and (from_epoch is None or e >= from_epoch)
             and (to_epoch is None or e <= to_epoch)
         }
-        return self._segment_paths(
-            m, want, prune_pattern=prune_pattern, prune_any=prune_patterns
-        )
+        return self._segment_paths(m, want, prune_any=prune_any)
 
     def _read_fold(self, paths: "list[str]", cluster: "list[str] | None" = None) -> DataFrame:
         """Read segment paths and fold to one row per cube key — the single
@@ -806,23 +841,95 @@ class Database:
         to_ts: int,
         patterns: "list[list]",
         at_gen: int | None = None,
-        cluster: "list[str] | None" = None,
-    ) -> DataFrame:
+    ) -> "tuple[_SlotRange, dict, list[str]]":
         """The one read preamble of ``fetch``, ``fetch_multi`` and
-        ``rule_group``. Callers compile their patterns first; the range spec
-        (query._slot_range) then validates [from_ts, to_ts), so a bad
-        request raises before the store is touched. The manifest is pruned
-        to the range's epochs and, in UNION form, to the segments whose
-        dimension stats keep at least one pattern — a batch scans exactly
-        the segments its individual fetches would have touched, once —
-        and the kept segments are read folded (``_read_fold``)."""
+        ``rule_group``: (range spec, manifest, kept segment paths). Callers
+        compile their patterns first; the range spec (query._slot_range)
+        then validates [from_ts, to_ts), so a bad request raises before the
+        store is touched. The manifest is pruned to the range's epochs and,
+        in UNION form, to the segments whose dimension stats keep at least
+        one pattern — a batch scans exactly the segments its individual
+        fetches would have touched, once."""
         from kadiyadb_spark.query import _slot_range
 
         rng = _slot_range(from_ts, to_ts, self.params.resolution, self.params.duration)
         m = self._manifest(at_gen=at_gen)
-        return self._read_fold(
-            self._segment_paths(m, rng.epochs, prune_any=patterns), cluster=cluster
-        )
+        return rng, m, self._segment_paths(m, rng.epochs, prune_any=patterns)
+
+    @functools.cached_property
+    def _local_cube_dir(self) -> "str | None":
+        """POSIX path of the cube dir when it is on the local filesystem
+        (scheme ``file``, given or by default FS), else None."""
+        return self.fs.local_path(self.cube_path)
+
+    def _driver_segments(
+        self,
+        op: str,
+        m: dict,
+        rng: "_SlotRange",
+        paths: "list[str]",
+        patterns: "list[list]",
+    ) -> "pa.Table | None":
+        """Choose the executor of one ``fetch``/``fetch_multi`` read and log
+        its read report. Returns the kept segments' rows when the driver
+        serves the read (``arrow_read``: no Spark job), None when the Spark
+        plan does. The driver serves only when all of these hold:
+
+        - the cube folds exactly (``value_dp`` set): the raw-double fold
+          is order-dependent, so there is no result to match bit for bit;
+        - every ``Re`` level is inside the ``_re_prune_safe`` whitelist,
+          where ``_jmatch`` replays the JVM's matcher;
+        - the store is on the local filesystem;
+        - the kept files total at most ``_DRIVER_READ_MAX_BYTES`` (one
+          ``scandir`` per kept leaf dir finds them and their sizes);
+        - every kept file's physical schema is cube_schema's.
+
+        An empty range keeps the Spark path, whose empty frame needs no
+        plan; an empty kept set passes every condition and the driver
+        returns the same empty frame Spark would. The report is one DEBUG
+        line on this module's logger: the path, for ``spark`` the
+        condition that failed, then the segments in the manifest, in the
+        range's epochs and kept, and the kept files and bytes (``-`` when
+        not listed)."""
+        from kadiyadb_spark.query import Re, compile_pattern
+
+        seg, why, files, nbytes = None, None, None, None
+        if rng.empty:
+            why = "empty range"
+        elif self.params.value_dp is None:
+            why = "value_dp is None"
+        elif any(
+            isinstance(v, Re) and not _re_prune_safe(v.pattern)
+            for p in patterns
+            for _, v in compile_pattern(p)[1]
+        ):
+            why = "regex outside the Java-parity whitelist"
+        elif self._local_cube_dir is None:
+            why = "not a local filesystem"
+        else:
+            root = len(self.cube_path)
+            files = arrow_read.list_files([self._local_cube_dir + p[root:] for p in paths])
+            if files is None:
+                why = "segment dir missing"
+            elif (nbytes := sum(b for _, b in files)) > _DRIVER_READ_MAX_BYTES:
+                why = f"kept bytes over {_DRIVER_READ_MAX_BYTES}"
+            else:
+                seg = arrow_read.read_segments([f for f, _ in files], self.max_depth)
+                if seg is None:
+                    why = "segment schema differs from cube_schema"
+        if log.isEnabledFor(logging.DEBUG):
+            log.debug(
+                "%s path=%s%s segments=%d in_range=%d kept=%d files=%s bytes=%s",
+                op,
+                "spark" if why else "arrow",
+                f" reason={why!r}" if why else "",
+                sum(len(refs) for refs in m["segments"].values()),
+                sum(len(refs) for e, refs in m["segments"].items() if e in rng.epochs),
+                len(paths),
+                "-" if files is None else len(files),
+                "-" if nbytes is None else nbytes,
+            )
+        return seg
 
     def fetch(
         self,
@@ -832,21 +939,33 @@ class Database:
         densify: bool = True,
         at_gen: int | None = None,
     ) -> DataFrame:
-        """Manifest-level pruning happens before the scan is planned: only
-        segments of epochs overlapping [from_ts, to_ts) are read, and for
-        EVERY exact (non-*) pattern level, segments whose recorded
-        dimension stats exclude that value are skipped too (the
-        reference's index Find narrowing the read to matching series, done
-        as metadata). ``at_gen`` pins the read to a retained snapshot (see
-        ``cube``)."""
+        """Fetch (``query.fetch`` semantics) over the persisted store.
+        Manifest-level pruning happens before any read: only segments of
+        epochs overlapping [from_ts, to_ts) are kept, and for EVERY exact
+        (non-*) pattern level, segments whose recorded dimension stats
+        exclude that value are skipped too (the reference's index Find
+        narrowing the read to matching series, done as metadata).
+        ``at_gen`` pins the read to a retained snapshot (see ``cube``).
+
+        Two executors answer with the same rows and schema. A small read
+        of a local store (``_driver_segments`` names the conditions) runs
+        on the driver with pyarrow (``arrow_read``) and returns a local
+        DataFrame whose collect runs no Spark job, the way the reference
+        answers from its open-epoch cache. Every other read is one Spark
+        plan: the kept segments' scan, clustered on (epoch, f1..fd) so the
+        fold and the densify share one Exchange (``_read_fold``)."""
         from kadiyadb_spark.query import compile_pattern
 
         depth, _ = compile_pattern(pattern)
-        # densify groups by (epoch, f1..fd): clustering the scan on those
-        # keys lets the fold and the densify share one Exchange (_read_fold)
+        rng, m, paths = self._read_range(from_ts, to_ts, [pattern], at_gen)
+        seg = self._driver_segments("fetch", m, rng, paths, [pattern])
+        if seg is not None:
+            return arrow_read.fetch(
+                self.spark, seg, rng, pattern, self.params.value_dp, densify
+            )
         cluster = [S.EPOCH, *S.field_cols(depth)] if densify else None
         return fetch_df(
-            self._read_range(from_ts, to_ts, [pattern], at_gen, cluster),
+            self._read_fold(paths, cluster),
             from_ts,
             to_ts,
             pattern,
@@ -863,15 +982,24 @@ class Database:
         at_gen: int | None = None,
     ) -> DataFrame:
         """The rule-evaluation batch over the persisted store: every
-        pattern answered from ONE shared scan (query.py:fetch_multi) over
-        the union-pruned segments (``_read_range``). Sparse output with a
-        leading ``query`` label."""
+        pattern answered from ONE read (query.py:fetch_multi) of the
+        union-pruned segments (``_read_range``). Sparse output with a
+        leading ``query`` label. Like ``fetch``, a small local read runs on
+        the driver (``arrow_read``) and every other read as one Spark
+        scan."""
         from kadiyadb_spark.query import _compile_batch
         from kadiyadb_spark.query import fetch_multi as fetch_multi_df
 
         _compile_batch(patterns)
+        pats = list(patterns.values())
+        rng, m, paths = self._read_range(from_ts, to_ts, pats, at_gen)
+        seg = self._driver_segments("fetch_multi", m, rng, paths, pats)
+        if seg is not None:
+            return arrow_read.fetch_multi(
+                self.spark, seg, rng, patterns, self.params.value_dp
+            )
         return fetch_multi_df(
-            self._read_range(from_ts, to_ts, list(patterns.values()), at_gen),
+            self._read_fold(paths),
             from_ts,
             to_ts,
             patterns,
@@ -893,10 +1021,11 @@ class Database:
         from kadiyadb_spark.query import _compile_rules, fetch_rule_group
 
         _compile_rules(rules)
+        _, _, paths = self._read_range(
+            from_ts, to_ts, [r["pattern"] for r in rules.values()], at_gen
+        )
         return fetch_rule_group(
-            self._read_range(
-                from_ts, to_ts, [r["pattern"] for r in rules.values()], at_gen
-            ),
+            self._read_fold(paths),
             from_ts,
             to_ts,
             rules,

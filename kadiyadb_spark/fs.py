@@ -47,6 +47,12 @@ class HadoopFS:
     def _p(self, path: str):
         return self._Path(path)
 
+    def local_path(self, path: str) -> str | None:
+        """POSIX path of ``path`` when its filesystem is the local one
+        (scheme ``file``, given or by default FS), else None."""
+        uri = self._fs.makeQualified(self._p(path)).toUri()
+        return str(uri.getPath()) if str(uri.getScheme()) == "file" else None
+
     # -- predicates ----------------------------------------------------------
     def exists(self, path: str) -> bool:
         return bool(self._fs.exists(self._p(path)))

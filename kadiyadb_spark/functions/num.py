@@ -128,6 +128,17 @@ def scale4_expr(c: Column) -> Column:
 FOLD_EXACT_BOUND = 1 << 53
 
 
+def fold_overflow_text(dp: int) -> tuple[str, str]:
+    """The fold-overflow error as the text before and after the offending
+    |total|: one message for the Spark guard (``guarded_scaled_sum``) and
+    the driver-side fold (``kadiyadb_spark.arrow_read``)."""
+    return (
+        f"scaled-long fold overflow at value_dp={dp}: |total| ",
+        f" exceeds 2^53 — the stored double can no longer hold the exact "
+        f"{dp}dp multiple; lower value_dp or split the group",
+    )
+
+
 def guarded_scaled_sum(c: Column, dp: int) -> Column:
     """Sum a SCALED-LONG column with runtime overflow protection: the
     accumulation runs in decimal(38,0) (10^38 headroom — a hot group can
@@ -139,21 +150,12 @@ def guarded_scaled_sum(c: Column, dp: int) -> Column:
     value — partial aggregation and AQE shapes are unaffected."""
     total = F.sum(c.cast("decimal(38,0)"))
     bound = F.lit(FOLD_EXACT_BOUND).cast("decimal(38,0)")
+    head, tail = fold_overflow_text(dp)
     return (
         F.when(
             F.abs(total) > bound,
             F.raise_error(
-                F.concat(
-                    F.lit(
-                        f"scaled-long fold overflow at value_dp={dp}: |total| "
-                    ),
-                    total.cast("string"),
-                    F.lit(
-                        f" exceeds 2^53 — the stored double can no longer hold "
-                        f"the exact {dp}dp multiple; lower value_dp or split "
-                        f"the group"
-                    ),
-                )
+                F.concat(F.lit(head), total.cast("string"), F.lit(tail))
             ).cast("decimal(38,0)"),
         )
         .otherwise(total)

@@ -27,6 +27,13 @@ slots per epoch row, never 31M at once). Over a persisted store,
 ``Database.fetch`` clusters the scan on (epoch, f1..fd) before the segment
 fold, so the fold and the densify aggregation share ONE Exchange
 (tests/test_plans.py pins it).
+
+Driver shape: a ``Database.fetch``/``fetch_multi`` whose kept segments are
+local and small runs no Spark plan at all. ``kadiyadb_spark.arrow_read``
+reads those files with pyarrow and executes the same range spec, pattern
+predicates, exact fold and per-epoch densify on the driver, then returns a
+local DataFrame whose collect runs no job (``Database._driver_segments``
+names the conditions; tests/test_properties.py P30 pins the parity).
 """
 
 from __future__ import annotations
@@ -55,13 +62,13 @@ class Re:
     PromQL (the engine wraps ``^(?:…)$``), so ``Re("click")`` matches
     exactly the string ``click`` — a plain value is always the safer form
     when no metacharacter is needed. The pattern must compile under
-    Python ``re`` (fail-fast here); evaluation is Spark's JVM ``rlike``,
-    whose semantics agree with Python's for the practical construct set —
-    manifest-stats segment pruning acts only on patterns inside a
-    whitelist of constructs both dialects share (no escapes, no class
-    intersection or nesting, no inline flags), so a dialect divergence can
-    only ever cost a full read, never a wrong skip
-    (database.py:_re_prune_safe)."""
+    Python ``re`` (fail-fast here); evaluation is Spark's JVM ``rlike``.
+    Manifest-stats segment pruning and the driver-side fetch
+    (``arrow_read``) act only on patterns inside a whitelist of
+    constructs both dialects share (no escapes, no class intersection or
+    nesting, no inline flags; database.py:_re_prune_safe), matched by
+    ``database._jmatch``, a replay of the JVM's anchored matcher; any
+    other pattern is read in full and filtered by Spark."""
 
     __slots__ = ("pattern",)
 

@@ -211,9 +211,11 @@ def test_empty_stream_batch_still_advances_hwm(spark, tmp_path):
     assert db.cube().count() == 0
 
 
-def test_manifest_epoch_pruning_reads_only_in_range_segments(spark, tmp_path):
+def test_manifest_epoch_pruning_reads_only_in_range_segments(spark, tmp_path, monkeypatch):
     """fetch() must hand the scan only the segment dirs of in-range epochs —
     the manifest plays the partition-pruning role, before Spark plans."""
+    # a byte bound of 0 keeps this small read on the Spark plan pinned here
+    monkeypatch.setattr("kadiyadb_spark.database._DRIVER_READ_MAX_BYTES", 0)
     db = Database.open(spark, str(tmp_path / "db"), P)
     db.track(
         _events(spark, [(0, "a", "b", 1.0), (7, "a", "b", 2.0), (12, "a", "b", 3.0)]),
@@ -417,8 +419,8 @@ def test_f1_stats_prune_segments_on_exact_fetch(spark, tmp_path):
     assert m["stats"][refs[0]]["f1"] == ["click"]
     assert m["stats"][refs[1]]["f1"] == ["view"]
     # exact first level -> one segment planned; wildcard -> both
-    assert len(db._segment_paths(m, {0}, prune_pattern=["click", "*"])) == 1
-    assert len(db._segment_paths(m, {0}, prune_pattern=None)) == 2
+    assert len(db._segment_paths(m, {0}, prune_any=[["click", "*"]])) == 1
+    assert len(db._segment_paths(m, {0}, prune_any=None)) == 2
     got = _pts(db.fetch(0, 2, ["click", "*"]))
     assert got == [
         (0, ("click", "u1"), 0, 5.0, 1.0),
@@ -427,10 +429,10 @@ def test_f1_stats_prune_segments_on_exact_fetch(spark, tmp_path):
         (0, ("click", "u2"), 1, 2.0, 1.0),
     ]
     # a value no segment contains plans an empty scan and returns empty
-    assert db._segment_paths(m, {0}, prune_pattern=["nope", "*"]) == []
+    assert db._segment_paths(m, {0}, prune_any=[["nope", "*"]]) == []
     assert db.fetch(0, 2, ["nope", "*"], densify=False).count() == 0
     # SECOND-level pruning: u2 only ever appears in the first segment
-    assert len(db._segment_paths(m, {0}, prune_pattern=["*", "u2"])) == 1
+    assert len(db._segment_paths(m, {0}, prune_any=[["*", "u2"]])) == 1
     assert _pts(db.fetch(0, 2, ["*", "u2"])) == [
         (0, ("click", "u2"), 0, 0.0, 0.0),
         (0, ("click", "u2"), 1, 2.0, 1.0),
@@ -440,18 +442,18 @@ def test_f1_stats_prune_segments_on_exact_fetch(spark, tmp_path):
     # still filters correctly
     from kadiyadb_spark.query import Re
 
-    assert len(db._segment_paths(m, {0}, prune_pattern=[Re("cl.*"), "*"])) == 1
-    assert db._segment_paths(m, {0}, prune_pattern=[Re("nope|lick"), "*"]) == []
-    assert len(db._segment_paths(m, {0}, prune_pattern=[Re("\\w+"), "*"])) == 2
+    assert len(db._segment_paths(m, {0}, prune_any=[[Re("cl.*"), "*"]])) == 1
+    assert db._segment_paths(m, {0}, prune_any=[[Re("nope|lick"), "*"]]) == []
+    assert len(db._segment_paths(m, {0}, prune_any=[[Re("\\w+"), "*"]])) == 2
     # whitelist (ADVICE r09): dialect-divergent constructs refuse to prune
     # even without a backslash — Java class intersection '[a-z&&[aeiou]]'
     # and nested classes '[a[bc]]' parse as literals in Python, and '(?i)'
     # folds different character sets; all degrade to a full read
     for pat in ("[a-z&&[aeiou]]+", "cl[a[bc]]ck", "(?i)CLICK"):
-        assert len(db._segment_paths(m, {0}, prune_pattern=[Re(pat), "*"])) == 2
+        assert len(db._segment_paths(m, {0}, prune_any=[[Re(pat), "*"]])) == 2
     # shared constructs still prune: classes, quantifiers, '(?:' groups
-    assert len(db._segment_paths(m, {0}, prune_pattern=[Re("cl[i-k]ck"), "*"])) == 1
-    assert len(db._segment_paths(m, {0}, prune_pattern=[Re("(?:cl|fl)ick"), "*"])) == 1
+    assert len(db._segment_paths(m, {0}, prune_any=[[Re("cl[i-k]ck"), "*"]])) == 1
+    assert len(db._segment_paths(m, {0}, prune_any=[[Re("(?:cl|fl)ick"), "*"]])) == 1
     assert _pts(db.fetch(0, 2, [Re("cl.*"), "*"])) == got
     assert _pts(db.fetch(0, 2, [Re("\\w+ick"), "*"])) == got
     # batch (fetch_multi) pruning is the UNION of per-pattern evidence
@@ -485,7 +487,7 @@ def test_f1_stats_overflow_disables_pruning_not_correctness(spark, tmp_path, mon
     assert m["stats"][ref]["f1"] is None  # f1 overflowed the cap
     assert m["stats"][ref]["f2"] == ["u"]  # f2 did not
     # None level -> no pruning on it: still read for any exact f1 value
-    assert len(db._segment_paths(m, {0}, prune_pattern=["t3", "u"])) == 1
+    assert len(db._segment_paths(m, {0}, prune_any=[["t3", "u"]])) == 1
     assert _pts(db.fetch(0, 1, ["t3", "u"])) == [(0, ("t3", "u"), 0, 1.0, 1.0)]
 
 
@@ -548,7 +550,7 @@ def test_stream_batches_defer_stats_and_refresh_backfills(spark, tmp_path):
     assert len(refs) == 2
     assert m["stats"] == {}  # census deferred, not wrong
     # no evidence -> no skip: both segments planned, results still exact
-    assert len(db._segment_paths(m, {0}, prune_pattern=["click", "*"])) == 2
+    assert len(db._segment_paths(m, {0}, prune_any=[["click", "*"]])) == 2
     assert _pts(db.fetch(0, 1, ["click", "u1"])) == [(0, ("click", "u1"), 0, 5.0, 1.0)]
     backfilled = db.refresh_stats()
     assert sorted(backfilled) == sorted(refs)
@@ -557,7 +559,7 @@ def test_stream_batches_defer_stats_and_refresh_backfills(spark, tmp_path):
     assert m2["segments"] == m["segments"]
     assert m2["stats"][refs[0]]["f1"] == ["click"]
     assert m2["stats"][refs[1]]["f1"] == ["view"]
-    assert len(db._segment_paths(m2, {0}, prune_pattern=["click", "*"])) == 1
+    assert len(db._segment_paths(m2, {0}, prune_any=[["click", "*"]])) == 1
     assert db.refresh_stats() == []  # idempotent: nothing left to backfill
     # maintain() reports the backfill step for segments compaction skips
     db.track_stream_batch(_events(spark, [(12, "x", "y", 1.0)]), batch_id=2, total_col="v")
@@ -638,7 +640,7 @@ def test_pre_stats_manifest_reads_fine_and_never_prunes(spark, tmp_path):
     assert db.fs.write_json_atomic(mpath, m)
     m2 = db._manifest()
     assert m2["stats"] == {}
-    assert len(db._segment_paths(m2, {0}, prune_pattern=["zzz", "*"])) == 1  # no evidence -> no skip
+    assert len(db._segment_paths(m2, {0}, prune_any=[["zzz", "*"]])) == 1  # no evidence -> no skip
     assert _pts(db.fetch(0, 1, ["a", "b"])) == [(0, ("a", "b"), 0, 5.0, 1.0)]
 
 
@@ -656,10 +658,10 @@ def test_list_form_stats_entry_still_prunes_f1_only(spark, tmp_path):
     db.fs.delete(mpath)
     assert db.fs.write_json_atomic(mpath, m)
     m2 = db._manifest()
-    assert len(db._segment_paths(m2, {0}, prune_pattern=["a", "b"])) == 1
-    assert db._segment_paths(m2, {0}, prune_pattern=["zzz", "*"]) == []
+    assert len(db._segment_paths(m2, {0}, prune_any=[["a", "b"]])) == 1
+    assert db._segment_paths(m2, {0}, prune_any=[["zzz", "*"]]) == []
     # legacy entry has no f2 evidence -> deeper-level pruning never skips
-    assert len(db._segment_paths(m2, {0}, prune_pattern=["*", "zzz"])) == 1
+    assert len(db._segment_paths(m2, {0}, prune_any=[["*", "zzz"]])) == 1
 
 
 def test_segment_skipping_value_set_keeps_any_match(spark, tmp_path):
@@ -670,8 +672,8 @@ def test_segment_skipping_value_set_keeps_any_match(spark, tmp_path):
     for ev in ("click", "error", "view"):
         db.track(_events(spark, [(0, ev, "u1", 1.0)]), total_col="v")
     m = db._manifest()
-    keep_in = db._segment_paths(m, prune_pattern=[["click", "error"], "*"])
-    keep_click = db._segment_paths(m, prune_pattern=["click", "*"])
+    keep_in = db._segment_paths(m, prune_any=[[["click", "error"], "*"]])
+    keep_click = db._segment_paths(m, prune_any=[["click", "*"]])
     keep_all = db._segment_paths(m)
     # three single-event segments: IN keeps exactly the click+error ones
     assert len(keep_all) == 3 and len(keep_click) == 1 and len(keep_in) == 2
@@ -1168,3 +1170,147 @@ def test_manifest_cache_concurrent_readers_see_whole_commits(spark, tmp_path):
     assert not any(t.is_alive() for t in threads)
     assert bad == []
     assert log.read() == {"payload": gen, "gen": gen}
+
+
+# -- driver-side fetch: matcher, read report, fallback edges -----------------
+
+_REPORT_LOGGER = "kadiyadb_spark.database"
+
+
+def _report(caplog, op):
+    """Path and counts of the last read report ``op`` logged."""
+    import re
+
+    msgs = [
+        r.getMessage()
+        for r in caplog.records
+        if r.name == _REPORT_LOGGER and r.getMessage().startswith(op + " ")
+    ]
+    assert msgs, f"no {op} read report"
+    m = re.match(
+        r"\S+ path=(\w+)(?: reason='([^']*)')? segments=(\d+) in_range=(\d+) "
+        r"kept=(\d+) files=(\S+) bytes=(\S+)$",
+        msgs[-1],
+    )
+    assert m, msgs[-1]
+    path, reason, segments, in_range, kept, files, nbytes = m.groups()
+    return {"path": path, "reason": reason, "kept": int(kept), "files": files, "bytes": nbytes}
+
+
+def test_jmatch_equals_spark_rlike_on_line_terminators(spark):
+    """The one Java-anchored matcher (stats pruning and the driver-side Re
+    filter) agrees with Spark's ``rlike('^(?:p)$')`` for whitelisted
+    patterns, on plain values and on values ending in each of Java's line
+    terminators, where Java's '$' and '.' differ from Python's."""
+    from pyspark.sql import functions as F
+
+    from kadiyadb_spark.database import _jmatch, _re_prune_safe
+
+    pats = ["click", "cl.*", "a.", "a$", "a$|b", "(?:cl|fl)ick", "x[^a]", "a.{1,2}", "[a-c]+", "a?$"]
+    assert all(_re_prune_safe(p) for p in pats)
+    ends = ["", "\n", "\r\n", "\r", "\u0085", " ", " ", " ", "\n\n", "\r\r"]
+    vals = sorted({b + e for b in ("click", "flick", "a", "ab", "x", "xb", "abc", "") for e in ends})
+    df = spark.createDataFrame(list(enumerate(vals)), "i int, v string")
+    rows = df.select(
+        "i", *[F.col("v").rlike(f"^(?:{p})$").alias(f"m{k}") for k, p in enumerate(pats)]
+    ).collect()
+    assert len(rows) == len(vals)
+    for r in rows:
+        v = vals[r["i"]]
+        for k, p in enumerate(pats):
+            assert _jmatch(p, v) == r[f"m{k}"], (p, v)
+
+
+def test_re_prune_whitelist_refuses_dialect_ambiguous_classes_and_braces():
+    """A class opening with ']' and a '{' that opens no well-formed
+    quantifier end or parse differently in Java and Python, so neither
+    pruning nor the driver-side filter acts on them."""
+    from kadiyadb_spark.database import _re_prune_safe
+
+    for pat in ("[]a]", "[^]a]", "a{", "a{,2}", "a{x}"):
+        assert not _re_prune_safe(pat), pat
+    for pat in ("a{2}", "a{1,}", "a{1,3}", "[a-c]x", "[^a]"):
+        assert _re_prune_safe(pat), pat
+
+
+def test_read_report_names_the_path_and_kept_segments(spark, tmp_path, caplog, monkeypatch):
+    """Each fetch/fetch_multi logs one DEBUG read report: which executor
+    served it (and for Spark, why), and the segments kept, which equal
+    ``_segment_paths`` for the same arguments."""
+    import logging
+
+    from kadiyadb_spark.query import _slot_range
+
+    db = Database.open(spark, str(tmp_path / "db"), P)
+    db.track(_events(spark, [(0, "click", "u1", 5.0), (7, "click", "u2", 2.0)]), total_col="v")
+    db.track(_events(spark, [(1, "view", "u1", 3.0)]), total_col="v")
+    rng = _slot_range(0, 10, P.resolution, P.duration)
+    m = db._manifest()
+    kept = len(db._segment_paths(m, rng.epochs, prune_any=[["click", "*"]]))
+    assert 0 < kept < 3  # stats pruning dropped the view-only segment
+    with caplog.at_level(logging.DEBUG, logger=_REPORT_LOGGER):
+        got = _pts(db.fetch(0, 10, ["click", "*"]))
+        rep = _report(caplog, "fetch")
+        assert rep["path"] == "arrow" and rep["reason"] is None
+        assert rep["kept"] == kept and int(rep["files"]) >= kept and int(rep["bytes"]) > 0
+        db.fetch_multi(0, 10, {"c": ["click", "*"], "v": ["view", "*"]}).collect()
+        rep = _report(caplog, "fetch_multi")
+        both = db._segment_paths(m, rng.epochs, prune_any=[["click", "*"], ["view", "*"]])
+        assert rep["path"] == "arrow" and rep["kept"] == len(both) == 3
+        monkeypatch.setattr("kadiyadb_spark.database._DRIVER_READ_MAX_BYTES", 0)
+        assert _pts(db.fetch(0, 10, ["click", "*"])) == got
+        rep = _report(caplog, "fetch")
+        assert rep["path"] == "spark" and "bytes" in rep["reason"] and rep["kept"] == kept
+
+
+def _drift_total_to_float32(db):
+    """Rewrite one segment file of ``db`` with a float32 ``total`` — a
+    physical type Spark's pinned read widens but cube_schema does not
+    name — and drop its checksum file so the local FS accepts it."""
+    import glob
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    f = sorted(glob.glob(f"{db.cube_path}/segs/*/epoch_p=*/part-*.parquet"))[0]
+    t = pq.read_table(f)
+    i = t.schema.get_field_index("total")
+    pq.write_table(t.set_column(i, "total", t["total"].cast(pa.float32())), f)
+    os.remove(os.path.join(os.path.dirname(f), f".{os.path.basename(f)}.crc"))
+
+
+@pytest.mark.parametrize(
+    "case, reason",
+    [
+        ("drifted_physical_type", "schema"),
+        ("value_dp_none", "value_dp"),
+        ("regex_outside_whitelist", "regex"),
+    ],
+)
+def test_driver_fetch_fallback_edges_are_served_by_spark(
+    spark, tmp_path, caplog, monkeypatch, case, reason
+):
+    """Reads the driver path cannot answer bit for bit go to Spark, and
+    return exactly the Spark path's rows."""
+    import logging
+
+    from kadiyadb_spark.query import Re
+
+    import dataclasses
+
+    params = dataclasses.replace(P, value_dp=None) if case == "value_dp_none" else P
+    db = Database.open(spark, str(tmp_path / "db"), params)
+    db.track(_events(spark, [(0, "ab", "u1", 1.25), (3, "ab", "u2", 2.5)]), total_col="v")
+    db.track(_events(spark, [(0, "ab", "u1", 0.5)]), total_col="v")
+    if case == "drifted_physical_type":
+        _drift_total_to_float32(db)
+    pattern = [Re("\\w+"), "*"] if case == "regex_outside_whitelist" else ["ab", "*"]
+    with caplog.at_level(logging.DEBUG, logger=_REPORT_LOGGER):
+        got = _pts(db.fetch(0, 5, pattern))
+    rep = _report(caplog, "fetch")
+    assert rep["path"] == "spark" and reason in rep["reason"], rep
+    monkeypatch.setattr("kadiyadb_spark.database._DRIVER_READ_MAX_BYTES", 0)
+    want = _pts(db.fetch(0, 5, pattern))
+    assert got == want
+    assert (0, ("ab", "u1"), 0, 1.75, 2.0) in got

@@ -43,7 +43,9 @@ def test_track_batch_is_one_shuffle(spark):
     assert n_shuffles(plan) == 1  # the cube-key groupBy, nothing else
 
 
-def test_fetch_prunes_partitions_and_pushes_filters(spark, tmp_path):
+def test_fetch_prunes_partitions_and_pushes_filters(spark, tmp_path, monkeypatch):
+    # a byte bound of 0 keeps this small read on the Spark plan pinned here
+    monkeypatch.setattr("kadiyadb_spark.database._DRIVER_READ_MAX_BYTES", 0)
     db = Database.open(spark, str(tmp_path / "db"), Params(duration=5, resolution=1, retention=10, fields=("x", "y")))
     db.track(
         spark.createDataFrame([Row(ts=t, x="a", y="b", v=1.0) for t in (0, 7)]),
@@ -61,11 +63,13 @@ def test_fetch_prunes_partitions_and_pushes_filters(spark, tmp_path):
     assert "epoch" in pushed and "bucket" in pushed and "f1" in pushed
 
 
-def test_densified_fetch_folds_and_densifies_over_one_exchange(spark, tmp_path):
+def test_densified_fetch_folds_and_densifies_over_one_exchange(spark, tmp_path, monkeypatch):
     """Database.fetch clusters the scan on the densify keys (epoch, f1..fd)
     before the segment fold, so the fold groupBy and the densify groupBy
     share ONE Exchange; the pushed filters still reach the scan, and the
     fold still sums every segment of the epoch."""
+    # a byte bound of 0 keeps this small read on the Spark plan pinned here
+    monkeypatch.setattr("kadiyadb_spark.database._DRIVER_READ_MAX_BYTES", 0)
     db = Database.open(spark, str(tmp_path / "db"), Params(duration=5, resolution=1, retention=10, fields=("x", "y")))
     for v in (1.0, 2.0):
         db.track(

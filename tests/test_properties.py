@@ -12,7 +12,7 @@ P4  merge_increment associativity: tracking a batch in any 2-way split and
 """
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import Row
 from pyspark.sql import functions as F
@@ -1211,3 +1211,183 @@ def test_p29_slot_range_spec_epochs_and_shared_validation(spark, res, k, frm, to
         from_b, to_b = frm // res * res, to // res * res
         assert (rng.from_b, rng.to_b, rng.empty) == (from_b, to_b, from_b == to_b)
         assert set(rng.epochs) == {s // dur * dur for s in range(from_b, to_b, res)}
+
+
+# -- P30: the driver-side Fetch executor equals the Spark plan and the model --
+
+PRES, PDUR = 2, 6  # 3 slots per epoch; odd range ends fall inside a slot
+P30_VALUES = (("a", "b"), ("c", "d", "e"), ("u", "v"))
+# whitelisted regexes (database._re_prune_safe): the driver path filters them
+P30_RES = ("a|c|u", "[a-d]", "(?:b|e|v)", ".", "x?[bdv]", "[^a]$")
+P30_SETTINGS = settings(
+    max_examples=10,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
+)
+
+
+def _p30_event(lo: int = 0, hi: int = 3 * PDUR):
+    return st.tuples(
+        st.integers(min_value=lo, max_value=hi - 1),
+        *[st.sampled_from(v) for v in P30_VALUES],
+        st.integers(min_value=-500, max_value=2000),  # cents
+    )
+
+
+# each batch is one track (one segment per epoch it touches) and touches
+# all three epochs, so every epoch holds one segment per batch
+p30_batch = st.tuples(
+    st.lists(_p30_event(), max_size=10),
+    st.tuples(*[_p30_event(e * PDUR, (e + 1) * PDUR) for e in range(3)]),
+).map(lambda b: b[0] + list(b[1]))
+
+
+def _p30_level(values):
+    return st.one_of(
+        st.sampled_from(values),
+        st.just("*"),
+        st.lists(st.sampled_from(values), min_size=1, max_size=2, unique=True),
+        st.sampled_from(P30_RES).map(lambda p: {"re": p}),
+    )
+
+
+p30_pattern = st.integers(min_value=1, max_value=3).flatmap(
+    lambda d: st.tuples(*[_p30_level(P30_VALUES[i]) for i in range(d)]).map(list)
+)
+
+
+def _p30_lib(pattern):
+    from kadiyadb_spark.query import Re
+
+    return [Re(p["re"]) if isinstance(p, dict) else p for p in pattern]
+
+
+def _p30_rows(df):
+    return sorted((tuple(r) for r in df.collect()), key=repr)
+
+
+def _p30_served_by(caplog, op):
+    msgs = [r.getMessage() for r in caplog.records if r.getMessage().startswith(op + " path=")]
+    return msgs[-1].split()[1] if msgs else None
+
+
+@given(
+    batches=st.lists(p30_batch, min_size=2, max_size=3),
+    patterns=st.lists(p30_pattern, min_size=1, max_size=3),
+    frm=st.integers(min_value=0, max_value=3 * PDUR + 2),
+    width=st.integers(min_value=0, max_value=2 * PDUR + 3),
+    densify=st.booleans(),
+    pin=st.booleans(),
+)
+# membership is per epoch: "b" has a point in epoch 0 but none in the
+# range [2, 4), so densify still owes it a zero row at bucket 2
+@example(
+    batches=[
+        [(0, "b", "c", "u", 100), (6, "a", "c", "u", 1), (12, "a", "c", "u", 1)],
+        [(1, "a", "d", "v", 5), (7, "a", "d", "v", 5), (13, "a", "d", "v", 5)],
+    ],
+    patterns=[["b"], [{"re": "a|b"}, "*"]],
+    frm=2,
+    width=2,
+    densify=True,
+    pin=False,
+)
+@P30_SETTINGS
+def test_p30_driver_fetch_equals_spark_plan_and_model(
+    spark, tmp_path_factory, caplog, batches, patterns, frm, width, densify, pin
+):
+    """P30: ``Database.fetch``/``fetch_multi`` answered on the driver
+    (arrow_read) return the same rows (as a multiset) and the same schema
+    as the Spark plan, over stores with two or more segments per epoch,
+    every pattern kind (exact, '*', value set, whitelisted Re, prefix
+    depths, mixed-depth batches), ranges with partial slots, from == to,
+    multi-epoch windows and at_gen pins, densify on and off; and fetch
+    equals perfbench's pure-Python CubeModel. A byte bound of -1 sends
+    every read, even an empty kept set, to Spark."""
+    import logging
+
+    from kadiyadb_spark import database as dbm
+    from kadiyadb_spark.catalog import Params
+    from kadiyadb_spark.database import Database, _re_prune_safe
+    from perfbench.model import CubeModel, diff
+
+    assert all(_re_prune_safe(p) for p in P30_RES)
+    db = Database.open(
+        spark,
+        str(tmp_path_factory.mktemp("p30") / "db"),
+        Params(duration=PDUR, resolution=PRES, retention=10 * PDUR, fields=("x", "y", "z")),
+    )
+    models = []
+    for i, batch in enumerate(batches):
+        db.track(
+            spark.createDataFrame(
+                [Row(ts=ts, x=x, y=y, z=z, v=c / 100) for ts, x, y, z, c in batch]
+            ),
+            total_col="v",
+        )
+        models.append(CubeModel(PRES, PDUR))
+        for b in batches[: i + 1]:
+            models[-1].track(b)
+    assert all(len(refs) >= 2 for refs in db._manifest()["segments"].values())
+    at_gen = db.current_gen() - 1 if pin else None
+    model = models[-2] if pin else models[-1]
+    to = frm + width
+    non_empty = frm // PRES != to // PRES
+
+    def both(op, call):
+        caplog.clear()
+        with caplog.at_level(logging.DEBUG, logger="kadiyadb_spark.database"):
+            got = call()
+        assert _p30_served_by(caplog, op) == ("path=arrow" if non_empty else "path=spark")
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(dbm, "_DRIVER_READ_MAX_BYTES", -1)
+            want = call()
+        assert got.schema == want.schema
+        rows = _p30_rows(got)
+        assert rows == _p30_rows(want)
+        return rows
+
+    for pat in patterns:
+        d = len(pat)
+        rows = both(
+            "fetch", lambda: db.fetch(frm, to, _p30_lib(pat), densify=densify, at_gen=at_gen)
+        )
+        expected = model.fetch(frm, to, pat) if densify else model.sparse(frm, to, pat)
+        got = {(r[0], r[1 : 1 + d], r[1 + d]): (r[2 + d], r[3 + d]) for r in rows}
+        assert len(got) == len(rows)
+        assert diff(expected, got) == [], (pat, frm, to, densify, pin)
+    batch = {f"q{i}": p for i, p in enumerate(patterns)}
+    rows = both(
+        "fetch_multi",
+        lambda: db.fetch_multi(frm, to, {q: _p30_lib(p) for q, p in batch.items()}, at_gen=at_gen),
+    )
+    for q, pat in batch.items():
+        d = len(pat)
+        got = {(r[1], r[2 : 2 + d], r[-3]): (r[-2], r[-1]) for r in rows if r[0] == q}
+        assert diff(model.sparse(frm, to, pat), got) == [], (q, pat, frm, to, pin)
+
+
+def test_p30_fold_overflow_raises_on_both_paths(spark, tmp_path, monkeypatch):
+    """A store whose scaled fold passes 2^53 raises the fold-overflow error
+    on the driver path and on the Spark plan alike: two segments each hold
+    a valid 4.6e11 total (scaled 4.6e15), and their read-time fold is
+    9.2e15 > 2^53."""
+    from kadiyadb_spark import database as dbm
+    from kadiyadb_spark.catalog import Params
+    from kadiyadb_spark.database import Database
+
+    db = Database.open(
+        spark, str(tmp_path / "db"), Params(duration=PDUR, resolution=PRES, retention=PDUR, fields=("x",))
+    )
+    for _ in range(2):
+        db.track(spark.createDataFrame([Row(ts=1, x="a", v=4.6e11)]), total_col="v")
+    reads = (
+        lambda: db.fetch(0, PDUR, ["a"]).collect(),
+        lambda: db.fetch(0, PDUR, ["*"], densify=False).collect(),
+        lambda: db.fetch_multi(0, PDUR, {"q": ["a"]}).collect(),
+    )
+    for bound in (dbm._DRIVER_READ_MAX_BYTES, -1):
+        monkeypatch.setattr(dbm, "_DRIVER_READ_MAX_BYTES", bound)
+        for read in reads:
+            with pytest.raises(Exception, match="fold overflow at value_dp=4"):
+                read()
