@@ -4703,7 +4703,13 @@ def q_rag_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     dense = scored.select(
         "doc_id", F.row_number().over(w).cast("long").alias("rank")
     ).filter(F.col("rank") <= 20)
-    return TX.rrf_fuse([lex, dense], k=10)
+    fused = TX.rrf_fuse([lex, dense], k=10)
+    # the fused top-10 is tiny: hold it on the driver so the shared token
+    # pass is released before the entry returns
+    try:
+        return spark.createDataFrame(fused.collect(), fused.schema)
+    finally:
+        toks.unpersist()
 
 
 def q_bloom_join_prune(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -59,21 +59,18 @@ def list_files(dirs: "list[str]") -> "list[tuple[str, int]] | None":
 
 def read_segments(files: "list[str]", max_depth: int) -> "pa.Table | None":
     """The rows of ``files`` as one table in ``cube_schema`` column order,
-    or None when a file's physical schema differs from cube_schema's names
-    and types (a segment written by other code: the Spark read's pinned
-    schema decides what such a file means). Nullability follows the Spark
-    path's source: a parquet scan reports every column nullable, while no
-    files at all leave cube_schema's empty frame and its NOT NULLs."""
-    cube = to_arrow_schema(S.cube_schema(max_depth))
-    if not files:
-        return cube.empty_table()
-    want = {f.name: f.type for f in cube}
-    tables = []
+    every column nullable as a parquet scan reports it, or None when a
+    file's physical schema differs from cube_schema's names and types (a
+    segment written by other code: the Spark read's pinned schema decides
+    what such a file means)."""
+    cube = pa.schema((f.name, f.type) for f in to_arrow_schema(S.cube_schema(max_depth)))
+    want = dict(zip(cube.names, cube.types))
+    tables = [cube.empty_table()]
     for f in files:
         t = pq.ParquetFile(f).read()
         if {x.name: x.type for x in t.schema} != want:
             return None
-        tables.append(t.select(list(want)).cast(pa.schema(want.items())))
+        tables.append(t.select(cube.names).cast(cube))
     return pa.concat_tables(tables).combine_chunks()
 
 
@@ -91,7 +88,7 @@ def fetch(
     rows = seg.filter(pa.array(_in_range(seg, rng, lo, hi) & _match(seg, depth, preds)))
     folded = _fold(rows, [S.EPOCH, *fcols, S.BUCKET], value_dp)
     out = _densify(folded, [S.EPOCH, *fcols], rng) if densify else folded
-    return _to_spark(spark, out, fcols, seg.schema.field(S.EPOCH).nullable, dense=densify)
+    return _to_spark(spark, out, fcols, dense=densify)
 
 
 def fetch_multi(
@@ -113,28 +110,27 @@ def fetch_multi(
         for name, (depth, preds) in compiled
         for hit in [folded.filter(pa.array(_match(folded, depth, preds)))]
     )
-    return _to_spark(spark, out, fcols, seg.schema.field(S.EPOCH).nullable, query=True)
+    return _to_spark(spark, out, fcols, query=True)
 
 
 def _to_spark(
     spark: SparkSession,
     t: pa.Table,
     fcols: "list[str]",
-    nullable: bool,
     query: bool = False,
     dense: bool = False,
 ) -> DataFrame:
     """``t`` as a local-relation DataFrame with the Spark path's schema:
     ([query,] epoch, f1..fd, bucket, total, cnt), nullable as Spark
-    derives them — the source's nullability (``read_segments``), except
-    that the label and the densified columns are never NULL."""
+    derives them from its parquet scan, except that the label and the
+    densified columns are never NULL."""
     cols = [
         *([("query", T.StringType(), False)] if query else []),
-        (S.EPOCH, T.LongType(), nullable),
+        (S.EPOCH, T.LongType(), True),
         *[(c, T.StringType(), True) for c in fcols],
-        (S.BUCKET, T.LongType(), nullable and not dense),
-        (S.TOTAL, T.DoubleType(), nullable and not dense),
-        (S.CNT, T.DoubleType(), nullable and not dense),
+        (S.BUCKET, T.LongType(), not dense),
+        (S.TOTAL, T.DoubleType(), not dense),
+        (S.CNT, T.DoubleType(), not dense),
     ]
     schema = T.StructType([T.StructField(*c) for c in cols])
     # one chunk: createDataFrame silently drops every row after an empty

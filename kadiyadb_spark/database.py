@@ -57,6 +57,7 @@ from typing import TYPE_CHECKING, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from kadiyadb_spark import arrow_read
 from kadiyadb_spark import schema as S
@@ -622,7 +623,11 @@ class Database:
         repartition to the scan."""
         schema = S.cube_schema(self.max_depth)
         if not paths:
-            return self.spark.createDataFrame([], schema)
+            # a parquet scan reports every column nullable, and so does the
+            # fold over it: the empty frame carries the same schema
+            return self.spark.createDataFrame(
+                [], T.StructType([T.StructField(f.name, f.dataType) for f in schema])
+            )
         # PINNED schema: every segment is written by _write_segment from a
         # cube-shaped frame, so the file schema is cube_schema by
         # construction — schema inference would otherwise cost one driver
@@ -1077,12 +1082,10 @@ class Database:
         return self.expire(now_ts - self.params.retention)
 
     # -- maintenance ----------------------------------------------------------
-    def compact(
-        self, max_files_per_epoch: int = 1, sort_series: bool = True, salt_files: int = 1
-    ) -> list[int]:
-        """Fold fragmented epochs' segments down to one segment each, by
-        default sorted series-major (depth, f1..fN, bucket) — each series'
-        slots become contiguous runs, the parquet analog of the reference's
+    def compact(self, max_files_per_epoch: int = 1, salt_files: int = 1) -> list[int]:
+        """Fold fragmented epochs' segments down to one segment each, always
+        sorted series-major (depth, f1..fN, bucket) — each series' slots
+        become contiguous runs, the parquet analog of the reference's
         record-major block layout (block/block.go:53-61: rows r0..rM x slots
         p0..pN), and row-group min-max stats on the dimension and bucket
         columns both narrow, so exact-path fetches skip row groups.
@@ -1107,7 +1110,7 @@ class Database:
         if not fragmented:
             return []
         folded = self._read_fold(self._segment_paths(m, set(fragmented)))
-        refs, stats = self._write_segment(folded, sort_series=sort_series, salt_files=salt_files)
+        refs, stats = self._write_segment(folded, sort_series=True, salt_files=salt_files)
         self._commit_manifest(m, refs, stats, drop=fragmented)
         return fragmented
 
@@ -1134,20 +1137,15 @@ class Database:
         self._commit_manifest(m, stats=backfilled)
         return sorted(backfilled)
 
-    def maintain(
-        self,
-        now_ts: int,
-        max_files_per_epoch: int = 8,
-        vacuum_orphans: bool = True,
-    ) -> dict:
+    def maintain(self, now_ts: int, max_files_per_epoch: int = 8) -> dict:
         """One-call housekeeping with the ordering that matters: expire
         FIRST (so compaction never rewrites epochs that are about to be
         deleted), then fold epochs fragmented past ``max_files_per_epoch``,
         then backfill data-skipping stats the streaming sinks deferred
         (compaction first — folded segments get stats in the rewrite, so
         the backfill only scans segments compaction left alone), then sweep
-        crash orphans. The cron-job entry point a deployment schedules
-        between ingest windows (single-writer contract: don't run
+        crash orphans (``vacuum``). The cron-job entry point a deployment
+        schedules between ingest windows (single-writer contract: don't run
         concurrently with writes — vacuum would sweep their staging).
 
         ``max_files_per_epoch`` is the LSM read-amplification knob: track
@@ -1159,12 +1157,11 @@ class Database:
         expired = self.expire_by_retention(now_ts)
         compacted = self.compact(max_files_per_epoch=max_files_per_epoch)
         stats_refreshed = self.refresh_stats()
-        vacuumed = self.vacuum() if vacuum_orphans else []
         return {
             "expired": expired,
             "compacted": compacted,
             "stats_refreshed": stats_refreshed,
-            "vacuumed": vacuumed,
+            "vacuumed": self.vacuum(),
         }
 
     def fsck(self) -> dict:

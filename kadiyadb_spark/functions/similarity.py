@@ -21,21 +21,11 @@ from pyspark.sql import functions as F
 from kadiyadb_spark.functions.num import round4_expr
 
 
-def dot_expr(a: Column, b: Column, dim: int | None = None) -> Column:
-    """Dot product. With ``dim`` known, unrolls to a flat element_at sum —
-    higher-order functions (aggregate/zip_with) are ALWAYS interpreted, never
-    whole-stage-codegen'd, which measured ~10-50x slower per pair inside join
-    loops; the unrolled form compiles. Both forms sum left-to-right, so
-    results are bit-identical."""
-    if dim is not None:
-        out = F.lit(0.0)
-        for i in range(1, dim + 1):
-            out = out + F.element_at(a, i) * F.element_at(b, i)
-        return out
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v)
-
-
 def norm_expr(a: Column, dim: int | None = None) -> Column:
+    """L2 norm. With ``dim`` known, unrolls to a flat element_at sum —
+    higher-order functions (transform/aggregate) are ALWAYS interpreted,
+    never whole-stage-codegen'd; the unrolled form compiles. Both forms sum
+    left-to-right, so results are bit-identical."""
     if dim is not None:
         out = F.lit(0.0)
         for i in range(1, dim + 1):
@@ -130,10 +120,6 @@ def cosine_scores_pandas(
     return base.mapInPandas(
         score, schema=f"{query_id_col} long, {id_col} long, _cos double"
     )
-
-
-def cosine_expr(a: Column, b: Column) -> Column:
-    return dot_expr(a, b) / (norm_expr(a) * norm_expr(b))
 
 
 def cosine_topk(

@@ -118,31 +118,29 @@ def _track_rows(
     total_col: str = "value",
     count_col: str | None = None,
     value_dp: int | None = 4,
-    validate: bool = True,
     rollup: bool = True,
 ) -> DataFrame:
     """The one event -> cube-row transform behind every Track path (batch
-    ``track_batch`` and the windowed streaming sinks): validate fields and
-    values, normalize event time and apply the ErrInvTime guard, quantize
-    (total, count), fan out the path prefixes. Returns one row per
+    ``track_batch`` and the windowed streaming sinks): drop illegal fields
+    and poison values, normalize event time and apply the ErrInvTime guard,
+    quantize (total, count), fan out the path prefixes. Returns one row per
     (event, prefix) with columns ``_ts`` (long ns), f1..fN, depth, ``_t``,
     ``_c``; callers group them with ``_ingest_aggs``. Parameters as in
     ``track_batch``."""
     n = len(fields)
     if n == 0:
         raise ValueError("need at least one field column")
-    if validate:
-        df = validate_fields_df(df, fields)
-        # poison-value rows reject like illegal fields (code-review r12):
-        # NULL half-counts, NaN/Inf/out-of-grid aborts the scaled cast —
-        # track_rejects surfaces them with per-reason labels
-        df = df.filter(~value_illegal(F.col(total_col), value_dp))
-        if count_col is not None:
-            # counts are INTEGERS (reference Point.Count, block/blockrw.go)
-            # and fold at dp=0, so their grid bound is 2^53 flat
-            df = df.filter(
-                ~value_illegal(F.col(count_col), 0 if value_dp is not None else None)
-            )
+    df = validate_fields_df(df, fields)
+    # poison-value rows reject like illegal fields (code-review r12):
+    # NULL half-counts, NaN/Inf/out-of-grid aborts the scaled cast —
+    # track_rejects surfaces them with per-reason labels
+    df = df.filter(~value_illegal(F.col(total_col), value_dp))
+    if count_col is not None:
+        # counts are INTEGERS (reference Point.Count, block/blockrw.go)
+        # and fold at dp=0, so their grid bound is 2^53 flat
+        df = df.filter(
+            ~value_illegal(F.col(count_col), 0 if value_dp is not None else None)
+        )
 
     # Event-time boundary: accept long-ns, TIMESTAMP, TIMESTAMP_NTZ, DATE or
     # ISO string input and emit long-ns (schema.ts_ns_expr) — the engine
@@ -234,7 +232,6 @@ def track_batch(
     resolution: int = 60_000_000_000,
     duration: int = 3_600_000_000_000,
     rollup: bool = True,
-    validate: bool = True,
     value_dp: int | None = 4,
 ) -> DataFrame:
     """Aggregate an events DataFrame into the kadiyadb cube.
@@ -262,21 +259,20 @@ def track_batch(
     ~9e6 rows per (series, slot) before the 2^53 guard trips; beyond that
     scale, lower value_dp or switch the callsite to decimal(38, dp).
 
-    ``validate=True`` (the default, matching the reference's UNCONDITIONAL
-    write-path rejection of ""/"*" values, index/node.go:200-214) drops rows
-    carrying illegal field values so they never become series; the per-call
-    error of the reference maps to row rejection in a batch engine (aborting
-    a 100 TB job for one poison row is not a useful parity). Negative
-    timestamps DO abort (ErrInvTime, database.go:156-158): a bad clock is a
-    pipeline bug, not a data-quality case.
+    Rows carrying illegal field values (""/"*"/null) or poison values are
+    always dropped, as the reference rejects ""/"*" on every write with no
+    switch (index/node.go:200-214); ``track_rejects`` reports exactly those
+    rows. The per-call error of the reference maps to row rejection in a
+    batch engine (aborting a 100 TB job for one poison row is not a useful
+    parity). Negative timestamps DO abort (ErrInvTime,
+    database.go:156-158): a bad clock is a pipeline bug, not a
+    data-quality case.
 
     Returns a DataFrame with schema ``cube_schema(len(fields))``: the
     ``_track_rows`` core grouped by (epoch, bucket, f1..fN, depth) — ONE
     shuffle, with map-side partial aggregation.
     """
-    rows = _track_rows(
-        df, fields, ts_col, total_col, count_col, value_dp, validate, rollup
-    )
+    rows = _track_rows(df, fields, ts_col, total_col, count_col, value_dp, rollup)
     bucket = bucket_expr(F.col("_ts"), resolution)
     fcols = S.field_cols(len(fields))
     return (
@@ -314,40 +310,20 @@ def fold_aggs(value_dp: int | None):
     ]
 
 
-def merge_increment(
-    existing: DataFrame, delta: DataFrame, max_depth: int, value_dp: int | None = 4
-) -> DataFrame:
-    """MERGE-increment (SURVEY §4 'lock-free hot writes' mapping): combine an
-    existing cube with a batch of cube deltas, summing Points on key match.
-    Pure DataFrame union+re-agg — at scale this runs per touched epoch
-    partition only (see database.Database.track). ``value_dp`` as in
-    ``track_batch``: exact scaled-long folds so a merge can never shift a
-    stored dp-multiple."""
-    fcols = S.field_cols(max_depth)
-    keys = [S.EPOCH, S.BUCKET, *fcols, S.DEPTH]
-    return (
-        existing.select(*keys, S.TOTAL, S.CNT)
-        .unionByName(delta.select(*keys, S.TOTAL, S.CNT))
-        .groupBy(*keys)
-        .agg(*fold_aggs(value_dp))
-    )
-
-
 def track_rejects(
     df: DataFrame,
     fields: list[str],
     ts_col: str = "ts",
-    total_col: str | None = "value",
+    total_col: str = "value",
     count_col: str | None = None,
     value_dp: int | None = 4,
-    validate: bool = True,
 ) -> DataFrame:
     """DEAD-LETTER view of a track batch: exactly the rows ``track_batch``
-    would silently drop, each with a ``reject_reason`` — the observability
-    half of the row-rejection policy (at 100 TB a pipeline must SEE what
-    it lost; "skip" without a census is how a feed dies quietly). Reasons,
-    first match wins (deterministic order: the event-time check, then
-    fields in the caller's order):
+    drops, each with a ``reject_reason`` — the observability half of the
+    row-rejection policy (at 100 TB a pipeline must SEE what it lost;
+    "skip" without a census is how a feed dies quietly). Reasons, first
+    match wins (deterministic order: the event-time check, then fields in
+    the caller's order, then total, then count):
 
       - ``null_ts``           null / unparseable event time (ts_ns_expr
                               normalizes bad ISO strings to null)
@@ -358,19 +334,9 @@ def track_rejects(
                               (would abort the ANSI cast) — code-review
                               r12, same rule as track_batch's filter
 
-    ``validate``/``total_col``/``count_col``/``value_dp`` MUST mirror the
-    ``track_batch`` call this feed shadows: with ``validate=False``
-    track_batch aggregates illegal-field and poison-value rows instead of
-    dropping them, so only ``null_ts`` rows reject — passing the caller's
-    flag keeps the complement exact (previously a validate=False pipeline
-    double-counted every illegal row into BOTH feeds).
-
-    BREAKING since r12 (ADVICE r12 — called out in README "Changelog
-    notes"): ``validate=True`` + ``total_col="value"`` are the defaults,
-    so a legacy field-only reject feed whose frame lacks a 'value' column
-    now raises. Pass ``total_col=None`` to opt out of value validation
-    (field + ts reasons only) for such feeds, or ``validate=False`` to
-    mirror a non-validating track_batch.
+    ``total_col``/``count_col``/``value_dp`` MUST mirror the
+    ``track_batch`` call this feed shadows; a frame without ``total_col``
+    raises, because its twin could not aggregate it either.
 
     The complement invariant — rejects + rows track_batch aggregates =
     the input, with no overlap — is pytest-pinned. Pure map-side filter:
@@ -379,30 +345,26 @@ def track_rejects(
     n = len(fields)
     if n == 0:
         raise ValueError("need at least one field column")
-    if validate and total_col is not None and total_col not in df.columns:
+    if total_col not in df.columns:
         raise ValueError(
             f"track_rejects needs the {total_col!r} column its track_batch "
-            f"twin aggregates (pass total_col=, total_col=None for a "
-            f"field-only feed, or validate=False)"
+            f"twin aggregates (pass total_col=)"
         )
     tsn = S.ts_ns_expr(df.schema[ts_col].dataType, ts_col)
     reason = F.when(tsn.isNull(), F.lit("null_ts"))
-    if validate:
-        for f in fields:
-            reason = reason.when(
-                field_illegal(F.col(f).cast("string")), F.lit(f"illegal_field:{f}")
-            )
-        if total_col is not None:
-            reason = reason.when(
-                value_illegal(F.col(total_col), value_dp),
-                F.lit(f"illegal_value:{total_col}"),
-            )
-        if count_col is not None:
-            # same dp=0 count bound as track_batch's filter
-            reason = reason.when(
-                value_illegal(F.col(count_col), 0 if value_dp is not None else None),
-                F.lit(f"illegal_value:{count_col}"),
-            )
+    for f in fields:
+        reason = reason.when(
+            field_illegal(F.col(f).cast("string")), F.lit(f"illegal_field:{f}")
+        )
+    reason = reason.when(
+        value_illegal(F.col(total_col), value_dp), F.lit(f"illegal_value:{total_col}")
+    )
+    if count_col is not None:
+        # same dp=0 count bound as track_batch's filter
+        reason = reason.when(
+            value_illegal(F.col(count_col), 0 if value_dp is not None else None),
+            F.lit(f"illegal_value:{count_col}"),
+        )
     return df.withColumn("reject_reason", reason).filter(
         F.col("reject_reason").isNotNull()
     )

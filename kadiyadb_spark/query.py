@@ -172,12 +172,6 @@ def _match_cond(depth: "int | None", preds: list) -> "F.Column":
     return functools.reduce(operator.and_, conds) if conds else F.lit(True)
 
 
-def pattern_filter(df: DataFrame, pattern: list) -> DataFrame:
-    """O6/O7 as a Catalyst filter: exact depth + equality/IN/RLIKE on
-    non-* levels."""
-    return df.filter(_match_cond(*compile_pattern(pattern)))
-
-
 class _SlotRange(NamedTuple):
     """The one range spec of every Fetch-family reader, built once per call
     by ``_slot_range``: [from_b, to_b) are the slot-floored ends, and
@@ -1276,19 +1270,9 @@ def series_gaps(
     (plan-asserted). The cnt=0 filter precedes the window, so only
     absent slots ever shuffle — a mostly-healthy fleet moves almost
     nothing."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(*series_cols).orderBy(bucket_col)
-    absent = df.filter(F.col(cnt_col) == 0).select(
-        *series_cols,
-        bucket_col,
-        # integer DIV, not double division: buckets are epoch-ns longs
-        # (~1.7e18), past double's 2^53 exact range
-        F.expr(f"CAST({bucket_col} DIV {resolution} AS LONG)").alias("_slot"),
-    )
-    run = (F.col("_slot") - F.row_number().over(w).cast("long")).alias("_run")
     return (
-        absent.select(*series_cols, bucket_col, "_slot", run)
+        df.filter(F.col(cnt_col) == 0)
+        .select(*series_cols, bucket_col, _run_key(series_cols, bucket_col, resolution))
         .groupBy(*series_cols, "_run")
         .agg(
             F.min(bucket_col).alias("gap_start"),
@@ -1296,6 +1280,58 @@ def series_gaps(
             F.count(F.lit(1)).alias("n_slots"),
         )
         .drop("_run")
+    )
+
+
+def _run_key(series_cols: list[str], bucket_col: str, resolution: int) -> "F.Column":
+    """THE gaps-and-islands run key of ``series_gaps``, ``series_alerts``
+    and ``fetch_rule_group``: slot index minus the per-series rank of the
+    kept slots is constant within a run of consecutive slots (both
+    integers; no session-window heuristics). Integer DIV, not double
+    division: buckets are epoch-ns longs (~1.7e18), past double's 2^53
+    exact range."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy(*series_cols).orderBy(bucket_col)
+    return (
+        F.expr(f"CAST({bucket_col} DIV {resolution} AS LONG)")
+        - F.row_number().over(w).cast("long")
+    ).alias("_run")
+
+
+def _alert_runs(
+    df: DataFrame, keys: list[str], bucket_col: str, resolution: int, for_slots: "F.Column"
+) -> DataFrame:
+    """The pending→firing run aggregation of ``series_alerts`` and
+    ``fetch_rule_group`` over ``df``'s condition-holding slots (``keys``,
+    ``bucket_col``, scaled total ``_t4``): one row per run of consecutive
+    slots per ``keys`` — pending_start, firing_start, run_end, n_slots,
+    peak — kept when it holds ``for_slots`` slots (a literal, or a per-row
+    expression such as a rule group's when-chain). The run groupBy keys on
+    (keys, run), a superset of the run key's window partitioning, so it
+    adds no Exchange of its own."""
+    return (
+        df.select(
+            *keys,
+            bucket_col,
+            "_t4",
+            for_slots.cast("long").alias("_for"),
+            _run_key(keys, bucket_col, resolution),
+        )
+        .groupBy(*keys, "_run")
+        .agg(
+            F.min(bucket_col).alias("pending_start"),
+            (
+                F.min(bucket_col)
+                + (F.min("_for") - F.lit(1).cast("long")) * F.lit(resolution)
+            ).alias("firing_start"),
+            (F.max(bucket_col) + F.lit(resolution)).alias("run_end"),
+            F.count(F.lit(1)).alias("n_slots"),
+            (F.max("_t4") / F.lit(10000.0)).alias("peak"),
+            F.min("_for").alias("_fs"),
+        )
+        .filter(F.col("n_slots") >= F.col("_fs"))
+        .drop("_run", "_fs")
     )
 
 
@@ -2137,8 +2173,6 @@ def series_alerts(
     shuffle, same plan argument as series_gaps."""
     if for_slots < 1:
         raise ValueError(f"need for_slots >= 1, got {for_slots}")
-    from pyspark.sql import Window
-
     from kadiyadb_spark.functions.num import quantize4
 
     t4 = scale4_expr(F.col(total_col))
@@ -2146,30 +2180,8 @@ def series_alerts(
     # the data (quantize4 docstring has the tie fine print)
     thr4 = quantize4(threshold)
     cond = (t4 >= F.lit(thr4)) if above else (t4 <= F.lit(thr4))
-    w = Window.partitionBy(*series_cols).orderBy(bucket_col)
-    breaching = df.filter(cond).select(
-        *series_cols,
-        bucket_col,
-        t4.alias("_t4"),
-        # integer DIV: buckets are epoch-ns longs, past double's 2^53
-        F.expr(f"CAST({bucket_col} DIV {resolution} AS LONG)").alias("_slot"),
-    )
-    run = (F.col("_slot") - F.row_number().over(w).cast("long")).alias("_run")
-    return (
-        breaching.select(*series_cols, bucket_col, "_t4", "_slot", run)
-        .groupBy(*series_cols, "_run")
-        .agg(
-            F.min(bucket_col).alias("pending_start"),
-            (F.min(bucket_col) + F.lit((for_slots - 1) * resolution)).alias(
-                "firing_start"
-            ),
-            (F.max(bucket_col) + F.lit(resolution)).alias("run_end"),
-            F.count(F.lit(1)).alias("n_slots"),
-            (F.max("_t4") / F.lit(10000.0)).alias("peak"),
-        )
-        .filter(F.col("n_slots") >= for_slots)
-        .drop("_run")
-    )
+    breaching = df.filter(cond).select(*series_cols, bucket_col, t4.alias("_t4"))
+    return _alert_runs(breaching, series_cols, bucket_col, resolution, F.lit(for_slots))
 
 
 def series_quantile_by(
@@ -2654,8 +2666,6 @@ def fetch_rule_group(
     ``query`` label (map-side; a rule batch is bounded); thresholds
     compare as scaled longs. Output: (query, f1..fDmax, pending_start,
     firing_start, run_end, n_slots, peak)."""
-    from pyspark.sql import Window
-
     kinds, thr4s, fors = _compile_rules(rules)
     rng = _slot_range(from_ts, to_ts, resolution, duration)
     sparse = fetch_multi(
@@ -2719,33 +2729,8 @@ def fetch_rule_group(
                 F.lit(None).cast("long").alias("_t4"),
             )
         )
-    br = functools.reduce(DataFrame.unionByName, branches).select(
-        "query",
-        *fcols,
-        S.BUCKET,
-        "_t4",
-        for_c.alias("_for"),
-        F.expr(f"CAST({S.BUCKET} DIV {resolution} AS LONG)").alias("_slot"),
-    )
-    w = Window.partitionBy("query", *fcols).orderBy(S.BUCKET)
-    run = (F.col("_slot") - F.row_number().over(w).cast("long")).alias("_run")
-    return (
-        br.select("query", *fcols, S.BUCKET, "_t4", "_for", run)
-        .groupBy("query", *fcols, "_run")
-        .agg(
-            F.min(S.BUCKET).alias("pending_start"),
-            (
-                F.min(S.BUCKET)
-                + (F.min("_for") - F.lit(1).cast("long")) * F.lit(resolution)
-            ).alias("firing_start"),
-            (F.max(S.BUCKET) + F.lit(resolution)).alias("run_end"),
-            F.count(F.lit(1)).alias("n_slots"),
-            (F.max("_t4") / F.lit(10000.0)).alias("peak"),
-            F.min("_for").alias("_fs"),
-        )
-        .filter(F.col("n_slots") >= F.col("_fs"))
-        .drop("_run", "_fs")
-    )
+    br = functools.reduce(DataFrame.unionByName, branches)
+    return _alert_runs(br, ["query", *fcols], S.BUCKET, resolution, for_c)
 
 
 def _compile_rules(rules: "dict[str, dict]") -> tuple:

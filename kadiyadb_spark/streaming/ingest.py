@@ -24,8 +24,10 @@ checkpointing plus the manifest commit:
    and committed as a pure segment append (``Database.commit_cube_batch``).
 
 All three share batch Track's event -> cube-row core
-(``ingest._track_rows``) and fold (``ingest._ingest_aggs``); the windowed
-two differ from batch only in grouping by a watermarked event-time window.
+(``ingest._track_rows``, so they drop exactly the rows ``track_rejects``
+reports) and fold (``ingest._ingest_aggs``); the windowed two differ from
+batch only in grouping by a watermarked event-time window. Every sink
+starts through one foreachBatch starter (``_start``).
 Each micro-batch shuffles once keyed by the cube key; only epochs present
 in the batch are touched. On a real cluster the source would be Kafka;
 tests use the file source with Trigger.AvailableNow.
@@ -40,6 +42,27 @@ from pyspark.sql.streaming import StreamingQuery
 from kadiyadb_spark import schema as S
 from kadiyadb_spark.database import Database
 from kadiyadb_spark.ingest import _ingest_aggs, _track_rows, epoch_expr
+
+
+def _start(
+    df: DataFrame,
+    sink,
+    checkpoint: str,
+    trigger_available_now: bool,
+    output_mode: str = "append",
+) -> StreamingQuery:
+    """THE streaming-sink starter: run ``sink(batch, batch_id)`` through
+    foreachBatch on every micro-batch of ``df`` in ``output_mode``,
+    checkpointed at ``checkpoint``, draining with ``availableNow`` when
+    ``trigger_available_now`` (else the default processing-time trigger)."""
+    writer = (
+        df.writeStream.outputMode(output_mode)
+        .foreachBatch(sink)
+        .option("checkpointLocation", checkpoint)
+    )
+    if trigger_available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
 
 
 def stream_track_raw(
@@ -63,7 +86,7 @@ def stream_track_raw(
 
     ``rejects_dir``: optional DEAD-LETTER quarantine — each micro-batch's
     dropped rows (ingest.track_rejects: null/unparseable event time,
-    forbidden field values) land under ``rejects_dir/batch=<id>`` with the
+    forbidden field values, poison values) land under ``rejects_dir/batch=<id>`` with the
     batch id stamped, OVERWRITE mode per batch directory, so a replayed
     batch rewrites identical content instead of duplicating it (the
     side-feed analog of the hwm idempotence; read the feed with
@@ -92,10 +115,8 @@ def stream_track_raw(
             batch, batch_id, stream_id=stream_id, ts_col=ts_col, total_col=total_col, count_col=count_col
         )
 
-    writer = events.writeStream.foreachBatch(_merge).option("checkpointLocation", checkpoint)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(events, _merge, checkpoint, trigger_available_now)
+
 
 
 def stream_dedup(
@@ -264,14 +285,7 @@ def stream_track_agg(
     def _replace(batch: DataFrame, batch_id: int) -> None:
         db.merge_replace(batch)
 
-    writer = (
-        delta.writeStream.outputMode("update")
-        .foreachBatch(_replace)
-        .option("checkpointLocation", checkpoint)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(delta, _replace, checkpoint, trigger_available_now, "update")
 
 
 def stream_track_agg_append(
@@ -307,14 +321,7 @@ def stream_track_agg_append(
     def _append(batch: DataFrame, batch_id: int) -> None:
         db.commit_cube_batch(batch, batch_id, stream_id=stream_id)
 
-    writer = (
-        delta.writeStream.outputMode("append")
-        .foreachBatch(_append)
-        .option("checkpointLocation", checkpoint)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(delta, _append, checkpoint, trigger_available_now)
 
 
 def stream_index_dedup(
@@ -449,12 +456,7 @@ def stream_index_dedup(
                 decided.unpersist()
             banded.unpersist()
 
-    writer = docs.writeStream.foreachBatch(_gate).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(docs, _gate, checkpoint, trigger_available_now)
 
 
 def _segment_refs(m: dict) -> list[str]:
@@ -526,13 +528,20 @@ def read_decisions(spark, decisions_dir: str, at_gen: int | None = None) -> Data
     record is exactly-once by construction. ``at_gen`` pins a retained
     manifest generation; compaction's GC keeps every segment a retained
     manifest references, so the pinned view survives a concurrent fold."""
+    return _read_log(spark, decisions_dir, at_gen, "decisions")
+
+
+def _read_log(spark, log_dir: str, at_gen: int | None, what: str) -> DataFrame:
+    """The committed rows of a decisions or alerts log: the segments the
+    manifest at ``at_gen`` (default the head) references, and nothing
+    staged. Raises FileNotFoundError when it references none."""
     from kadiyadb_spark.fs import HadoopFS
     from kadiyadb_spark.manifest import GenLog
 
-    m = GenLog(spark, decisions_dir).read(at_gen)
-    refs = [HadoopFS.join(decisions_dir, s["ref"]) for s in m.get("segments", [])]
+    m = GenLog(spark, log_dir).read(at_gen)
+    refs = [HadoopFS.join(log_dir, ref) for ref in _segment_refs(m)]
     if not refs:
-        raise FileNotFoundError(f"no committed decisions at {decisions_dir}")
+        raise FileNotFoundError(f"no committed {what} at {log_dir}")
     return spark.read.parquet(*refs)
 
 
@@ -627,12 +636,7 @@ def stream_alerts(
         # manifest (same contract as compact_decisions)
         log.gc(("seg-",), _segment_refs)
 
-    writer = events.writeStream.foreachBatch(_eval).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(events, _eval, checkpoint, trigger_available_now)
 
 
 def read_alerts(spark, alerts_dir: str, at_gen: int | None = None) -> DataFrame:
@@ -640,14 +644,7 @@ def read_alerts(spark, alerts_dir: str, at_gen: int | None = None) -> DataFrame:
     firing runs as of the last evaluated micro-batch. Staged segments from
     in-flight or crashed batches are invisible (manifest-resolved reads).
     ``at_gen`` pins a retained generation across a concurrent swap."""
-    from kadiyadb_spark.fs import HadoopFS
-    from kadiyadb_spark.manifest import GenLog
-
-    m = GenLog(spark, alerts_dir).read(at_gen)
-    refs = [HadoopFS.join(alerts_dir, s["ref"]) for s in m.get("segments", [])]
-    if not refs:
-        raise FileNotFoundError(f"no committed alert state at {alerts_dir}")
-    return spark.read.parquet(*refs)
+    return _read_log(spark, alerts_dir, at_gen, "alert state")
 
 
 def read_stream_rejects(spark, rejects_dir: str) -> DataFrame:

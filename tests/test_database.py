@@ -225,6 +225,30 @@ def test_manifest_epoch_pruning_reads_only_in_range_segments(spark, tmp_path, mo
     assert files and all("epoch_p=0" in f for f in files)
 
 
+def test_empty_and_non_empty_reads_share_one_schema(spark, tmp_path, monkeypatch):
+    """A fetch or fetch_multi whose kept segment set is empty returns the
+    same schema, nullability included, as one that keeps segments: at the
+    default byte bound (both on the driver), at 0 (the empty read on the
+    driver, the other on Spark) and at -1 (both on Spark)."""
+    from kadiyadb_spark import database as dbm
+
+    db = Database.open(spark, str(tmp_path / "db"), P)
+    db.track(_events(spark, [(0, "a", "b", 1.0), (3, "a", "c", 2.0)]), total_col="v")
+    reads = {
+        "fetch": lambda frm: db.fetch(frm, frm + 5, ["a", "*"]),
+        "sparse fetch": lambda frm: db.fetch(frm, frm + 5, ["a", "*"], densify=False),
+        "fetch_multi": lambda frm: db.fetch_multi(frm, frm + 5, {"q": ["a", "*"], "r": ["a"]}),
+    }
+    for name, read in reads.items():
+        schemas = []
+        for bound in (dbm._DRIVER_READ_MAX_BYTES, 0, -1):
+            monkeypatch.setattr(dbm, "_DRIVER_READ_MAX_BYTES", bound)
+            kept, empty = read(0), read(50)  # epoch 50 holds no segment
+            assert kept.count() > 0 and empty.count() == 0
+            schemas += [kept.schema, empty.schema]
+        assert all(s == schemas[0] for s in schemas), (name, schemas)
+
+
 def test_vacuum_keeps_referenced_segments(spark, tmp_path):
     db = Database.open(spark, str(tmp_path / "db"), P)
     db.track(_events(spark, [(0, "a", "b", 1.0)]), total_col="v")

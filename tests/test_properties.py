@@ -7,8 +7,9 @@ P2  fetch range additivity: fetch(a,b) ∪ fetch(b,c) == fetch(a,c) for any
     slot-aligned split point b.
 P3  cube mass conservation: sum(total) at each depth equals the sum of the
     tracked values; sum(cnt) equals the event count.
-P4  merge_increment associativity: tracking a batch in any 2-way split and
-    merging equals tracking it whole.
+P4  fold associativity: tracking a batch in any 2-way split and folding
+    the union (``fold_aggs``, the fold ``Database._read_fold`` runs) equals
+    tracking it whole.
 """
 
 import pytest
@@ -17,7 +18,7 @@ from hypothesis import strategies as st
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from kadiyadb_spark.ingest import merge_increment, track_batch
+from kadiyadb_spark.ingest import fold_aggs, track_batch
 from kadiyadb_spark.query import fetch
 
 RES, DUR = 1, 5
@@ -135,14 +136,19 @@ def test_p5_fetch_floors_non_aligned_ends(spark, events, frm, to_extra):
 
 @given(events=events_strategy, cut=st.integers(min_value=0, max_value=40))
 @SETTINGS
-def test_p4_merge_increment_associative(spark, events, cut):
+def test_p4_fold_aggs_associative(spark, events, cut):
     cut = min(cut, len(events))
     first, second = events[:cut], events[cut:]
     whole = _rows(_cube(spark, events))
     if not first or not second:
         merged = _cube(spark, first or second)
     else:
-        merged = merge_increment(_cube(spark, first), _cube(spark, second), max_depth=2)
+        merged = (
+            _cube(spark, first)
+            .unionByName(_cube(spark, second))
+            .groupBy("epoch", "bucket", "f1", "f2", "depth")
+            .agg(*fold_aggs(4))
+        )
     assert _rows(merged) == whole
 
 
