@@ -13,9 +13,10 @@ runs, reusing its definitions:
   ``compile_pattern``'s predicates as ``==``, ``is_in`` and, for ``Re``,
   ``database._jmatch`` (Spark's anchored rlike) over the column's distinct
   values;
-- the fold of ``ingest.fold_aggs``, bit for bit: ``round(v·10^dp)`` with
-  halves away from zero (Spark's ``round``), ``cnt`` at dp 0, int64 sums
-  that cannot wrap, the 2^53 guard with the same message, one division;
+- the fold of ``ingest.fold_aggs``, bit for bit: ``round(v·10^4)`` on the
+  cube's ``CUBE_DP`` grid with halves away from zero (Spark's ``round``),
+  ``cnt`` at dp 0, int64 sums that cannot wrap, the 2^53 guard with the
+  same message, one division;
 - ``query._densify``'s per-epoch zero-fill, vectorized: a series present
   in an epoch yields every clipped slot of that epoch.
 
@@ -36,7 +37,7 @@ from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from kadiyadb_spark import schema as S
-from kadiyadb_spark.functions.num import FOLD_EXACT_BOUND, fold_overflow_text
+from kadiyadb_spark.functions.num import CUBE_DP, FOLD_EXACT_BOUND, fold_overflow_text
 from kadiyadb_spark.query import Re, _compile_batch, compile_pattern
 
 
@@ -75,7 +76,7 @@ def read_segments(files: "list[str]", max_depth: int) -> "pa.Table | None":
 
 
 def fetch(
-    spark: SparkSession, seg: pa.Table, rng, pattern: list, value_dp: int, densify: bool
+    spark: SparkSession, seg: pa.Table, rng, pattern: list, densify: bool
 ) -> DataFrame:
     """``query.fetch`` over the kept segments' rows ``seg`` (as read, not
     yet folded): columns (epoch, f1..fd, bucket, total, cnt). ``rng`` is
@@ -86,13 +87,13 @@ def fetch(
     # densify scans whole epochs: series membership is per epoch
     lo, hi = (rng.epochs.start, rng.epochs.stop) if densify else (rng.from_b, rng.to_b)
     rows = seg.filter(pa.array(_in_range(seg, rng, lo, hi) & _match(seg, depth, preds)))
-    folded = _fold(rows, [S.EPOCH, *fcols, S.BUCKET], value_dp)
+    folded = _fold(rows, [S.EPOCH, *fcols, S.BUCKET])
     out = _densify(folded, [S.EPOCH, *fcols], rng) if densify else folded
     return _to_spark(spark, out, fcols, dense=densify)
 
 
 def fetch_multi(
-    spark: SparkSession, seg: pa.Table, rng, patterns: "dict[str, list]", value_dp: int
+    spark: SparkSession, seg: pa.Table, rng, patterns: "dict[str, list]"
 ) -> DataFrame:
     """``query.fetch_multi`` over the segment rows ``seg``: one sparse row
     per (matching pattern, folded point), columns (query, epoch,
@@ -104,7 +105,7 @@ def fetch_multi(
     for _, (depth, preds) in compiled:
         any_match |= _match(seg, depth, preds)
     rows = seg.filter(pa.array(_in_range(seg, rng, rng.from_b, rng.to_b) & any_match))
-    folded = _fold(rows, [S.EPOCH, *fcols, S.DEPTH, S.BUCKET], value_dp)
+    folded = _fold(rows, [S.EPOCH, *fcols, S.DEPTH, S.BUCKET])
     out = pa.concat_tables(
         hit.add_column(0, "query", pa.array([name] * hit.num_rows, pa.string()))
         for name, (depth, preds) in compiled
@@ -188,15 +189,15 @@ def _run_starts(sorted_codes: "list[np.ndarray]", n: int) -> np.ndarray:
     return np.flatnonzero(np.r_[n > 0, change])
 
 
-def _fold(t: pa.Table, keys: "list[str]", value_dp: int) -> pa.Table:
-    """``fold_aggs(value_dp)`` on the driver: one row per ``keys`` group
+def _fold(t: pa.Table, keys: "list[str]") -> pa.Table:
+    """``fold_aggs()`` on the driver: one row per ``keys`` group
     holding the exact folded (total, cnt), rows sorted so every prefix of
     ``keys`` forms contiguous runs."""
     codes = [_codes(t[k]) for k in keys]
     order = np.lexsort(codes[::-1])
     starts = _run_starts([c[order] for c in codes], t.num_rows)
     out = t.select(keys).take(order[starts])
-    for col, dp in ((S.TOTAL, value_dp), (S.CNT, 0)):
+    for col, dp in ((S.TOTAL, CUBE_DP), (S.CNT, 0)):
         out = out.append_column(col, pa.array(_exact_sum(t[col].to_numpy()[order], starts, dp)))
     return out
 

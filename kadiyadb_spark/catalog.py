@@ -16,6 +16,8 @@ import os
 import re
 from dataclasses import dataclass, field
 
+from kadiyadb_spark.functions.num import CUBE_DP
+
 logger = logging.getLogger(__name__)
 
 _NS = {
@@ -55,6 +57,10 @@ class Params:
     duration divisible by resolution, retention divisible by duration.
     ``max_ro_epochs``/``max_rw_epochs`` are kept for params.json parity; Spark
     manages memory itself so they only gate validation.
+
+    Every store folds on the one ``num.CUBE_DP`` grid (ingest.track_batch):
+    ``from_dict`` refuses an older ``valueDp`` other than it (``null`` =
+    raw float64), whose totals the exact fold would silently re-quantize.
     """
 
     duration: int  # epoch width, ns
@@ -63,18 +69,10 @@ class Params:
     max_ro_epochs: int = 2
     max_rw_epochs: int = 2
     fields: tuple[str, ...] = field(default=())  # dimension column names, in path order
-    # Decimal quantization of tracked values: every (total, count) fold in
-    # the engine — ingest, segment merge, compact, read — runs as an exact
-    # scaled-long sum at this precision, making stored Points bit-identical
-    # at any parallelism (see ingest.track_batch). None restores the
-    # reference's raw float64 accumulation (epoch/epoch.go:66-80).
-    value_dp: int | None = 4
 
     def __post_init__(self) -> None:
         if self.duration <= 0 or self.resolution <= 0 or self.retention <= 0:
             raise ValueError("duration, resolution and retention must be positive")
-        if self.value_dp is not None and not (0 <= self.value_dp <= 9):
-            raise ValueError("value_dp must be None or in [0, 9]")
         if self.max_ro_epochs <= 0 or self.max_rw_epochs <= 0:
             raise ValueError("maxROEpochs and maxRWEpochs must be positive")
         if self.duration % self.resolution != 0:
@@ -108,6 +106,11 @@ class Params:
         retention = pick("retention")
         if duration is None or resolution is None or retention is None:
             raise ValueError("params must define duration, resolution, retention")
+        if (dp := pick("valueDp", "value_dp", default=CUBE_DP)) != CUBE_DP:
+            raise ValueError(
+                f"valueDp {json.dumps(dp)} is not the cube's {CUBE_DP}-decimal "
+                f"value grid: the store holds raw doubles or another grid"
+            )
         return cls(
             duration=parse_duration(duration),
             resolution=parse_duration(resolution),
@@ -115,11 +118,6 @@ class Params:
             max_ro_epochs=int(pick("maxROEpochs", "max_ro_epochs", default=2)),
             max_rw_epochs=int(pick("maxRWEpochs", "max_rw_epochs", default=2)),
             fields=tuple(pick("fields", default=()) or ()),
-            value_dp=(
-                None
-                if (vdp := pick("valueDp", "value_dp", default=4)) is None
-                else int(vdp)
-            ),
         )
 
     @classmethod
@@ -135,7 +133,6 @@ class Params:
             "maxROEpochs": self.max_ro_epochs,
             "maxRWEpochs": self.max_rw_epochs,
             "fields": list(self.fields),
-            "valueDp": self.value_dp,
         }
 
 

@@ -220,14 +220,21 @@ class Database:
     ) -> "Database":
         fs = HadoopFS(spark, path)
         pj = HadoopFS.join(path, "params.json")
+
+        def stored() -> Params:
+            try:
+                return Params.from_dict(fs.read_json(pj))
+            except ValueError as e:
+                raise ValueError(f"invalid params at {path}: {e}") from e
+
         if params is None:
-            params = Params.from_dict(fs.read_json(pj))
+            params = stored()
         else:
             fs.mkdirs(path)
             if not fs.exists(pj):
                 fs.write_text_atomic(pj, json.dumps(params.to_dict()))
             else:
-                existing = Params.from_dict(fs.read_json(pj))
+                existing = stored()
                 if existing != params:
                     # opening an existing cube under DIFFERENT params would
                     # write/read on the wrong bucket/epoch grid — silent
@@ -647,7 +654,7 @@ class Database:
         """``fold_aggs`` for this cube, built once per handle: every Column
         call is a JVM round trip, and the guarded exact fold takes a few
         dozen of them — tens of ms per read, paid before any job runs."""
-        return fold_aggs(self.params.value_dp)
+        return fold_aggs()
 
     def create_view(
         self,
@@ -725,7 +732,6 @@ class Database:
             count_col=count_col,
             resolution=p.resolution,
             duration=p.duration,
-            value_dp=p.value_dp,
         )
         refs, stats = self._write_segment(delta)
         if refs:
@@ -776,7 +782,6 @@ class Database:
             count_col=count_col,
             resolution=p.resolution,
             duration=p.duration,
-            value_dp=p.value_dp,
         )
         return self.commit_cube_batch(delta, batch_id, stream_id=stream_id)
 
@@ -880,8 +885,6 @@ class Database:
         serves the read (``arrow_read``: no Spark job), None when the Spark
         plan does. The driver serves only when all of these hold:
 
-        - the cube folds exactly (``value_dp`` set): the raw-double fold
-          is order-dependent, so there is no result to match bit for bit;
         - every ``Re`` level is inside the ``_re_prune_safe`` whitelist,
           where ``_jmatch`` replays the JVM's matcher;
         - the store is on the local filesystem;
@@ -901,8 +904,6 @@ class Database:
         seg, why, files, nbytes = None, None, None, None
         if rng.empty:
             why = "empty range"
-        elif self.params.value_dp is None:
-            why = "value_dp is None"
         elif any(
             isinstance(v, Re) and not _re_prune_safe(v.pattern)
             for p in patterns
@@ -965,9 +966,7 @@ class Database:
         rng, m, paths = self._read_range(from_ts, to_ts, [pattern], at_gen)
         seg = self._driver_segments("fetch", m, rng, paths, [pattern])
         if seg is not None:
-            return arrow_read.fetch(
-                self.spark, seg, rng, pattern, self.params.value_dp, densify
-            )
+            return arrow_read.fetch(self.spark, seg, rng, pattern, densify)
         cluster = [S.EPOCH, *S.field_cols(depth)] if densify else None
         return fetch_df(
             self._read_fold(paths, cluster),
@@ -1000,9 +999,7 @@ class Database:
         rng, m, paths = self._read_range(from_ts, to_ts, pats, at_gen)
         seg = self._driver_segments("fetch_multi", m, rng, paths, pats)
         if seg is not None:
-            return arrow_read.fetch_multi(
-                self.spark, seg, rng, patterns, self.params.value_dp
-            )
+            return arrow_read.fetch_multi(self.spark, seg, rng, patterns)
         return fetch_multi_df(
             self._read_fold(paths),
             from_ts,

@@ -220,7 +220,6 @@ def tokenize_words(
     words: DataFrame,
     merges: list[tuple[str, str, int]],
     word_col: str = "word",
-    engine: str = "auto",
 ) -> DataFrame:
     """Tokenize the DISTINCT-word frame by replaying merges in rank order
     (exactly the greedy lowest-rank tokenization, per the standard BPE
@@ -228,22 +227,27 @@ def tokenize_words(
     instead of occurrences is the corpus-scale win (join back on the word
     column).
 
-    ``engine``: 'expr' (nested JVM fold — the SQL-replayable gate path,
-    plan depth grows with the merge count), 'kernel' (Arrow-batched python
-    replay of the SAME left-to-right non-overlapping merge loop —
-    identical tokens, O(1) plan depth, the realistic-vocab scale path;
-    equality is pytest-pinned), or 'auto' (expr up to 64
-    merges, kernel beyond)."""
-    if engine == "auto":
-        engine = "expr" if len(merges) <= _MAX_EXPR_MERGES else "kernel"
-    if engine == "expr":
-        syms = sym_init_expr(F.col(word_col))
-        for left, right, _ in merges:
-            syms = apply_merge_expr(syms, left, right)
-        return words.withColumn("tokens", syms)
-    if engine != "kernel":
-        raise ValueError(f"unknown tokenize engine: {engine!r}")
+    The merge count picks the executor: up to ``_MAX_EXPR_MERGES`` a nested
+    JVM fold (``_tokenize_expr`` — the SQL-replayable gate path, plan depth
+    grows with the merge count), beyond it an Arrow-batched python replay
+    of the SAME left-to-right non-overlapping merge loop
+    (``_tokenize_kernel`` — identical tokens, O(1) plan depth, the
+    realistic-vocab scale path; equality is pytest-pinned)."""
+    if len(merges) <= _MAX_EXPR_MERGES:
+        return _tokenize_expr(words, merges, word_col)
+    return _tokenize_kernel(words, merges, word_col)
 
+
+def _tokenize_expr(words: DataFrame, merges: list, word_col: str) -> DataFrame:
+    """``tokenize_words`` as one nested JVM expression per word."""
+    syms = sym_init_expr(F.col(word_col))
+    for left, right, _ in merges:
+        syms = apply_merge_expr(syms, left, right)
+    return words.withColumn("tokens", syms)
+
+
+def _tokenize_kernel(words: DataFrame, merges: list, word_col: str) -> DataFrame:
+    """``tokenize_words`` as an Arrow-batched python merge replay."""
     pairs = [(l, r) for l, r, _ in merges]
     in_schema = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in words.schema.fields

@@ -120,6 +120,11 @@ def scale4_expr(c: Column) -> Column:
     return F.round(c.cast("double") * 10000).cast("long")
 
 
+# The cube's one value grid: every stored total is an exact multiple of
+# 10^-CUBE_DP, and every total fold (Track, merge, compact, read) sums
+# round(v·10^CUBE_DP) as exact longs — the grid ``scale4_expr`` reads.
+CUBE_DP = 4
+
 # Stored cube totals are doubles holding exact dp-multiples; past 2^53 a
 # double can no longer represent the scaled integer, so a re-fold would
 # silently drift. Every guarded fold asserts the SCALED total stays within
@@ -135,7 +140,7 @@ def fold_overflow_text(dp: int) -> tuple[str, str]:
     return (
         f"scaled-long fold overflow at value_dp={dp}: |total| ",
         f" exceeds 2^53 — the stored double can no longer hold the exact "
-        f"{dp}dp multiple; lower value_dp or split the group",
+        f"{dp}dp multiple; split the group",
     )
 
 
@@ -161,6 +166,25 @@ def guarded_scaled_sum(c: Column, dp: int) -> Column:
         .otherwise(total)
         .cast("long")
     )
+
+
+def centered_var4(n: Column, s1: Column, s2: Column, m: Column, denom: Column) -> Column:
+    """Variance of scaled-long values x4 from their exact folds: count
+    ``n``, S1 = Σx4, S2 = Σx4² and an in-group integer reference ``m``,
+    over the double ``denom`` (n·(n−1) for a sample variance, n² for a
+    population one). The moments re-center about ``m`` through the exact
+    identities S1d = S1 − n·m and S2d = S2 − 2·m·S1 + n·m², so a flat
+    group gives exactly 0 at any magnitude and the one double expression
+    (n·S2d − S1d²)/denom is conditioned on the spread, not the level (the
+    uncentered n·S2 − S1² cancels catastrophically past 2^53). The
+    identities run in decimal(38,0): in long, 2·m·S1 wraps once
+    |total| passes ~6e4 over a 12-slot window. Every operand is an exact
+    integer, so the result is the same IEEE sequence in any engine."""
+    n, s1, s2, m = (c.cast("decimal(38,0)") for c in (n, s1, s2, m))
+    s1d = (s1 - n * m).cast("double")
+    s2d = (s2 - F.lit(2) * m * s1 + n * m * m).cast("double")
+    nd = n.cast("double")
+    return (nd * s2d - s1d * s1d) / denom
 
 
 def exact_fold_expr(c: Column, dp: int = 4) -> Column:

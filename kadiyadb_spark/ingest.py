@@ -22,7 +22,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from kadiyadb_spark import schema as S
-from kadiyadb_spark.functions.num import FOLD_EXACT_BOUND, guarded_scaled_sum
+from kadiyadb_spark.functions.num import (
+    CUBE_DP,
+    FOLD_EXACT_BOUND,
+    exact_fold_expr,
+    guarded_scaled_sum,
+)
 
 # Values the reference forbids as stored field values (index/node.go:200-214).
 ILLEGAL_FIELD_VALUES = ("", "*")
@@ -48,25 +53,24 @@ def field_illegal(c: Column) -> Column:
     return c.isNull() | c.isin(*ILLEGAL_FIELD_VALUES)
 
 
-def value_illegal(c: Column, value_dp: int | None) -> Column:
+def value_illegal(c: Column, dp: int) -> Column:
     """Poison-value rule for total/count columns (code-review r12): NULL
     (would half-count — cnt increments, total contributes nothing, and an
     all-null group stores a schema-violating NULL total), NaN/±Inf (under
     ANSI the scaled cast ABORTS the whole job — one poison row must not
-    kill a 100 TB ingest), and, on the scaled-long grid, magnitudes whose
-    scaled form exceeds the EXACT-FOLD bound 2^53 (VERDICT r12 item 2: the
+    kill a 100 TB ingest), and magnitudes whose scaled form on the ``dp``
+    grid (``CUBE_DP`` for totals, 0 for counts) exceeds the EXACT-FOLD
+    bound 2^53 (VERDICT r12 item 2: the
     r12 bound was long-cast safety, 9.2e18/10^dp, which left a ~1000x band
     of values that validated cleanly and then aborted the whole job inside
     ``guarded_scaled_sum`` — the exact one-poison-row failure this rule
     exists to close). A single validated row now survives every exact fold
     by construction; only a GROUP whose combined total passes 2^53 can
     still abort, which is the documented fold-overflow contract (split the
-    group or lower value_dp), not a data-quality case."""
+    group), not a data-quality case."""
     c = c.cast("double")
-    bad = c.isNull() | F.isnan(c) | (F.abs(c) == float("inf"))
-    if value_dp is not None:
-        bad = bad | (F.abs(c) > F.lit(FOLD_EXACT_BOUND / 10**value_dp))
-    return bad
+    bound = F.lit(FOLD_EXACT_BOUND / 10**dp)
+    return c.isNull() | F.isnan(c) | (F.abs(c) == float("inf")) | (F.abs(c) > bound)
 
 
 def validate_fields_df(df: DataFrame, fields: list[str]) -> DataFrame:
@@ -117,7 +121,6 @@ def _track_rows(
     ts_col: str = "ts",
     total_col: str = "value",
     count_col: str | None = None,
-    value_dp: int | None = 4,
     rollup: bool = True,
 ) -> DataFrame:
     """The one event -> cube-row transform behind every Track path (batch
@@ -134,13 +137,11 @@ def _track_rows(
     # poison-value rows reject like illegal fields (code-review r12):
     # NULL half-counts, NaN/Inf/out-of-grid aborts the scaled cast —
     # track_rejects surfaces them with per-reason labels
-    df = df.filter(~value_illegal(F.col(total_col), value_dp))
+    df = df.filter(~value_illegal(F.col(total_col), CUBE_DP))
     if count_col is not None:
         # counts are INTEGERS (reference Point.Count, block/blockrw.go)
         # and fold at dp=0, so their grid bound is 2^53 flat
-        df = df.filter(
-            ~value_illegal(F.col(count_col), 0 if value_dp is not None else None)
-        )
+        df = df.filter(~value_illegal(F.col(count_col), 0))
 
     # Event-time boundary: accept long-ns, TIMESTAMP, TIMESTAMP_NTZ, DATE or
     # ISO string input and emit long-ns (schema.ts_ns_expr) — the engine
@@ -179,22 +180,16 @@ def _track_rows(
             F.lit(True),
         )
     )
-    if value_dp is None:
-        total = F.col(total_col).cast("double")
-        cnt = F.lit(1.0) if count_col is None else F.col(count_col).cast("double")
-    else:
-        s = 10**value_dp
-        total = F.round(F.col(total_col).cast("double") * s).cast("long")
-        # counts quantize at dp=0 (integers, like the reference's
-        # Point.Count) — VERDICT r12 item 2: scaling them by 10^dp burned
-        # 10^dp of the 2^53 exact-fold headroom for nothing, so a group
-        # with cnt past 2^53/10^dp ingested cleanly and aborted at its
-        # first compact/merge re-fold
-        cnt = (
-            F.lit(1).cast("long")
-            if count_col is None
-            else F.round(F.col(count_col).cast("double")).cast("long")
-        )
+    total = F.round(F.col(total_col).cast("double") * 10**CUBE_DP).cast("long")
+    # counts quantize at dp=0 (integers, like the reference's Point.Count)
+    # — VERDICT r12 item 2: scaling them by 10^dp burned 10^dp of the 2^53
+    # exact-fold headroom for nothing, so a group with cnt past 2^53/10^dp
+    # ingested cleanly and aborted at its first compact/merge re-fold
+    cnt = (
+        F.lit(1).cast("long")
+        if count_col is None
+        else F.round(F.col(count_col).cast("double")).cast("long")
+    )
     return _prefix_fanout(
         df,
         {"_ts": ts, "_t": total, "_c": cnt},
@@ -203,18 +198,16 @@ def _track_rows(
     )
 
 
-def _ingest_aggs(value_dp: int | None) -> list[Column]:
+def _ingest_aggs() -> list[Column]:
     """The (total, cnt) aggregates over ``_track_rows``' quantized ``_t`` /
     ``_c`` — one definition for the batch groupBy and the streaming window
     state, so stream and batch fold the same exact scaled longs regardless
     of micro-batch boundaries or state-merge order."""
-    if value_dp is None:
-        return [F.sum("_t").alias(S.TOTAL), F.sum("_c").alias(S.CNT)]
     return [
         # guarded: decimal(38,0) accumulation (no 2^63 wrap) + hard error
         # past 2^53, where the stored double would silently stop being an
         # exact dp-multiple
-        (guarded_scaled_sum(F.col("_t"), value_dp) / F.lit(float(10**value_dp)))
+        (guarded_scaled_sum(F.col("_t"), CUBE_DP) / F.lit(float(10**CUBE_DP)))
         .cast("double")
         .alias(S.TOTAL),
         # counts are plain longs at dp=0 either way (1s for count_col=None,
@@ -232,7 +225,6 @@ def track_batch(
     resolution: int = 60_000_000_000,
     duration: int = 3_600_000_000_000,
     rollup: bool = True,
-    value_dp: int | None = 4,
 ) -> DataFrame:
     """Aggregate an events DataFrame into the kadiyadb cube.
 
@@ -242,22 +234,21 @@ def track_batch(
     rollup); ``rollup=False`` stores only full-depth series (cheaper writes;
     query-time rollup can reconstruct prefixes — property-tested equal).
 
-    ``value_dp`` (default 4) makes the (total, count) folds ORDER-INDEPENDENT
-    for ``dp``-decimal-quantized inputs: each value scales to its exact
-    integer (``round(v*10^dp)`` as long), longs sum associatively —
+    The (total, count) folds are ORDER-INDEPENDENT on the cube's one value
+    grid (``num.CUBE_DP`` = 4 decimals): each value scales to its exact
+    integer (``round(v*10^4)`` as long), longs sum associatively —
     identical at ANY parallelism and in any engine — and ONE final division
-    restores the double. The stored total is then the exact dp-multiple, so
-    every later re-fold (segment merge, compact, rollup read) recovers the
-    same integers and the whole LSM pipeline is exact end-to-end; with raw
-    double sums a partition-layout change can flip the 4th decimal of a
-    round4'd total (the r06 ``pipeline_quality`` gate class). Inputs with
-    MORE than ``dp`` true decimals are quantized at ingest — pass
-    ``value_dp=None`` for the reference's raw float64 accumulation
-    (epoch/epoch.go:66-80 semantics, order-dependent). Counts quantize and
-    fold at dp=0 (integers, like the reference's Point.Count) — the full
-    2^53 exact-fold headroom. Exact-fold bound at dp=4: |v| <= 1e5 leaves
-    ~9e6 rows per (series, slot) before the 2^53 guard trips; beyond that
-    scale, lower value_dp or switch the callsite to decimal(38, dp).
+    restores the double. The stored total is then the exact 4dp-multiple,
+    so every later re-fold (segment merge, compact, rollup read) recovers
+    the same integers and the whole LSM pipeline is exact end-to-end, where
+    the reference's float64 adds (epoch/epoch.go:66-80) depend on order: a
+    partition-layout change can flip the 4th decimal of a round4'd total
+    (the r06 ``pipeline_quality`` gate class). Inputs with MORE than 4 true
+    decimals are quantized at ingest. Counts quantize and fold at dp=0
+    (integers, like the reference's Point.Count) — the full 2^53
+    exact-fold headroom. Exact-fold bound: |v| <= 1e5 leaves ~9e6 rows per
+    (series, slot) before the 2^53 guard trips; beyond that scale, split
+    the group.
 
     Rows carrying illegal field values (""/"*"/null) or poison values are
     always dropped, as the reference rejects ""/"*" on every write with no
@@ -272,7 +263,7 @@ def track_batch(
     ``_track_rows`` core grouped by (epoch, bucket, f1..fN, depth) — ONE
     shuffle, with map-side partial aggregation.
     """
-    rows = _track_rows(df, fields, ts_col, total_col, count_col, value_dp, rollup)
+    rows = _track_rows(df, fields, ts_col, total_col, count_col, rollup)
     bucket = bucket_expr(F.col("_ts"), resolution)
     fcols = S.field_cols(len(fields))
     return (
@@ -285,25 +276,20 @@ def track_batch(
             "_c",
         )
         .groupBy(S.EPOCH, S.BUCKET, *fcols, S.DEPTH)
-        .agg(*_ingest_aggs(value_dp))
+        .agg(*_ingest_aggs())
     )
 
 
-def fold_aggs(value_dp: int | None):
+def fold_aggs() -> list[Column]:
     """The (total, cnt) aggregate pair every STORED-cube fold uses — segment
-    merge, compact, read-time fold, rollup read. ``value_dp`` set: exact
-    scaled-long folds (stored doubles are exact dp-multiples, so
-    ``round(v*10^dp)`` recovers the integer losslessly up to 2^53/10^dp and
-    the fold is order-independent). ``None``: raw double sums (reference
-    float64 semantics)."""
-    if value_dp is None:
-        return [F.sum(S.TOTAL).alias(S.TOTAL), F.sum(S.CNT).alias(S.CNT)]
-    from kadiyadb_spark.functions.num import exact_fold_expr
-
+    merge, compact, read-time fold, rollup read: exact scaled-long folds on
+    the ``CUBE_DP`` grid (stored doubles are exact 4dp-multiples, so
+    ``round(v*10^4)`` recovers the integer losslessly up to 2^53/10^4 and
+    the fold is order-independent)."""
     return [
-        exact_fold_expr(F.col(S.TOTAL), value_dp).alias(S.TOTAL),
+        exact_fold_expr(F.col(S.TOTAL), CUBE_DP).alias(S.TOTAL),
         # counts are INTEGER doubles (ingest quantizes at dp=0), so they
-        # re-fold at dp=0 — re-folding at value_dp burned 10^dp of the 2^53
+        # re-fold at dp=0 — re-folding at 4dp burned 10^4 of the 2^53
         # guard headroom, aborting compact/merge for groups whose cnt had
         # ingested cleanly (VERDICT r12 item 2 / SURVEY §19.4 defer)
         exact_fold_expr(F.col(S.CNT), 0).alias(S.CNT),
@@ -316,7 +302,6 @@ def track_rejects(
     ts_col: str = "ts",
     total_col: str = "value",
     count_col: str | None = None,
-    value_dp: int | None = 4,
 ) -> DataFrame:
     """DEAD-LETTER view of a track batch: exactly the rows ``track_batch``
     drops, each with a ``reject_reason`` — the observability half of the
@@ -334,7 +319,7 @@ def track_rejects(
                               (would abort the ANSI cast) — code-review
                               r12, same rule as track_batch's filter
 
-    ``total_col``/``count_col``/``value_dp`` MUST mirror the
+    ``total_col``/``count_col`` MUST mirror the
     ``track_batch`` call this feed shadows; a frame without ``total_col``
     raises, because its twin could not aggregate it either.
 
@@ -357,12 +342,12 @@ def track_rejects(
             field_illegal(F.col(f).cast("string")), F.lit(f"illegal_field:{f}")
         )
     reason = reason.when(
-        value_illegal(F.col(total_col), value_dp), F.lit(f"illegal_value:{total_col}")
+        value_illegal(F.col(total_col), CUBE_DP), F.lit(f"illegal_value:{total_col}")
     )
     if count_col is not None:
         # same dp=0 count bound as track_batch's filter
         reason = reason.when(
-            value_illegal(F.col(count_col), 0 if value_dp is not None else None),
+            value_illegal(F.col(count_col), 0),
             F.lit(f"illegal_value:{count_col}"),
         )
     return df.withColumn("reject_reason", reason).filter(

@@ -47,7 +47,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kadiyadb_spark import schema as S
-from kadiyadb_spark.functions.num import scale4_expr
+from kadiyadb_spark.functions.num import centered_var4, scale4_expr
 
 WILDCARD = "*"
 
@@ -356,16 +356,13 @@ def fetch(
     )
 
 
-def rollup_at_read(
-    cube: DataFrame, to_depth: int, max_depth: int, value_dp: int | None = 4
-) -> DataFrame:
+def rollup_at_read(cube: DataFrame, to_depth: int, max_depth: int) -> DataFrame:
     """Reconstruct a prefix series at read time from full-depth series —
     property-test twin of write-time rollup (SURVEY fine-print #7): fetching
     prefix ["a","b"] from a rollup=True cube must equal aggregating all
-    depth-N children of ["a","b"] from a rollup=False cube. ``value_dp``
-    must match the cube's ingest quantization (ingest.track_batch) so the
-    read-time fold sums the same exact scaled longs the write-time rollup
-    summed — the equality is then bit-exact at any parallelism."""
+    depth-N children of ["a","b"] from a rollup=False cube. The read-time
+    fold sums the same exact scaled longs the write-time rollup summed
+    (``fold_aggs``), so the equality is bit-exact at any parallelism."""
     from kadiyadb_spark.ingest import _prefix_fanout, fold_aggs
 
     fcols = S.field_cols(max_depth)
@@ -377,7 +374,7 @@ def rollup_at_read(
             [to_depth],
         )
         .groupBy(S.EPOCH, S.BUCKET, *fcols, S.DEPTH)
-        .agg(*fold_aggs(value_dp))
+        .agg(*fold_aggs())
     )
 
 
@@ -1127,10 +1124,10 @@ def series_anomaly(
     Engine-default-free (closes the last windowed-variance residue): the
     window folds EXACT scaled longs — S1 = sum(x4), S2 = sum(x4²) with
     x4 = round(total·1e4) — and the variance is computed about an
-    in-window integer reference via the exact long identities
+    in-window integer reference via the exact decimal(38,0) identities
     S1d = S1 − n·m and S2d = S2 − 2·m·S1 + n·m² (m = the OLDEST in-frame
-    value), so a flat window gives S1d = S2d = 0 EXACTLY at any
-    magnitude, and the one double expression
+    value; ``num.centered_var4``), so a flat window gives S1d = S2d = 0
+    EXACTLY at any magnitude, and the one double expression
     var4 = (n·S2d − S1d²)/(n·(n−1)) — an m-invariant identity for
     n·Σ(x−x̄)² — is conditioned on the window's SPREAD, not its level
     (the uncentered n·S2 − S1² form cancels catastrophically past 2^53
@@ -1147,10 +1144,10 @@ def series_anomaly(
     ``(-∞, -(w+1))``, both incrementally maintained, O(1)/row), the
     count from ``row_number`` and the centering reference from
     ``lag(x4, w)`` (offset frames, O(1)/row) — same integers, one sort,
-    ~w× less window compute. The cumulative folds run in decimal(38,0),
-    so the partition-length running total has 10^38 headroom instead of
-    2^63 (per-row bound unchanged: x4² must fit a long, |total| ≤ 8.7e4
-    at 4dp; the window-difference S1/S2 are longs again by construction).
+    ~w× less window compute. The cumulative folds and the window
+    differences S1/S2 stay in decimal(38,0), so neither the
+    partition-length running total nor a long window can wrap (per-row
+    bound: x4² must fit a long, |total| ≤ 8.7e4 at 4dp).
     """
     from pyspark.sql import Window
 
@@ -1165,21 +1162,15 @@ def series_anomaly(
     dec1 = F.col("_x4").cast("decimal(38,0)")
     dec2 = F.col("_x4sq").cast("decimal(38,0)")
     x4 = F.col("_x4")
-    s1 = (
-        F.sum(dec1).over(cum_hi) - F.coalesce(F.sum(dec1).over(cum_lo), F.lit(0))
-    ).cast("long")
-    s2 = (
-        F.sum(dec2).over(cum_hi) - F.coalesce(F.sum(dec2).over(cum_lo), F.lit(0))
-    ).cast("long")
+    s1 = F.sum(dec1).over(cum_hi) - F.coalesce(F.sum(dec1).over(cum_lo), F.lit(0))
+    s2 = F.sum(dec2).over(cum_hi) - F.coalesce(F.sum(dec2).over(cum_lo), F.lit(0))
     m = F.lag("_x4", window_slots).over(w_ord)
     n = F.least(F.row_number().over(w_ord) - F.lit(1), F.lit(window_slots)).cast(
         "long"
     )
-    # exact long centering about the window minimum (see docstring)
-    s1d = (s1 - n * m).cast("double")
-    s2d = (s2 - F.lit(2) * m * s1 + n * m * m).cast("double")
     nd = n.cast("double")
-    var4 = (nd * s2d - s1d * s1d) / (nd * (nd - F.lit(1.0)))
+    # exact centering about the oldest in-frame value (see docstring)
+    var4 = centered_var4(n, s1, s2, m, nd * (nd - F.lit(1.0)))
     mean4 = s1.cast("double") / nd
     z = F.when(
         (n == window_slots) & (var4 > 0),
@@ -1835,16 +1826,11 @@ def series_seasonal_anomaly(
         scale4_expr(F.col(total_col)).alias("_x4"),
     )
     j = cur.join(prof, [*series_cols, "slot_of_period"], "left")
-    n, s1, s2 = F.col("_n"), F.col("_s1"), F.col("_s2")
-    m = F.col("_m").cast("decimal(38,0)")
-    nd38 = F.col("_n").cast("decimal(38,0)")
-    # exact re-centering about the slot history's minimum (decimal: the
-    # cross terms m*s1 and n*m*m wrap long too): a flat history is
-    # EXACTLY zero spread
-    s1d = (s1 - nd38 * m).cast("double")
-    s2d = (s2 - F.lit(2) * m * s1 + nd38 * m * m).cast("double")
+    n, s1 = F.col("_n"), F.col("_s1")
     nd = n.cast("double")
-    var4 = (nd * s2d - s1d * s1d) / (nd * (nd - F.lit(1.0)))
+    # exact re-centering about the slot history's minimum: a flat history
+    # is EXACTLY zero spread
+    var4 = centered_var4(n, s1, F.col("_s2"), F.col("_m"), nd * (nd - F.lit(1.0)))
     mean4 = s1.cast("double") / nd
     enough = n >= min_periods
     z = F.when(enough & (var4 > 0), (F.col("_x4").cast("double") - mean4) / F.sqrt(var4))
@@ -1964,17 +1950,11 @@ def series_agg_by(
             F.sum(S.CNT).alias("cnt"),
         )
     )
-    # exact long centering about the group minimum — flat groups give
-    # exactly 0 at any magnitude; conditioned on spread, not level (the
-    # uncentered form cancels catastrophically past 2^53)
-    n_l = F.col("n_series").cast("decimal(38,0)")
-    m38 = F.col("_m").cast("decimal(38,0)")
-    s1d = (F.col("_s1") - n_l * m38).cast("double")
-    s2d = (
-        F.col("_s2") - F.lit(2) * m38 * F.col("_s1") + n_l * m38 * m38
-    ).cast("double")
-    nd = F.col("n_series").cast("double")
-    var4 = (nd * s2d - s1d * s1d) / (nd * nd)
+    # exact centering about the group minimum — flat groups give exactly
+    # 0 at any magnitude
+    n = F.col("n_series")
+    nd = n.cast("double")
+    var4 = centered_var4(n, F.col("_s1"), F.col("_s2"), F.col("_m"), nd * nd)
     return g.select(
         *keep_cols,
         S.BUCKET,
@@ -2085,9 +2065,10 @@ def series_stddev_over_time(
 
     Engine-default-free by the same construction as series_anomaly: the
     window folds EXACT scaled longs (S1 = sum(x4), S2 = sum(x4²)), the
-    moments re-center about an in-window integer reference via exact long
-    identities (S1d = S1 − n·m, S2d = S2 − 2·m·S1 + n·m², m = the OLDEST
-    in-frame value: a flat window is EXACTLY zero at any magnitude, and
+    moments re-center about an in-window integer reference via exact
+    decimal(38,0) identities (``num.centered_var4``: S1d = S1 − n·m,
+    S2d = S2 − 2·m·S1 + n·m², m = the OLDEST in-frame value: a flat
+    window is EXACTLY zero at any magnitude, and
     the n·S2d − S1d² form — invariant to the reference — conditions on
     the spread, not the level), then population variance is ONE double
     expression over exact operands, var = (n·S2d − S1d²)/n² / 1e8 —
@@ -2115,18 +2096,12 @@ def series_stddev_over_time(
     dec1 = F.col("_x4").cast("decimal(38,0)")
     dec2 = F.col("_x4sq").cast("decimal(38,0)")
     x4 = F.col("_x4")
-    s1 = (
-        F.sum(dec1).over(cum_hi) - F.coalesce(F.sum(dec1).over(cum_lo), F.lit(0))
-    ).cast("long")
-    s2 = (
-        F.sum(dec2).over(cum_hi) - F.coalesce(F.sum(dec2).over(cum_lo), F.lit(0))
-    ).cast("long")
+    s1 = F.sum(dec1).over(cum_hi) - F.coalesce(F.sum(dec1).over(cum_lo), F.lit(0))
+    s2 = F.sum(dec2).over(cum_hi) - F.coalesce(F.sum(dec2).over(cum_lo), F.lit(0))
     m = F.lag("_x4", window_slots - 1).over(w_ord) if window_slots > 1 else x4
     n = F.least(F.row_number().over(w_ord), F.lit(window_slots)).cast("long")
-    s1d = (s1 - n * m).cast("double")
-    s2d = (s2 - F.lit(2) * m * s1 + n * m * m).cast("double")
     nd = n.cast("double")
-    var4 = (nd * s2d - s1d * s1d) / (nd * nd)
+    var4 = centered_var4(n, s1, s2, m, nd * nd)
     full = n == window_slots
     return df.select(
         *series_cols,

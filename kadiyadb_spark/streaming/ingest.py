@@ -105,7 +105,6 @@ def stream_track_raw(
                 ts_col=ts_col,
                 total_col=total_col,
                 count_col=count_col,
-                value_dp=db.params.value_dp,
             ).withColumn(
                 "batch_id", F.lit(batch_id).cast("long")
             ).write.mode("overwrite").parquet(
@@ -240,16 +239,14 @@ def _windowed_cube_delta(
             f"microseconds (timestamps are µs precision); got {p.resolution} ns"
         )
     fcols = S.field_cols(len(p.fields))
-    rows = _track_rows(
-        events, list(p.fields), ts_col, total_col, count_col, p.value_dp
-    )
+    rows = _track_rows(events, list(p.fields), ts_col, total_col, count_col)
     # Watermarks need a TimestampType column; ns -> micros loses nothing at
     # our resolutions (resolution >= 1us).
     evt = rows.withColumn(
         "_event_time", F.timestamp_micros(S.ts_us_expr(F.col("_ts")))
     ).withWatermark("_event_time", watermark)
     win = F.window("_event_time", f"{p.resolution // 1_000} microseconds")
-    agg = evt.groupBy(win.alias("_w"), *fcols, S.DEPTH).agg(*_ingest_aggs(p.value_dp))
+    agg = evt.groupBy(win.alias("_w"), *fcols, S.DEPTH).agg(*_ingest_aggs())
     bucket = F.unix_micros(F.col("_w.start")) * 1000
     return agg.select(
         epoch_expr(bucket, p.duration).alias(S.EPOCH),

@@ -116,19 +116,17 @@ def test_tokenize_words_kernel_engine_equals_expr(spark):
     """r13: the Arrow-kernel merge replay (the bounded-plan path for
     realistic merge counts — the nested-expression tree blows up Catalyst
     past a few thousand merges) produces IDENTICAL tokens to the
-    SQL-replayable expression fold, and 'auto' switches on merge count."""
+    SQL-replayable expression fold."""
     docs = spark.createDataFrame([Row(doc_id=i, text=t) for i, t in enumerate(CORPUS)])
     merges = B.train_bpe(docs, num_merges=8, checkpoint=False)
     wdf = spark.createDataFrame(
         [Row(word=w) for w in ["lowest", "newest", "unseen", "low", "x"]]
     )
     ex = {r["word"]: list(r["tokens"])
-          for r in B.tokenize_words(wdf, merges, engine="expr").collect()}
+          for r in B._tokenize_expr(wdf, merges, "word").collect()}
     ke = {r["word"]: list(r["tokens"])
-          for r in B.tokenize_words(wdf, merges, engine="kernel").collect()}
+          for r in B._tokenize_kernel(wdf, merges, "word").collect()}
     assert ex == ke
-    with pytest.raises(ValueError, match="engine"):
-        B.tokenize_words(wdf, merges, engine="nope")
 
 
 def test_bpe_degenerate_inputs_r13(spark):
@@ -153,11 +151,11 @@ def test_bpe_degenerate_inputs_r13(spark):
 
     with pytest.raises(Exception, match="reserved BPE marker"):
         try:
-            B.tokenize_words(bad, merges, engine="expr").collect()
+            B._tokenize_expr(bad, merges, "word").collect()
         except Py4JJavaError as e:  # Spark wraps raise_error
             raise RuntimeError(str(e)) from e
     with pytest.raises(Exception, match="reserved BPE marker"):
-        B.tokenize_words(bad, merges, engine="kernel").collect()
+        B._tokenize_kernel(bad, merges, "word").collect()
 
     empty = spark.createDataFrame([Row(word="")])
     assert list(B.tokenize_words(empty, merges).collect()[0]["tokens"]) == [B.END]

@@ -42,6 +42,19 @@ def test_invalid_params(d):
         Params.from_dict(d)
 
 
+def test_params_have_one_value_grid():
+    """Every store folds on the 4-decimal grid: a params.json without
+    ``valueDp``, or with 4, parses; ``null`` (raw float64) or another
+    grid raises, because the exact fold would re-quantize its totals.
+    ``to_dict`` no longer writes the key."""
+    base = {"duration": "1h", "resolution": "1m", "retention": "24h"}
+    assert Params.from_dict(base) == Params.from_dict({**base, "valueDp": 4})
+    assert "valueDp" not in Params.from_dict(base).to_dict()
+    for bad, shown in ((None, "null"), (2, "2")):
+        with pytest.raises(ValueError, match=f"valueDp {shown} is not"):
+            Params.from_dict({**base, "valueDp": bad})
+
+
 def test_load_all_skips_invalid(tmp_path):
     good = tmp_path / "good"
     good.mkdir()

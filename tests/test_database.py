@@ -34,6 +34,28 @@ def test_open_writes_and_reads_params(spark, tmp_path):
     assert db2.params == P
 
 
+def test_open_checks_the_stored_value_grid(spark, tmp_path):
+    """A store whose params.json carries the older ``"valueDp": 4`` opens
+    and reads back the same cube; ``null`` or another grid refuses to
+    open, naming the store and the value."""
+    import json
+    import re
+
+    path = str(tmp_path / "db")
+    db = Database.open(spark, path, P)
+    db.track(_events(spark, [(0, "a", "b", 1.25), (3, "a", "c", 2.5)]), total_col="v")
+    want = sorted(db.cube().collect(), key=repr)
+    fs, pj = HadoopFS(spark, path), HadoopFS.join(path, "params.json")
+    # the params.json the previous to_dict wrote
+    fs.write_text(pj, json.dumps({**P.to_dict(), "valueDp": 4}), overwrite=True)
+    assert sorted(Database.open(spark, path).cube().collect(), key=repr) == want
+    assert Database.open(spark, path, P).params == P
+    for bad, shown in ((None, "null"), (2, "2")):
+        fs.write_text(pj, json.dumps({**P.to_dict(), "valueDp": bad}), overwrite=True)
+        with pytest.raises(ValueError, match=re.escape(f"{path}: valueDp {shown} is not")):
+            Database.open(spark, path)
+
+
 def test_open_via_hadoop_file_uri(spark, tmp_path):
     """The whole lifecycle must run against a Hadoop URI root (the
     object-store path shape), not just bare POSIX paths."""
@@ -1308,7 +1330,6 @@ def _drift_total_to_float32(db):
     "case, reason",
     [
         ("drifted_physical_type", "schema"),
-        ("value_dp_none", "value_dp"),
         ("regex_outside_whitelist", "regex"),
     ],
 )
@@ -1321,10 +1342,7 @@ def test_driver_fetch_fallback_edges_are_served_by_spark(
 
     from kadiyadb_spark.query import Re
 
-    import dataclasses
-
-    params = dataclasses.replace(P, value_dp=None) if case == "value_dp_none" else P
-    db = Database.open(spark, str(tmp_path / "db"), params)
+    db = Database.open(spark, str(tmp_path / "db"), P)
     db.track(_events(spark, [(0, "ab", "u1", 1.25), (3, "ab", "u2", 2.5)]), total_col="v")
     db.track(_events(spark, [(0, "ab", "u1", 0.5)]), total_col="v")
     if case == "drifted_physical_type":

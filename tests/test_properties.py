@@ -147,7 +147,7 @@ def test_p4_fold_aggs_associative(spark, events, cut):
             _cube(spark, first)
             .unionByName(_cube(spark, second))
             .groupBy("epoch", "bucket", "f1", "f2", "depth")
-            .agg(*fold_aggs(4))
+            .agg(*fold_aggs())
         )
     assert _rows(merged) == whole
 

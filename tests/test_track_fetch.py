@@ -1071,6 +1071,34 @@ def test_series_anomaly_flat_baseline_large_level(spark):
     assert last2.is_anomaly is True
 
 
+def test_windowed_variance_readers_hold_their_documented_bound(spark):
+    """Both trailing-window variance readers promise |total| <= 8.7e4 at
+    4dp. At 70 000 the centering cross term 2*m*S1 of a 12-slot window,
+    and the window sum S2 of a 24-slot one, pass 2^63: under ANSI they
+    raised ARITHMETIC_OVERFLOW / CAST_OVERFLOW while they ran in long."""
+    from kadiyadb_spark.query import series_anomaly, series_stddev_over_time
+
+    def frame(vals):
+        return spark.createDataFrame(
+            [("m", i, v) for i, v in enumerate(vals)],
+            "f1 string, bucket long, total double",
+        )
+
+    flat = frame([70000.0] * 25)
+    for w in (12, 24):
+        an = {r.bucket: r for r in series_anomaly(flat, ["f1"], window_slots=w).collect()}
+        assert an[w].baseline_mean == 70000.0 and an[w].zscore is None
+        sd = {r.bucket: r for r in series_stddev_over_time(flat, ["f1"], window_slots=w).collect()}
+        assert (sd[w - 1].win_mean, sd[w - 1].win_stdvar, sd[w - 1].win_stddev) == (70000.0, 0.0, 0.0)
+
+    # six values at 70000 and six at 70001: population variance 1/4
+    alt = frame([70000.0 + (i % 2) for i in range(12)] + [87000.0])
+    sd = {r.bucket: r for r in series_stddev_over_time(alt, ["f1"], window_slots=12).collect()}
+    assert (sd[11].win_mean, sd[11].win_stdvar, sd[11].win_stddev) == (70000.5, 0.25, 0.5)
+    an = {r.bucket: r for r in series_anomaly(alt, ["f1"], window_slots=12).collect()}
+    assert an[12].baseline_mean == 70000.5 and an[12].is_anomaly is True
+
+
 def test_series_burn_rate_multiwindow(spark):
     """Hand-computed multi-window burn: errors 1/10 of requests with a
     burst — the long window keeps a blip from firing; both windows over
@@ -1353,7 +1381,7 @@ def test_poison_band_closed_and_high_cnt_refolds(spark):
     merged = (
         cube_hi.unionByName(cube_hi.limit(0))
         .groupBy("epoch", "bucket", "f1", "depth")
-        .agg(*fold_aggs(4))
+        .agg(*fold_aggs())
         .collect()
     )
     assert [(r.total, r.cnt) for r in merged] == [(12.0, 3.0e12)]
@@ -1559,13 +1587,13 @@ def test_scaled_fold_overflow_guard(spark):
         f"{S.DEPTH} int, {S.TOTAL} double, {S.CNT} double",
     )
     refold = seg.groupBy(S.EPOCH, S.BUCKET, "f1", "f2", "f3", S.DEPTH).agg(
-        *fold_aggs(4)
+        *fold_aggs()
     )
     with pytest.raises(Exception, match="fold overflow at value_dp=4"):
         refold.collect()
     ok = seg.withColumn(S.TOTAL, F.lit(4.5e11)).groupBy(
         S.EPOCH, S.BUCKET, "f1", "f2", "f3", S.DEPTH
-    ).agg(*fold_aggs(4))
+    ).agg(*fold_aggs())
     assert ok.collect()[0][S.TOTAL] == 9.0e11
 
 
